@@ -205,9 +205,8 @@ object Microbench {
     time("q32 sheet + memos") {
       val names = Seq("Viability_Hemocytometer_Count",
         "Live_Cells_Hemocytometer_Count", "Total_Cells_Hemocytometer_Count")
-      CellType.memoColumns(names).foldLeft(q32sheet) {
-        case (df, (n, e)) => df.withColumn(n, e)
-      }.select(max(length(col("__num_Viability_Hemocytometer_Count").cast("string"))))
+      CellType.memoColumns(q32sheet, names)
+        .select(max(length(col("__num_Viability_Hemocytometer_Count").cast("string"))))
     }
     time("q32 evaluate (no dedup/sort)") {
       RuleEvaluator.evaluate("biospecimen.csv", q32sheet,
@@ -221,20 +220,18 @@ object Microbench {
     time("q32 memos + simple predicate") {
       val names = Seq("Viability_Hemocytometer_Count",
         "Live_Cells_Hemocytometer_Count", "Total_Cells_Hemocytometer_Count")
-      CellType.memoColumns(names).foldLeft(q32sheet) {
-        case (df, (n, e)) => df.withColumn(n, e)
-      }.filter(col("__num_Live_Cells_Hemocytometer_Count") >
-        col("__num_Total_Cells_Hemocytometer_Count"))
+      CellType.memoColumns(q32sheet, names)
+        .filter(col("__num_Live_Cells_Hemocytometer_Count") >
+          col("__num_Total_Cells_Hemocytometer_Count"))
     }
     // memo + bround predicate, no render/explode
     time("q32 memos + bround predicate") {
       val names = Seq("Viability_Hemocytometer_Count",
         "Live_Cells_Hemocytometer_Count", "Total_Cells_Hemocytometer_Count")
-      CellType.memoColumns(names).foldLeft(q32sheet) {
-        case (df, (n, e)) => df.withColumn(n, e)
-      }.filter(bround(col("__num_Live_Cells_Hemocytometer_Count") /
-        col("__num_Total_Cells_Hemocytometer_Count") * 100, 1) =!=
-        col("__num_Viability_Hemocytometer_Count"))
+      CellType.memoColumns(q32sheet, names)
+        .filter(bround(col("__num_Live_Cells_Hemocytometer_Count") /
+          col("__num_Total_Cells_Hemocytometer_Count") * 100, 1) =!=
+          col("__num_Viability_Hemocytometer_Count"))
     }
     time("q27 without final orderBy") {
       import graft.rules.{Checks, RuleEvaluator, NoGate}
@@ -269,9 +266,8 @@ object Microbench {
       col("o_orderkey").cast("long").as("Row_Index"))
     time("q24 sheet only (date_format)") { q24sheet }
     time("q24 sheet + memos") {
-      CellType.memoColumns(Seq("Date_of_Visit")).foldLeft(q24sheet) {
-        case (df, (n, e)) => df.withColumn(n, e)
-      }.select(max(length(col("__ts_Date_of_Visit").cast("string"))))
+      CellType.memoColumns(q24sheet, Seq("Date_of_Visit"))
+        .select(max(length(col("__ts_Date_of_Visit").cast("string"))))
     }
     time("q24 evaluate only") {
       RuleEvaluator.evaluate("orders.csv", q24sheet,
@@ -321,9 +317,8 @@ object Microbench {
       val fast = when(abs(y - floor(y) - 0.5) > 1e-9, floor(y + 0.5) / 10)
         .otherwise(bround(col("__num_Live_Cells_Hemocytometer_Count") /
           col("__num_Total_Cells_Hemocytometer_Count") * 100, 1))
-      CellType.memoColumns(names).foldLeft(q32sheet) {
-        case (df, (n, e)) => df.withColumn(n, e)
-      }.filter(fast =!= col("__num_Viability_Hemocytometer_Count"))
+      CellType.memoColumns(q32sheet, names)
+        .filter(fast =!= col("__num_Viability_Hemocytometer_Count"))
     }
 
     // ---- q102 vocabulary join: broadcast vs shuffle degrade path ----

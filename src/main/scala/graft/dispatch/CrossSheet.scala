@@ -180,7 +180,8 @@ object CrossSheet {
         val errIds = errors.filter(col("CSV_Sheet_Name") === s &&
           col("Column_Name") === checkField && col("Row_Index") >= 0)
           .select(col("Column_Value").as("id"))
-        df.select(graft.types.CellType.render(col(checkField)).as("id"))
+        graft.types.CellType.memoColumns(df.select(col(checkField)), Seq(checkField))
+          .select(graft.types.CellType.renderM(checkField).as("id"))
           .join(errIds, Seq("id"), "left_anti")
       }
     }

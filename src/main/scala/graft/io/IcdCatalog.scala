@@ -71,23 +71,6 @@ object IcdCatalog {
   def existsFn(spark: SparkSession): Column => Column =
     existsFn(spark, defaultCodes)
 
-  /** Session-free membership Column fn over the bundled catalog.
-    *
-    * Deprecated because the udf closure captures the 94k-code set, so EVERY
-    * stage that references the column re-ships it inside its task binary;
-    * [[existsFn]] ships the set once as an explicit broadcast shared across
-    * stages. A session is always at hand in this engine (`Column`s are only
-    * built inside `(SparkSession, dir) => DataFrame` queries), so there is
-    * no legitimate caller; kept only for source compatibility.
-    */
-  @deprecated("captures the 94k-code catalog in every task binary; " +
-    "use existsFn(spark) — one explicit broadcast shared across stages", "r5")
-  lazy val existsColumn: Column => Column = {
-    val codes = defaultCodes
-    val f = udf((s: String) => s != null && codes.contains(s.replace(".", "")))
-    c => f(c)
-  }
-
   /** Small-catalog variant: pure `isin` expression, no UDF — preferable
     * when the catalog fits a literal list (tests, subsets).
     */

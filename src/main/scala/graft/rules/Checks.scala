@@ -326,7 +326,7 @@ object Checks {
 }
 
 /** Evaluates a sheet's compiled rules in a SINGLE scan: one candidate error
-  * struct per rule per row, array_compact + explode. At 100 TB this is the
+  * struct per rule per row, explode, nulls dropped. At 100 TB this is the
   * difference between O(rules) scans and one — all predicates ride the same
   * whole-stage-codegen pipeline, and parquet/CSV column pruning sees exactly
   * the union of referenced columns.
@@ -343,28 +343,31 @@ object RuleEvaluator {
     val usable = rules.filter(_.inputs.forall(present.contains))
     if (usable.isEmpty) return emptyErrors(sheet, seqBase)
     // project each referenced column's CellType parse ONCE ("parse once,
-    // branch many"): every rule column needs its memo for renderM, plus
-    // whatever the predicates declare. CollapseProject keeps these in their
-    // own stage because they're non-cheap and multiply referenced.
+    // branch many"): every rule column needs its memos for the rendered
+    // Column_Value, plus whatever the predicates declare. CollapseProject
+    // keeps these in their own projections because they're non-cheap and
+    // multiply referenced.
     val memoNames = (usable.map(_.column) ++ usable.flatMap(_.memoInputs)).distinct
     // spread BEFORE the memo projection: on a low-split source (single
     // parquet row-group) the parse cascade would otherwise run serially
     // inside the scan stage; no-op when the scan already parallelizes
     val spread = graft.operators.Spread.byKey(sheet, col("Row_Index"))
-    val prepared = CellType.memoColumns(memoNames).foldLeft(spread) {
-      case (df, (name, expr)) => df.withColumn(name, expr)
-    }
+    val prepared = CellType.memoColumns(spread, memoNames)
     def emitOf(r: CompiledRule): Column =
       if (r.keepBlank) r.predicate
       else r.predicate && col(r.column) =!= ""
+    // each struct carries the rule's cell as (raw, num, ts) column
+    // references; Row_Index rides beside the generator and Column_Value is
+    // rendered ONCE after the explode — one render tree per sheet, not one
+    // per rule
     def structOf(r: CompiledRule, i: Int): Column = struct(
       r.severity.as("Message_Type"),
-      lit(sheetName).as("CSV_Sheet_Name"),
-      col("Row_Index").cast("long").as("Row_Index"),
       lit(r.column).as("Column_Name"),
-      CellType.renderM(r.column).as("Column_Value"),
       r.message.as("Error_Message"),
-      lit(seqBase + i).as("rule_seq"))
+      lit(seqBase + i).as("rule_seq"),
+      col(r.column).as("raw"),
+      col(CellType.memoNum(r.column)).as("num"),
+      col(CellType.memoTs(r.column)).as("ts"))
     // NOTE: a filter+project form for single-rule sheets measured SLOWER:
     // PushDownPredicate substitutes the memo expressions into the pushed
     // filter, re-parsing every referenced cell. The generator form keeps
@@ -372,8 +375,21 @@ object RuleEvaluator {
     val structs = usable.zipWithIndex.map { case (r, i) =>
       when(emitOf(r), structOf(r, i))
     }
-    prepared.select(explode(array_compact(array(structs: _*))).as("e"))
-      .select("e.*")
+    // explode, THEN drop the non-firing (null) structs: array_compact is a
+    // lambda function with no generated code, and it would keep the
+    // Generate out of whole-stage codegen
+    prepared.select(col("Row_Index").cast("long").as("Row_Index"),
+        explode(array(structs: _*)).as("e"))
+      .filter(col("e").isNotNull)
+      .select(
+        col("e.Message_Type"),
+        lit(sheetName).as("CSV_Sheet_Name"),
+        col("Row_Index"),
+        col("e.Column_Name"),
+        CellType.renderMemo(col("e.raw"), col("e.num"), col("e.ts"))
+          .as("Column_Value"),
+        col("e.Error_Message"),
+        col("e.rule_seq"))
   }
 
   private def emptyErrors(sheet: DataFrame, seqBase: Long): DataFrame = {
@@ -402,9 +418,11 @@ object RuleEvaluator {
     // timestamps, strings as-is), and a post-aggregate predicate on the
     // rendered KEY would be pushed below the groupBy by Catalyst,
     // re-evaluating the whole render tree once more per input row
-    graft.operators.Spread.byKey(sheet, col(column))
+    val ids = graft.operators.Spread.byKey(sheet, col(column))
       .filter(col(column) =!= "")
-      .groupBy(CellType.render(col(column)).as("Column_Value"))
+      .select(col(column))
+    CellType.memoColumns(ids, Seq(column))
+      .groupBy(CellType.renderM(column).as("Column_Value"))
       .agg(count(lit(1)).as("n"))
       .filter(col("n") > 1)
       .select(

@@ -276,11 +276,9 @@ object ValidationOps {
         // spread BEFORE synthesizing: the cascade is the most expression-
         // heavy projection in the engine, and the raw orders scan may be
         // a handful of splits (sf1: 5 files -> ~7 tasks on 32 threads)
-        val sheet = CellType.memoColumns(Seq("v")).foldLeft(
+        val sheet = CellType.memoColumns(
           spreadRaw(Tables.orders(s, d), "o_orderkey")
-            .select(variant.as("variant"), v.as("v"))) {
-          case (df, (name, c)) => df.withColumn(name, c)
-        }
+            .select(variant.as("variant"), v.as("v")), Seq("v"))
         sheet.select(col("variant"),
             when(CellType.isNumberM("v"), "number")
               .when(CellType.isDateTimeM("v"), "datetime")

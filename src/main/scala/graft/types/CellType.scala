@@ -1,6 +1,6 @@
 package graft.types
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, DateType, DecimalType}
 
@@ -15,8 +15,12 @@ import org.apache.spark.sql.types.{DoubleType, DateType, DecimalType}
   * Spark columns are homogeneous, so we keep every ingested column as
   * StringType and express the trichotomy as predicates over the raw string.
   * Every cell classifies as exactly one of number / datetime / string
-  * (property-tested). All expressions are built-ins (`try_cast`,
-  * `try_to_timestamp`, `rlike`) — fully codegen'd, no UDFs.
+  * (property-tested). The parse is defined once, as built-ins (`try_cast`,
+  * `try_to_timestamp`, `rlike`) — no UDFs. Used directly (`asNumber`,
+  * `render`, …) it inlines that whole tree at every call site; the memos
+  * ([[memoColumns]]) wrap the same tree in a native expression,
+  * [[CellMemo]], that compiles it once per generated class and calls it
+  * per column.
   *
   * Pinned divergences from the reference (documented per SURVEY §1.2):
   *  - dateutil is far more permissive than any fixed format list; we pin the
@@ -201,24 +205,32 @@ object CellType {
   }
 
   // ---- memoized per-column variants ----------------------------------
-  // RuleEvaluator projects `__num_<col>` / `__ts_<col>` ONCE per sheet scan
-  // and every compiled rule branches on those — one parse per cell however
+  // Callers project `__num_<col>` / `__ts_<col>` ONCE per sheet scan and
+  // every compiled rule branches on those — one parse per cell however
   // many rules reference the column ("parse once, branch many").
 
   def memoNum(name: String): String = s"__num_$name"
   def memoTs(name: String): String = s"__ts_$name"
 
-  /** The memo projections for a set of referenced columns. The ts memo is
-    * guarded on the number memo being null: the trichotomy is number →
-    * date → string, so a cell that parsed as a number never consults the
-    * cascade — skipping its shape-regexes entirely on numeric columns.
-    * (memoNum is projected first, so memoTs can reference it.)
+  /** `df` with the memos of `names` appended, in two projections: every
+    * number memo first, then every timestamp memo. The ts memo takes the
+    * number memo as an input and is null wherever it is non-null: the
+    * trichotomy is number → date → string, so a cell that parsed as a
+    * number never consults the cascade. Both are [[CellMemo]] calls of
+    * one generated function per parse (see [[CellTypeExpr]]), so a wide
+    * sheet compiles the cascade once, not once per column.
     */
-  def memoColumns(names: Seq[String]): Seq[(String, Column)] =
-    names.distinct.flatMap { n =>
-      Seq(memoNum(n) -> asNumber(col(n)),
-        memoTs(n) -> when(col(memoNum(n)).isNull, asTimestampRaw(col(n))))
+  def memoColumns(df: DataFrame, names: Seq[String]): DataFrame = {
+    val ns = names.distinct
+    if (ns.isEmpty) df
+    else {
+      CellTypeExpr.register(df.sparkSession)
+      df.select(col("*") +: ns.map(n =>
+          CellTypeExpr.cellNumber(col(n)).as(memoNum(n))): _*)
+        .select(col("*") +: ns.map(n =>
+          CellTypeExpr.cellTimestamp(col(n), col(memoNum(n))).as(memoTs(n))): _*)
     }
+  }
 
   def isNumberM(name: String): Column = col(memoNum(name)).isNotNull
   def asNumberM(name: String): Column = col(memoNum(name))
@@ -229,12 +241,15 @@ object CellType {
   def isStringM(name: String): Column =
     col(memoNum(name)).isNull && col(memoTs(name)).isNull
 
-  /** Memo-backed render (same semantics as [[render]]). */
+  /** Memo-backed render of column `name` (same semantics as [[render]]). */
   def renderM(name: String): Column =
-    when(col(memoNum(name)).isNotNull, pyFloat(col(memoNum(name))))
-      .when(col(memoTs(name)).isNotNull,
-        date_format(col(memoTs(name)), "yyyy-MM-dd HH:mm:ss"))
-      .otherwise(col(name))
+    renderMemo(col(name), col(memoNum(name)), col(memoTs(name)))
+
+  /** [[render]] from a cell's raw string and its two memos. */
+  def renderMemo(raw: Column, num: Column, ts: Column): Column =
+    when(num.isNotNull, pyFloat(num))
+      .when(ts.isNotNull, date_format(ts, "yyyy-MM-dd HH:mm:ss"))
+      .otherwise(raw)
 
   /** isinstance(x, datetime.datetime) after convert_data_type: the cell is
     * not a number and parses under the cascade.
