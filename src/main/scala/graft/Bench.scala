@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line (driver contract). Session is tuned for the
@@ -261,23 +260,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", EngineConf.MaxPartitionBytes)
-      // q118's recursion guard scales with anchor-rows x depth (sf10 hit
-      // the 1M default); raised here, not inside the query fn, so it
-      // never leaks mid-session state (level limit stays default 100)
-      .config("spark.sql.cteRecursionRowLimit", EngineConf.CteRecursionRowLimit)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineConf.session("graft-bench")
+    // the sweep record's core-count stamp: the session's local[N] width
+    val cpus = spark.sparkContext.defaultParallelism.toString
     // absorb one-time session/codegen warmup outside the timed region
     spark.range(1000).selectExpr("sum(id)").collect()
     SparkEntry.entry(spark).count()

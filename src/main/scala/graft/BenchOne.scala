@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time ONE registered query (or a comma-separated few) with
   * Bench's session confs and warmup — the floor-measurement path for a
   * freshly added qNNN without paying a full-registry sweep. Prints one
@@ -19,20 +17,7 @@ object BenchOne {
     val samples = args.lift(1).map(_.toInt).getOrElse(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-one")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", EngineConf.MaxPartitionBytes)
-      .config("spark.sql.cteRecursionRowLimit", EngineConf.CteRecursionRowLimit)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineConf.session("graft-bench-one")
     spark.range(1000).selectExpr("sum(id)").collect()
     SparkEntry.entry(spark).count()
     names.foreach { name =>

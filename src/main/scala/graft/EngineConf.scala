@@ -1,8 +1,12 @@
 package graft
 
-/** Session conf values every engine entry point must agree on. Hoisted so
-  * the builders (Bench / Microbench / PlanDoc / ScaleUp / Verify / test
-  * sessions) and the queries that document them cannot drift apart.
+import org.apache.spark.sql.SparkSession
+
+/** The engine's session profile. `session` is the one builder behind
+  * Bench, BenchOne, Verify and ScaleUp, so the configuration the oracle
+  * verifies is the configuration the bench times. The two conf values
+  * stay public for the builders that keep their own session shape
+  * (PlanDoc, the test session) and for external harnesses.
   */
 object EngineConf {
   /** q118's recursion guard scales with anchor-rows × depth (the sf10
@@ -30,4 +34,26 @@ object EngineConf {
     */
   val MaxPartitionBytes: String =
     sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "4m")
+
+  /** `local[$SPARK_GRAFT_CPUS]` (default 32), one shuffle partition per
+    * core, AQE with partition coalescing, 64 MB broadcast joins, UTC,
+    * the two values above, UI off and log level WARN.
+    */
+  def session(appName: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.files.maxPartitionBytes", MaxPartitionBytes)
+      .config("spark.sql.cteRecursionRowLimit", CteRecursionRowLimit)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

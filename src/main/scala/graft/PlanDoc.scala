@@ -24,6 +24,8 @@ object PlanDoc {
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("PLANS.md")
+    // not EngineConf.session: a fixed 4-wide doc session keeps PLANS.md
+    // from churning with the machine's core count
     val spark = SparkSession.builder()
       .master("local[4]")
       .appName("graft-plandoc")

@@ -26,6 +26,8 @@ import org.apache.spark.sql.functions._
 object SpotCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "out/sf10")
+    // not EngineConf.session: the two runs are deliberately different
+    // physical shapes (shuffle width, partitioning)
     def session(cpus: Int, shuffle: Int): SparkSession = {
       val s = SparkSession.builder()
         .master(s"local[$cpus]")

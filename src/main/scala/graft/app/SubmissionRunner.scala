@@ -96,7 +96,7 @@ object SubmissionRunner {
 
     val sheetErrors = perSheet.result()
     val unionedLazy = sheetErrors.reduceOption(_ unionByName _)
-      .getOrElse(emptyErrors(spark))
+      .getOrElse(ValidationError.empty(spark))
     // each reconciliation call .count()s a plan embedding the WHOLE
     // rule pipeline, and the returned result executes it once more —
     // materialize the (small) error set once instead of paying the
@@ -133,14 +133,4 @@ object SubmissionRunner {
       .count()
       .na.fill(0, Seq("Error", "Warning"))
       .orderBy("CSV_Sheet_Name")
-
-  private def emptyErrors(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        StructField("Message_Type", StringType), StructField("CSV_Sheet_Name", StringType),
-        StructField("Row_Index", LongType), StructField("Column_Name", StringType),
-        StructField("Column_Value", StringType), StructField("Error_Message", StringType),
-        StructField("rule_seq", LongType))))
-  }
 }

@@ -14,6 +14,8 @@ object ValidateMain {
   def main(args: Array[String]): Unit = {
     val Array(dir, outDir, rest @ _*) = args: @unchecked
     val cbcId = rest.headOption.map(_.toInt).getOrElse(14)
+    // not EngineConf.session: perfbench's submission workload copies this
+    // session, so it must stay the configuration production runs
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
       .appName("graft-validate")

@@ -1,5 +1,7 @@
 package graft.dispatch
 
+import graft.core.ValidationError
+import graft.rules.RuleEvaluator
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -74,7 +76,7 @@ object CrossSheet {
       when(p, errStruct("Cross_Participant_ID.csv", lit(-10L), key,
         col(key), lit(msg), seqBase + i))
     }
-    scoped.select(explode(array_compact(array(structs: _*))).as("e")).select("e.*")
+    RuleEvaluator.explodeFired(scoped, structs).select("e.*")
   }
 
   /** get_cross_sheet_Biospecimen_ID (FSO:368-377) + write_cross_bio_errors
@@ -138,7 +140,7 @@ object CrossSheet {
         Seq(missingFromBio, notPbmc, pbmcMissing)
       }
     }
-    scoped.select(explode(array_compact(array(structs: _*))).as("e")).select("e.*")
+    RuleEvaluator.explodeFired(scoped, structs).select("e.*")
   }
 
   private def errStruct(sheet: String, rowIndex: Column, colName: String,
@@ -165,7 +167,6 @@ object CrossSheet {
       errors: DataFrame,
       declaredCount: Long,
       seqBase: Long): DataFrame = {
-    import org.apache.spark.sql.types._
     val spark = errors.sparkSession
     // per-sheet (sheet ids ANTI-JOIN that sheet's errored values). The
     // sheet side is RENDERED through the cell typing before comparing:
@@ -191,17 +192,13 @@ object CrossSheet {
     val (colLabel, noun) =
       if (checkField == "Research_Participant_ID") ("submit_Participant_IDs", "Participat")
       else ("submit_Biospecimen_IDs", "Biospecimen")
-    val schema = StructType(Seq(
-      StructField("Message_Type", StringType), StructField("CSV_Sheet_Name", StringType),
-      StructField("Row_Index", LongType), StructField("Column_Name", StringType),
-      StructField("Column_Value", StringType), StructField("Error_Message", StringType),
-      StructField("rule_seq", LongType)))
     val rows =
       if (declaredCount != passCount)
         Seq(org.apache.spark.sql.Row("Error", "submission.csv", -5L, colLabel,
           declaredCount.toString,
           s"After validation only $passCount $noun IDS are valid", seqBase))
       else Seq.empty
-    spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
+    spark.createDataFrame(spark.sparkContext.parallelize(rows),
+      ValidationError.schema)
   }
 }

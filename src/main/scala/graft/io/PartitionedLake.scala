@@ -111,17 +111,6 @@ object PartitionedLake {
   private val ManifestDirName = "_manifest"
   private val StagingDirName = "_staging"
 
-  // dev-only phase tracer (SPARK_GRAFT_LAKE_TRACE=1): prints where a
-  // commit path spends its wall time — drives round-18 optimization;
-  // zero cost when unset (one env read at class init)
-  private val traceOn = sys.env.get("SPARK_GRAFT_LAKE_TRACE").contains("1")
-  @inline private def traced[A](name: String)(body: => A): A =
-    if (!traceOn) body
-    else {
-      val t0 = System.nanoTime()
-      try body
-      finally println(f"      [lake] $name%-38s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-    }
   // %09d pads for sortable names but is MINIMUM width: version 10^9
   // writes 10 digits, so the matcher accepts \d{9,} — a fixed {9} would
   // silently stop resolving past that version (split-brain to an older
@@ -1149,15 +1138,13 @@ object PartitionedLake {
     }
     val staging = new Path(new Path(path, StagingDirName),
       UUID.randomUUID().toString.take(8))
-    traced("stage: partitioned parquet write")(
-      checked.write.mode("overwrite").partitionBy(partitionCols: _*)
-        .parquet(staging.toString))
+    checked.write.mode("overwrite").partitionBy(partitionCols: _*)
+      .parquet(staging.toString)
     val conf = spark.sparkContext.hadoopConfiguration
-    val pairs = traced("stage: leaf-dir listing")(
-      leafPartitionDirs(fs, staging, partitionCols.size)
-        .flatMap { case (rel, dirPath) =>
-          dataFiles(fs, dirPath).map(rel -> _)
-        })
+    val pairs = leafPartitionDirs(fs, staging, partitionCols.size)
+      .flatMap { case (rel, dirPath) =>
+        dataFiles(fs, dirPath).map(rel -> _)
+      }
     // footer harvesting (row counts + optional min/max bounds) is one
     // independent metadata read per staged file — run them on a bounded
     // pool, not serially on the driver thread: a many-partition commit
@@ -1179,9 +1166,8 @@ object PartitionedLake {
             }
           }
         }.asJava
-      traced("stage: footer harvest")(
-        pool.invokeAll(tasks).asScala.map(_.get()).toSeq
-          .groupBy(_._1).map { case (rel, es) => rel -> es.map(_._2) })
+      pool.invokeAll(tasks).asScala.map(_.get()).toSeq
+        .groupBy(_._1).map { case (rel, es) => rel -> es.map(_._2) }
     } finally pool.shutdown()
     (staging, dirs)
   }
@@ -4589,12 +4575,10 @@ object PartitionedLake {
     // (partition, key), so its tuple set equals the raw ops') — reads
     // the checkpoint.
     val pAliases = partitionCols.indices.map(i => s"__cdc_p$i")
-    val latest = traced("mor: latest checkpoint")(
-      latestOps(ops, partitionCols).localCheckpoint())
-    val parts = traced("mor: parts distinct collect")(
-      latest.select(pAliases.zip(partitionCols).map { case (a, c) =>
-          col(a).cast(m.schema(c).dataType) }: _*)
-        .distinct().collect().map(_.toSeq))
+    val latest = latestOps(ops, partitionCols).localCheckpoint()
+    val parts = latest.select(pAliases.zip(partitionCols).map {
+        case (a, c) => col(a).cast(m.schema(c).dataType) }: _*)
+      .distinct().collect().map(_.toSeq)
     if (parts.isEmpty) return
     val touched = partitionFilter(partitionCols, parts)
     // current merged view of the touched partitions: base ⊕ old delta —
@@ -4634,11 +4618,11 @@ object PartitionedLake {
     val candIds = oldIds.union(opIds)
       .distinct().select(ident.map(c =>
         col(c).as(s"__cand_$c")).toIndexedSeq: _*)
-    val pre = traced("mor: pre pass (checkpoint)")(current
+    val pre = current
       .join(broadcast(candIds),
         ident.map(c => col(c) <=> col(s"__cand_$c")).reduce(_ && _),
         "left_semi")
-      .localCheckpoint())
+      .localCheckpoint()
     // which ops APPLIED: identity existed in the current view (renamed
     // columns sidestep Spark's self-join ambiguity check)
     val opIdsR = opIds.select(ident.map(c =>
@@ -4672,17 +4656,15 @@ object PartitionedLake {
     val newLog = uRows
       .select((m.schema.fieldNames :+ MorOpCol).map(col).toIndexedSeq: _*)
       .unionByName(dRows)
-    val (logStaging, stagedLog) = traced("mor: stage newLog")(
-      stage(spark, fs, path, newLog, partitionCols, Nil))
+    val (logStaging, stagedLog) =
+      stage(spark, fs, path, newLog, partitionCols, Nil)
     val autoCompact = morLogGovern(fs, path, logStaging, stagedLog)
-    val replacedDirs = traced("mor: sparkDirsFor probe")(
-      sparkDirsFor(spark, partSchema, parts))
-    traced("mor: commitStaged")(
-      commitStaged(fs, path, logStaging, Map.empty, Set.empty,
-        m.schema, existing, batchId,
-        stagedDeltas = stagedLog, deltaStaging = Some(logStaging),
-        morKey = Some(keyCol), replacedDeltas = Some(replacedDirs),
-        writerId = writerId))
+    val replacedDirs = sparkDirsFor(spark, partSchema, parts)
+    commitStaged(fs, path, logStaging, Map.empty, Set.empty,
+      m.schema, existing, batchId,
+      stagedDeltas = stagedLog, deltaStaging = Some(logStaging),
+      morKey = Some(keyCol), replacedDeltas = Some(replacedDirs),
+      writerId = writerId)
     if (autoCompact.nonEmpty)
       compactRestricted(spark, path, Nil, Some(autoCompact))
   }
@@ -4755,15 +4737,13 @@ object PartitionedLake {
       val partSchema = StructType(
         partitionCols.map(c => pinned.schema(c)).toArray)
       val parts: Array[Seq[Any]] = partsHint.getOrElse(
-        traced("rld: parts collect")(
-          ops.select(partitionCols.map(c =>
-              col(c).cast(pinned.schema(c).dataType)): _*)
-            .distinct().collect().map(_.toSeq)))
+        ops.select(partitionCols.map(c =>
+            col(c).cast(pinned.schema(c).dataType)): _*)
+          .distinct().collect().map(_.toSeq))
       if (parts.isEmpty) return
       val suspects = suspectsHint.getOrElse(
-        traced("rld: suspects probe")(
-          opsW.filter(col("__u_cnt") > 0 && col("__d_cnt") === 0)
-            .limit(1).count()))
+        opsW.filter(col("__u_cnt") > 0 && col("__d_cnt") === 0)
+          .limit(1).count())
       // split updates re-unify: 'U' wins over 'D' for one identity
       // (window count == 0 ⇔ the old anti-join kept the tombstone; the
       // window's null-key grouping matches the old <=> join), and the
@@ -4815,12 +4795,11 @@ object PartitionedLake {
         val suspR = opsW
           .filter(col(MorOpCol) === "U" && col("__d_cnt") === 0)
           .select(ident.map(c => col(c).as(s"__s_$c")).toIndexedSeq: _*)
-        val collided = traced("rld: collision probe")(
-          frameFor(spark, path, pinned).filter(touched)
-            .select(ident.map(col).toIndexedSeq: _*)
-            .join(broadcast(suspR), ident.map(c =>
-              col(c) <=> col(s"__s_$c")).reduce(_ && _), "left_semi")
-            .take(3))
+        val collided = frameFor(spark, path, pinned).filter(touched)
+          .select(ident.map(col).toIndexedSeq: _*)
+          .join(broadcast(suspR), ident.map(c =>
+            col(c) <=> col(s"__s_$c")).reduce(_ && _), "left_semi")
+          .take(3)
         require(collided.isEmpty,
           "row-level delta write would UPSERT over existing rows the " +
             "statement did not touch — post-image identities " +
@@ -4844,8 +4823,7 @@ object PartitionedLake {
       // — nothing has committed at that point; unwrap Spark's job-abort
       // layers so the top-level message stays the directed one
       val (logStaging, stagedLog) = try {
-        traced("rld: stage newLog")(
-          stage(spark, fs, path, newLog, partitionCols, Nil))
+        stage(spark, fs, path, newLog, partitionCols, Nil)
       } catch { case t: Throwable =>
         val dup = Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
           .map(x => Option(x.getMessage).getOrElse(""))
@@ -4854,8 +4832,7 @@ object PartitionedLake {
         throw t
       }
       val autoCompact = morLogGovern(fs, path, logStaging, stagedLog)
-      val replacedDeltas = traced("rld: sparkDirsFor probe")(
-        sparkDirsFor(spark, partSchema, parts))
+      val replacedDeltas = sparkDirsFor(spark, partSchema, parts)
       commitStaged(fs, path, logStaging, Map.empty, Set.empty,
         pinned.schema, Some(pinned), None,
         stagedDeltas = stagedLog, deltaStaging = Some(logStaging),

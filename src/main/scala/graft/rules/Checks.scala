@@ -341,7 +341,8 @@ object RuleEvaluator {
       seqBase: Long = 0L): DataFrame = {
     val present = sheet.columns.toSet
     val usable = rules.filter(_.inputs.forall(present.contains))
-    if (usable.isEmpty) return emptyErrors(sheet, seqBase)
+    if (usable.isEmpty)
+      return graft.core.ValidationError.empty(sheet.sparkSession)
     // project each referenced column's CellType parse ONCE ("parse once,
     // branch many"): every rule column needs its memos for the rendered
     // Column_Value, plus whatever the predicates declare. CollapseProject
@@ -375,12 +376,7 @@ object RuleEvaluator {
     val structs = usable.zipWithIndex.map { case (r, i) =>
       when(emitOf(r), structOf(r, i))
     }
-    // explode, THEN drop the non-firing (null) structs: array_compact is a
-    // lambda function with no generated code, and it would keep the
-    // Generate out of whole-stage codegen
-    prepared.select(col("Row_Index").cast("long").as("Row_Index"),
-        explode(array(structs: _*)).as("e"))
-      .filter(col("e").isNotNull)
+    explodeFired(prepared, structs, col("Row_Index").cast("long").as("Row_Index"))
       .select(
         col("e.Message_Type"),
         lit(sheetName).as("CSV_Sheet_Name"),
@@ -392,16 +388,15 @@ object RuleEvaluator {
         col("e.rule_seq"))
   }
 
-  private def emptyErrors(sheet: DataFrame, seqBase: Long): DataFrame = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("Message_Type", StringType), StructField("CSV_Sheet_Name", StringType),
-      StructField("Row_Index", LongType), StructField("Column_Name", StringType),
-      StructField("Column_Value", StringType), StructField("Error_Message", StringType),
-      StructField("rule_seq", LongType)))
-    sheet.sparkSession.createDataFrame(
-      sheet.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
+  /** One row `e` per non-null struct of `structs` (a rule or pattern that
+    * fired, `when(cond, struct)`), beside the `keep` columns. Explodes the
+    * plain array, THEN drops the nulls: `array_compact` is a lambda
+    * function with no generated code, and it would keep the Generate out
+    * of whole-stage codegen.
+    */
+  def explodeFired(df: DataFrame, structs: Seq[Column], keep: Column*): DataFrame =
+    df.select(keep :+ explode(array(structs: _*)).as("e"): _*)
+      .filter(col("e").isNotNull)
 
   /** check_for_dup_ids (File_Submission_Object.py:181-188): value_counts on
     * the converted value, count > 1 => one error at Row_Index -3. BLANK

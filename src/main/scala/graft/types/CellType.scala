@@ -265,12 +265,6 @@ object CellType {
   /** The fall-through: neither number nor datetime (includes `''`). */
   def isString(c: Column): Column = !isNumber(c) && !isDateTime(c)
 
-  /** `x.is_integer()` on the converted float (value property, §1.2). */
-  def isWholeNumber(c: Column): Column = {
-    val n = asNumber(c)
-    n.isNotNull && n === floor(n)
-  }
-
   /** Python-`str()` rendering of a parsed double.
     *
     * A plain `cast("string")` inherits Java's `Double.toString`, which

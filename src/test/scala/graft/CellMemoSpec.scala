@@ -1,6 +1,6 @@
 package graft
 
-import graft.dispatch.{MergeTables, SheetCatalog}
+import graft.dispatch.{CrossSheet, MergeTables, SheetCatalog}
 import graft.io.SheetReader
 import graft.rules.RuleEvaluator
 import graft.types.CellType
@@ -278,6 +278,48 @@ class CellMemoSpec extends AnyFunSuite {
       }
       assert(stats.maxMethodCodeSize < 65535, stats)
       info(s"rule stage: $stats")
+    }
+  }
+
+  test("both cross-sheet presence matrices explode inside whole-stage codegen") {
+    withSession("spark.sql.codegen.fallback" -> "false") { s =>
+      def sheet(cols: String*)(rows: Seq[String]*) =
+        SheetReader.fromRows(s, cols, rows)
+      // every presence pattern fires at least once: participants split
+      // across prior/demo/bio, biospecimens with and without children
+      val sheets = Map(
+        "prior_clinical_test.csv" -> sheet("Research_Participant_ID",
+          "SARS_CoV_2_PCR_Test_Result")(Seq("14_000001", "Positive"),
+          Seq("14_000004", "Negative"), Seq("14_000005", "Positive")),
+        "demographic.csv" -> sheet("Research_Participant_ID", "Age")(
+          Seq("14_000002", "30"), Seq("14_000004", "41"), Seq("14_000006", "52")),
+        "biospecimen.csv" -> sheet("Research_Participant_ID", "Biospecimen_ID",
+          "Biospecimen_Type")(Seq("14_000003", "14_000003_001", "PBMC"),
+          Seq("14_000005", "14_000005_001", "Serum"),
+          Seq("14_000006", "14_000006_001", "PBMC")),
+        "confirmatory_clinical_test.csv" -> sheet("Research_Participant_ID",
+          "Assay_ID")(Seq("14_000001", "14_001")),
+        "aliquot.csv" -> sheet("Aliquot_ID", "Biospecimen_ID")(
+          Seq("14_000005_001_01", "14_000005_001"),
+          Seq("14_000007_001_01", "14_000007_001")),
+        "equipment.csv" -> sheet("Equipment_ID", "Biospecimen_ID")(
+          Seq("EQ1", "14_000005_001")),
+        "reagent.csv" -> sheet("Reagent_Name", "Biospecimen_ID")(
+          Seq("R1", "14_000008_001")),
+        "consumable.csv" -> sheet("Consumable_Name", "Biospecimen_ID")(
+          Seq("C1", "14_000006_001")))
+      val slices: String => Option[DataFrame] = MergeTables.slice(sheets, _)
+      val frames = Seq(
+        CrossSheet.crossSheetParticipant(CrossSheet.allPartIds(slices).get, 14, 0L),
+        CrossSheet.crossSheetBiospecimen(CrossSheet.allBioIds(slices).get, 14, 100L))
+      frames.foreach { errors =>
+        // collect() finalizes the adaptive plan (see the test above)
+        assert(errors.collect().nonEmpty)
+        val finalPlan = errors.queryExecution.executedPlan.treeString
+          .split("== Initial Plan ==").head
+        val generate = finalPlan.linesIterator.filter(_.contains("Generate explode")).toSeq
+        assert(generate.size == 1 && generate.head.contains("*("), finalPlan)
+      }
     }
   }
 }

@@ -144,6 +144,35 @@ class GoldenSubmissionSpec extends AnyFunSuite {
     } finally server.stop(0)
   }
 
+  test("S4: the gzip error sink writes .csv.gz parts that read back as the plain write") {
+    val dir = Files.createTempDirectory("graft-gzip").toString
+    writeFixtures(dir)
+    val sheets = SubmissionSource.load(spark, dir)
+    val meta = SubmissionSource.metadata(sheets("submission.csv")).get
+    val errors = SubmissionRunner.validate(spark, sheets,
+      SubmissionRunner.Config(cbcId = 14, asOf = LocalDate.of(2026, 8, 12),
+        declaredParticipants = meta.declaredParticipants)).errors
+    val plainDir = Files.createTempDirectory("graft-plain-out").toString
+    val gzipDir = Files.createTempDirectory("graft-gzip-out").toString
+    val plain = ErrorWriter.write(errors, plainDir)
+    val gzipped = ErrorWriter.write(errors, gzipDir, gzip = true)
+    assert(gzipped == plain)
+    assert(plain.map(_._1).toSet ==
+      Set("demographic_Errors.csv", "submission_Errors.csv"), plain)
+    def rows(path: String): Seq[String] =
+      spark.read.option("header", "true").csv(path).collect()
+        .map(_.mkString("|")).toSeq.sorted
+    plain.foreach { case (file, n) =>
+      val parts = Files.list(Paths.get(gzipDir, file)).toArray.toSeq
+        .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+        .filter(_.startsWith("part-"))
+      assert(parts.nonEmpty && parts.forall(_.endsWith(".csv.gz")), parts)
+      val back = rows(s"$gzipDir/$file")
+      assert(back.size == n, file)
+      assert(back == rows(s"$plainDir/$file"), file)
+    }
+  }
+
   test("full-family golden submission: gated rules, context merges, bio cross-sheet") {
     val dir = Files.createTempDirectory("graft-golden-full").toString
     def put(name: String, content: String): Unit =

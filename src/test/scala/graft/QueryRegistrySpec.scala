@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
+  // not EngineConf.session: the plan-audit specs assert this session's
+  // plan shapes (4 partitions, Spark's default broadcast threshold)
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
