@@ -77,4 +77,102 @@ class LakeMetaTablesSpec extends AnyFunSuite {
     assert(kinds.filter(_.getString(0) == "delta")
       .forall(r => r.isNullAt(1) && r.isNullAt(2)))
   }
+
+  test("catalog resolution grid: every suffix, with and without #branch=, across plain load, VERSION AS OF (number and tag), TIMESTAMP AS OF and tableExists") {
+    val lake = freshLake("grid")
+    // one file per partition directory, so file counts are exact
+    PartitionedLake.write(Seq((1L, "a", 1.0), (2L, "b", 2.0))
+      .toDF("k", "part", "bal"), lake, "part") // v1
+    PartitionedLake.tag(spark, lake, "rel", 1L)
+    PartitionedLake.append(Seq((3L, "c", 3.0)).toDF("k", "part", "bal"),
+      lake, Seq("part")) // v2
+    PartitionedLake.addCheckConstraint(spark, lake, "pos", "bal > 0") // v3
+    PartitionedLake.createBranch(spark, lake, "wip",
+      fromVersion = Some(1L)) // wip v1 = main v1
+    spark.conf.set(PartitionedLake.BranchKey, "wip")
+    try PartitionedLake.append(Seq((4L, "d", 4.0)).toDF("k", "part", "bal"),
+      lake, Seq("part")) // wip v2
+    finally spark.conf.unset(PartitionedLake.BranchKey)
+    useCatalog()
+
+    type Expect = Either[String, (Seq[String], Long)]
+    def rows(cols: Seq[String], n: Long): Expect = Right((cols, n))
+    def refuse(substring: String): Expect = Left(substring)
+    def of(s: org.apache.spark.sql.types.StructType) = s.fieldNames.toSeq
+    val data = Seq("k", "part", "bal")
+    val feed = data :+ "_change_type"
+    val history = of(PartitionedLake.historySchema)
+    val tags = of(PartitionedLake.tagsSchema)
+    val branches = of(PartitionedLake.branchesSchema)
+    val files = of(PartitionedLake.filesSchema)
+    val parts = of(PartitionedLake.partitionsSchema)
+    val checks = of(PartitionedLake.constraintsSchema)
+    val changes = "#changes?from=1&to=2&keyCols=part,k"
+    val mainLine = refuse("main-line refs")
+    val moving = refuse("moving staged line")
+
+    // (suffix, pinned to #branch=wip,
+    //  plain, VERSION AS OF 1, VERSION AS OF 'rel', TIMESTAMP AS OF)
+    val grid: Seq[(String, Boolean, Expect, Expect, Expect, Expect)] = Seq(
+      ("", false, rows(data, 3), rows(data, 2), rows(data, 2), rows(data, 3)),
+      ("", true, rows(data, 3), rows(data, 2), mainLine, moving),
+      ("#history", false, rows(history, 3), refuse("#history"),
+        refuse("#history"), refuse("#history")),
+      ("#history", true, refuse("#history"), refuse("#history"),
+        refuse("#history"), moving),
+      ("#tags", false, rows(tags, 1), refuse("#tags"), refuse("#tags"),
+        refuse("#tags")),
+      ("#tags", true, refuse("#tags"), refuse("#tags"), refuse("#tags"),
+        moving),
+      ("#branches", false, rows(branches, 1), refuse("#branches"),
+        refuse("#branches"), refuse("#branches")),
+      ("#branches", true, refuse("#branches"), refuse("#branches"),
+        refuse("#branches"), moving),
+      ("#files", false, rows(files, 3), rows(files, 2), rows(files, 2),
+        rows(files, 3)),
+      ("#files", true, rows(files, 3), rows(files, 2), mainLine, moving),
+      ("#partitions", false, rows(parts, 3), rows(parts, 2), rows(parts, 2),
+        rows(parts, 3)),
+      ("#partitions", true, rows(parts, 3), rows(parts, 2), mainLine,
+        moving),
+      ("#constraints", false, rows(checks, 1), rows(checks, 0),
+        rows(checks, 0), rows(checks, 1)),
+      ("#constraints", true, rows(checks, 0), rows(checks, 0), mainLine,
+        moving),
+      (changes, false, rows(feed, 1), refuse("#changes"),
+        refuse("#changes"), refuse("#changes")),
+      (changes, true, rows(feed, 1), refuse("#changes"),
+        refuse("#changes"), refuse("#changes")))
+
+    def chain(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .map(x => String.valueOf(x.getMessage)).mkString(" | ")
+    val catalog = new LakeCatalog
+    catalog.initialize("graft_lake",
+      org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+    def ident(p: String) =
+      org.apache.spark.sql.connector.catalog.Identifier.of(Array.empty, p)
+    val missing = freshLake("grid-missing")
+    grid.foreach { case (suffix, pinned, plain, v1, vTag, ts) =>
+      val id = lake + (if (pinned) "#branch=wip" else "") + suffix
+      Seq("" -> plain, " VERSION AS OF 1" -> v1,
+        " VERSION AS OF 'rel'" -> vTag,
+        " TIMESTAMP AS OF '2100-01-01 00:00:00'" -> ts).foreach {
+        case (at, expect) =>
+          val q = s"SELECT * FROM graft_lake.`$id`$at"
+          expect match {
+            case Right((cols, n)) =>
+              val df = spark.sql(q)
+              assert(df.columns.toSeq === cols, q)
+              assert(df.collect().length.toLong === n, q)
+            case Left(substring) =>
+              val e = intercept[Exception](spark.sql(q).collect())
+              assert(chain(e).contains(substring), s"$q: ${chain(e)}")
+          }
+      }
+      assert(catalog.tableExists(ident(id)), id)
+      val absent = missing + (if (pinned) "#branch=wip" else "") + suffix
+      assert(!catalog.tableExists(ident(absent)), absent)
+    }
+  }
 }
