@@ -1,7 +1,7 @@
 package graft.io
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SQLContext}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession, SQLContext}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
@@ -87,39 +87,22 @@ class LakeBatchProvider extends RelationProvider
           s"or 'commit' (per-version changes tagged _commit_version), " +
           s"got '$other'")
       }
-      return new LakeBatchRelation(sqlContext,
+      return new LakeFrameRelation(sqlContext,
         PartitionedLake.changesBetweenOn(spark, path, from, to, keyCols,
           perCommit, branch))
     }
-    // numeric or a named tag — the same vocabulary as SQL VERSION AS OF
-    val version = parameters.get("versionAsOf").map { v =>
-      v.toLongOption
-        .orElse {
-          // tags are MAIN-LINE refs; a branch pin addresses only the
-          // branch's own numeric line (same rule as the DSv2 surface)
-          if (branchPin.isDefined) sys.error(
-            s"versionAsOf '$v' with a branch pin must be a numeric " +
-              "version of the branch's own line — tags are main-line " +
-              "refs")
-          PartitionedLake.tagVersion(spark, path, v)
-        }
-        .getOrElse(sys.error(
-          s"versionAsOf '$v' is neither a numeric snapshot version nor " +
-            s"a tag on $path (tags: ${PartitionedLake.tags(spark, path)
-              .map(_._1).mkString(", ")})"))
-    }
+    // the same vocabulary as SQL VERSION AS OF
+    val version = parameters.get("versionAsOf").map(
+      LakeIdent.resolveVersion(spark, path, _, branchPin, "versionAsOf"))
     // ONE manifest resolve feeds both the pinned frame and the size
     // statistic — resolving twice would pay the driver read again AND
     // open a race where the size describes a different snapshot than
     // the frame pinned (a racing small overwrite could then broadcast
     // the older large scan — the underestimate direction)
     val manifest = PartitionedLake.manifestAt(spark, path, version, branch)
-    val frame = manifest match {
-      case Some(m) => PartitionedLake.frameFor(spark, path, m)
-      case None => spark.read.parquet(path) // pre-protocol lake
-    }
-    val size = manifest.flatMap(PartitionedLake.metadataSizeBytes)
-    new LakeBatchRelation(sqlContext, frame, size)
+    val frame = LakeFrameRelation.snapshotFrame(spark, path, manifest)
+    new LakeFrameRelation(sqlContext, frame, frame.schema,
+      manifest.flatMap(PartitionedLake.metadataSizeBytes))
   }
 
   /** `df.write.format("graft-lake")` — the registered batch WRITE:
@@ -240,12 +223,25 @@ class LakeBatchProvider extends RelationProvider
   }
 }
 
-private[io] class LakeBatchRelation(override val sqlContext: SQLContext,
-    frame: DataFrame, sizeHint: Option[Long] = None)
-    extends BaseRelation with PrunedFilteredScan
+/** The ONE relation over a delegated DataFrame plan — the v1
+  * `graft-lake` read, the DSv2 fallback scan ([[LakeV1FallbackScan]])
+  * and every metadata table ([[GraftLakeMetaTable]]) hand the engine
+  * this relation around the plan they built, so no surface re-implements
+  * the read.
+  *
+  * `schema` is what the engine was promised: the V1Scan path checks it
+  * against the scan's `readSchema` by equality (nullability included),
+  * so the fallback passes its pruned `required` schema; every other
+  * caller passes the frame's own.
+  */
+private[io] class LakeFrameRelation(override val sqlContext: SQLContext,
+    frame: DataFrame, override val schema: StructType,
+    sizeHint: Option[Long] = None)
+    extends BaseRelation with TableScan with PrunedFilteredScan
     with org.apache.spark.sql.execution.FileRelation {
 
-  override def schema: StructType = frame.schema
+  def this(sqlContext: SQLContext, frame: DataFrame) =
+    this(sqlContext, frame, frame.schema)
 
   /** Exact manifest byte size when known; the conservative "unknown =
     * defaultSizeInBytes (huge)" otherwise — never an underestimate.
@@ -258,22 +254,43 @@ private[io] class LakeBatchRelation(override val sqlContext: SQLContext,
 
   override def inputFiles: Array[String] = frame.inputFiles
 
-  /** Pushed filters reach the inner plan through the shared
-    * [[LakeFilters]] translator (one translator across the v1 and DSv2
-    * surfaces) — partition predicates here are what makes directory
-    * pruning reach the manifest-scoped scan. Untranslatable shapes are
-    * simply not pushed; the engine re-evaluates every filter on top.
+  /** The V1Scan form: the caller already pruned and filtered `frame`. */
+  override def buildScan(): RDD[Row] =
+    frame.queryExecution.toRdd.asInstanceOf[RDD[Row]]
+
+  /** The v1 relation form: pushed filters reach the inner plan through
+    * the shared [[LakeFilters]] translator — partition predicates here
+    * are what makes directory pruning reach the manifest-scoped scan.
     */
   override def buildScan(requiredColumns: Array[String],
-      filters: Array[Filter]): RDD[Row] = {
-    // filter BEFORE pruning: today requiredColumns always includes
-    // filter references (unhandledFilters defaults to "all", so the
-    // engine keeps them post-scan), but a future unhandledFilters
-    // override would silently break select-then-filter — same ordering
-    // fix as the DSv2 fallback
-    val filtered = filters.flatMap(LakeFilters.toColumn)
-      .reduceOption(_ && _).map(frame.filter).getOrElse(frame)
-    val pruned = filtered.select(requiredColumns.map(col).toIndexedSeq: _*)
-    pruned.queryExecution.toRdd.asInstanceOf[RDD[Row]]
-  }
+      filters: Array[Filter]): RDD[Row] =
+    LakeFrameRelation.pruned(frame, requiredColumns.toIndexedSeq, filters)
+      .queryExecution.toRdd.asInstanceOf[RDD[Row]]
+}
+
+private[io] object LakeFrameRelation {
+  /** The delegated read of one resolved snapshot: the API's
+    * manifest-scoped plan, or a plain parquet read of a pre-protocol
+    * (manifest-less) lake.
+    */
+  def snapshotFrame(spark: SparkSession, path: String,
+      manifest: Option[PartitionedLake.Manifest]): DataFrame =
+    manifest match {
+      case Some(m) => PartitionedLake.frameFor(spark, path, m)
+      case None => spark.read.parquet(path)
+    }
+
+  /** `frame` filtered by every translatable filter, then pruned to
+    * `columns`. Filter BEFORE pruning: a filter the DSv2 builder CLAIMED
+    * may reference a column pruned out of `columns` (the engine no
+    * longer needs it post-scan once the scan owns the filter), and
+    * select-then-filter would fail to resolve it. Untranslatable shapes
+    * are simply not pushed; the engine re-evaluates every filter it did
+    * not hand over.
+    */
+  def pruned(frame: DataFrame, columns: Seq[String],
+      filters: Array[Filter]): DataFrame =
+    filters.flatMap(LakeFilters.toColumn).reduceOption(_ && _)
+      .map(frame.filter).getOrElse(frame)
+      .select(columns.map(col): _*)
 }

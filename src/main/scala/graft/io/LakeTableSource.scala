@@ -3,8 +3,7 @@ package graft.io
 import java.util
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, SQLContext}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, SQLContext}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
 import org.apache.spark.sql.connector.catalog.{Identifier, SupportsRead, Table, TableCapability, TableCatalog, TableProvider}
@@ -160,7 +159,7 @@ private[io] class LakeDirValues(partCols: Seq[String], schema: StructType) {
 }
 
 /** The v1 `Filter` -> `Column` translation shared by the v1 relation
-  * ([[LakeBatchRelation]]) and the DSv2 scan ([[LakeV1FallbackScan]]) —
+  * and the DSv2 fallback scan (both through [[LakeFrameRelation]]) —
   * one translator, so the two surfaces can never disagree on which
   * predicates reach the delegated plan's partition pruning. Unknown
   * filter shapes return None and are evaluated by the engine on top
@@ -1144,34 +1143,13 @@ private[io] class LakeV1FallbackScan(path: String, version: Option[Long],
       manifest.flatMap(PartitionedLake.metadataRowCount))
 
   override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T = {
-    val spark = context.sparkSession
-    val frame = manifest match {
-      case Some(m) => PartitionedLake.frameFor(spark, path, m)
-      case None => spark.read.parquet(path) // pre-protocol lake
-    }
-    // filter BEFORE pruning: a CLAIMED filter's column may have been
-    // pruned out of `required` (the engine no longer needs it post-
-    // scan once we own the filter), and select-then-filter would fail
-    // to resolve it
-    val filtered = filters.flatMap(LakeFilters.toColumn)
-      .reduceOption(_ && _).map(frame.filter).getOrElse(frame)
-    val pruned = filtered.select(required.fieldNames.map(col).toIndexedSeq: _*)
-    new LakeV1ScanRelation(context, required, pruned).asInstanceOf[T]
-  }
+      context: SQLContext): T =
+    new LakeFrameRelation(context, LakeFrameRelation.pruned(
+      LakeFrameRelation.snapshotFrame(context.sparkSession, path, manifest),
+      required.fieldNames.toIndexedSeq, filters), required).asInstanceOf[T]
 
   override def description(): String =
     s"GraftLakeScan($path${version.map(v => s"@v$v").getOrElse("")})"
-}
-
-private[io] class LakeV1ScanRelation(override val sqlContext: SQLContext,
-    override val schema: StructType, frame: DataFrame)
-    extends BaseRelation with TableScan {
-  // the delegated plan already produces InternalRows (same reasoning as
-  // LakeBatchRelation)
-  override def needConversion: Boolean = false
-  override def buildScan(): RDD[Row] =
-    frame.queryExecution.toRdd.asInstanceOf[RDD[Row]]
 }
 
 /** `spark.read.format("graft-lake-v2")` — the registered DSv2 form.
@@ -1193,28 +1171,12 @@ class LakeTableProvider extends TableProvider with DataSourceRegister {
   private def pathOf(options: CaseInsensitiveStringMap): String =
     Option(options.get("path")).getOrElse(
       sys.error("graft-lake-v2 requires .option(\"path\", <lake root>)"))
-  // same vocabulary as SQL VERSION AS OF: a numeric version or a named
-  // tag ([[PartitionedLake.tag]]) — the DataFrame API must not lag the
-  // SQL surface on how a snapshot is addressed
+  // same vocabulary as SQL VERSION AS OF — the DataFrame API must not
+  // lag the SQL surface on how a snapshot is addressed
   private def versionOf(options: CaseInsensitiveStringMap,
       path: String): Option[Long] =
-    Option(options.get("versionAsOf")).map { v =>
-      v.toLongOption
-        .orElse {
-          // tags are MAIN-LINE refs; under a branch pin only numeric
-          // versions (of the branch's own line) address snapshots
-          if (branchOf(options).isDefined) sys.error(
-            s"versionAsOf '$v' with a branch pin must be a numeric " +
-              "version of the branch's own line — tags are main-line " +
-              "refs")
-          PartitionedLake.tagVersion(SparkSession.active, path, v)
-        }
-        .getOrElse(sys.error(
-          s"versionAsOf '$v' is neither a numeric snapshot version nor " +
-            s"a tag on $path (tags: ${PartitionedLake
-              .tags(SparkSession.active, path).map(_._1)
-              .mkString(", ")})"))
-    }
+    Option(options.get("versionAsOf")).map(LakeIdent.resolveVersion(
+      SparkSession.active, path, _, branchOf(options), "versionAsOf"))
 
   // per-read branch pin — `.option("branch", "etl_audit")` resolves
   // the read against the branch's manifest namespace at table
@@ -1276,246 +1238,152 @@ class LakeTableProvider extends TableProvider with DataSourceRegister {
   }
 }
 
-/** Iceberg-style metadata table: `SELECT * FROM
-  * lake.`/data/events#history`` returns [[PartitionedLake.history]]'s
-  * audit rows (one per retained snapshot) through plain SQL — no Scala
-  * API needed for the ops question "what changed, when, how big". The
-  * `#history` suffix rides the identifier because `#` cannot appear in
-  * a manifest-bearing lake path this catalog would otherwise resolve
-  * (and a SQL-extension DESCRIBE HISTORY verb would buy the same four
-  * words for a parser fork). Driver-computed, bounded by vacuum's
-  * retention window — same cost model as the Scala call.
-  */
-private[io] class GraftLakeHistoryTable(path: String,
-    listing: Seq[(Long, Long)]) extends Table with SupportsRead {
-  override def name(): String = s"$path#history"
-  override val schema: StructType = PartitionedLake.historySchema
-  override def capabilities(): util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = () => new V1Scan {
-    override def readSchema(): StructType = PartitionedLake.historySchema
-    override def toV1TableScan[T <: BaseRelation with TableScan](
-        context: SQLContext): T =
-      // the listing resolved at loadTable is REUSED here: one
-      // `_manifest/` listing per history query, not one for the
-      // existence probe and another for the scan
-      new LakeV1ScanRelation(context, PartitionedLake.historySchema,
-        PartitionedLake.historyFrom(context.sparkSession, path, listing))
-        .asInstanceOf[T]
-    override def description(): String = s"GraftLakeHistory($path)"
-  }
-}
-
-/** Tag listing metadata table: `SELECT * FROM lake.`/data/events#tags``
-  * — one row per named snapshot ref (`tag`, `version`, `pinned_at`),
-  * the SQL face of [[PartitionedLake.tags]]. Driver-computed from one
-  * `_tags/` listing; bounded by the tag count.
-  */
-private[io] class GraftLakeTagsTable(path: String)
-    extends Table with SupportsRead {
-  override def name(): String = s"$path#tags"
-  override val schema: StructType = PartitionedLake.tagsSchema
-  override def capabilities(): util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = () => new V1Scan {
-    override def readSchema(): StructType = PartitionedLake.tagsSchema
-    override def toV1TableScan[T <: BaseRelation with TableScan](
-        context: SQLContext): T =
-      new LakeV1ScanRelation(context, PartitionedLake.tagsSchema,
-        PartitionedLake.tagsFrame(context.sparkSession, path))
-        .asInstanceOf[T]
-    override def description(): String = s"GraftLakeTags($path)"
-  }
-}
-
-/** Branch listing metadata table:
-  * `SELECT * FROM lake.`/data/events#branches`` — one row per staged
-  * write-audit-publish branch (`branch`, `base_version`,
-  * `head_version`, `staged_commits`), the SQL face of
-  * [[PartitionedLake.branches]]. Driver-computed from the
-  * `_branches/` listing; bounded by the branch count.
-  */
-private[io] class GraftLakeBranchesTable(path: String)
-    extends Table with SupportsRead {
-  override def name(): String = s"$path#branches"
-  override val schema: StructType = PartitionedLake.branchesSchema
-  override def capabilities(): util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = () => new V1Scan {
-    override def readSchema(): StructType = PartitionedLake.branchesSchema
-    override def toV1TableScan[T <: BaseRelation with TableScan](
-        context: SQLContext): T =
-      new LakeV1ScanRelation(context, PartitionedLake.branchesSchema,
-        PartitionedLake.branchesFrame(context.sparkSession, path))
-        .asInstanceOf[T]
-    override def description(): String = s"GraftLakeBranches($path)"
-  }
-}
-
-/** Snapshot inventory metadata tables:
-  * `lake.`/data/events#files`` (one row per live data file / delta
-  * sidecar: partition, name, kind, bytes, rows, stats coverage) and
-  * `lake.`/data/events#partitions`` (one row per partition directory:
-  * counts, byte total, and the honest row count — null where metadata
-  * cannot know). Answered from the manifest alone — zero data-file
-  * reads, the capacity-planning and skew questions (`which partitions
-  * are oversized? which files predate stats harvesting? where are
-  * deltas accumulating?`) at metadata cost. Unlike `#history`/`#tags`,
-  * these DO time-travel (`VERSION AS OF <v or 'tag'>`): they describe
-  * a SNAPSHOT, so pinning one is meaningful.
-  */
-private[io] class GraftLakeFilesTable(path: String, version: Option[Long],
-    branch: Option[String] = None)
-    extends Table with SupportsRead {
-  branch.foreach(PartitionedLake.requireRefName("branch", _))
-  override def name(): String =
-    s"$path" + branch.map(b => s"#branch=$b").getOrElse("") +
-      "#files" + version.map(v => s"@v$v").getOrElse("")
-  override val schema: StructType = PartitionedLake.filesSchema
-  override def capabilities(): util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = () => new V1Scan {
-    override def readSchema(): StructType = PartitionedLake.filesSchema
-    override def toV1TableScan[T <: BaseRelation with TableScan](
-        context: SQLContext): T =
-      new LakeV1ScanRelation(context, PartitionedLake.filesSchema,
-        PartitionedLake.filesFrameMeta(context.sparkSession, path,
-          version, branch)).asInstanceOf[T]
-    override def description(): String = s"GraftLakeFiles($path)"
-  }
-}
-
-/** `lake.`/path#constraints`` — one row per ENFORCED CHECK constraint
-  * (name, predicate SQL). Snapshot-describing like `#files`: composes
-  * with `VERSION AS OF` (which snapshot declared what) and the
-  * `#branch=<name>` pin (what a staged branch would publish).
-  */
-private[io] class GraftLakeConstraintsTable(path: String,
-    version: Option[Long], branch: Option[String] = None)
-    extends Table with SupportsRead {
-  branch.foreach(PartitionedLake.requireRefName("branch", _))
-  override def name(): String =
-    s"$path" + branch.map(b => s"#branch=$b").getOrElse("") +
-      "#constraints" + version.map(v => s"@v$v").getOrElse("")
-  override val schema: StructType = PartitionedLake.constraintsSchema
-  override def capabilities(): util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = () => new V1Scan {
-    override def readSchema(): StructType =
-      PartitionedLake.constraintsSchema
-    override def toV1TableScan[T <: BaseRelation with TableScan](
-        context: SQLContext): T =
-      new LakeV1ScanRelation(context, PartitionedLake.constraintsSchema,
-        PartitionedLake.constraintsFrameMeta(context.sparkSession, path,
-          version, branch)).asInstanceOf[T]
-    override def description(): String = s"GraftLakeConstraints($path)"
-  }
-}
-
-private[io] class GraftLakePartitionsTable(path: String,
-    version: Option[Long], branch: Option[String] = None)
-    extends Table with SupportsRead {
-  branch.foreach(PartitionedLake.requireRefName("branch", _))
-  override def name(): String =
-    s"$path" + branch.map(b => s"#branch=$b").getOrElse("") +
-      "#partitions" + version.map(v => s"@v$v").getOrElse("")
-  override val schema: StructType = PartitionedLake.partitionsSchema
-  override def capabilities(): util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = () => new V1Scan {
-    override def readSchema(): StructType =
-      PartitionedLake.partitionsSchema
-    override def toV1TableScan[T <: BaseRelation with TableScan](
-        context: SQLContext): T =
-      new LakeV1ScanRelation(context, PartitionedLake.partitionsSchema,
-        PartitionedLake.partitionsFrameMeta(context.sparkSession, path,
-          version, branch)).asInstanceOf[T]
-    override def description(): String = s"GraftLakePartitions($path)"
-  }
-}
-
-/** Iceberg-style changes metadata table:
+/** A lake identifier, parsed ONCE — the one grammar every
+  * [[LakeCatalog]] entry point reads:
   *
   * {{{
-  * SELECT * FROM lake.`/data/events#changes?from=1&to=3&keyCols=day,k`
-  * SELECT * FROM lake.`/data/events#changes?from=1&to=3&keyCols=day,k&granularity=commit`
-  * SELECT * FROM lake.`/data/events#branch=fix#changes?from=1&to=2&keyCols=day,k`
+  * <path>[#branch=<name>][#history|#tags|#branches|#files|#partitions
+  *   |#constraints|#changes?from=<v>&to=<v>&keyCols=<c1,c2>[&granularity=net|commit]]
   * }}}
   *
-  * The third form composes the per-read branch pin: the feed diffs the
-  * BRANCH's own version line — "what exactly did this branch stage,
-  * row-level" answered in one query with no session-conf flips, the
-  * CDF complement of `#branch=<name>#files`. Endpoints are numeric
-  * only under a pin (tags are main-line refs).
+  * The suffixes ride the identifier because a SQL-extension verb
+  * (DESCRIBE HISTORY, ...) would buy the same words for a parser fork.
+  * Hadoop keeps `#` as a literal path character, so CREATE, ALTER and
+  * DROP refuse every suffix: a lake in a directory named `t#tags` would
+  * be unreachable, since every read of that identifier resolves as the
+  * `#tags` table of `t`.
   *
-  * [[PartitionedLake.changesBetween]] through plain SQL — the surface
-  * that lets a PySpark auditor diff snapshots without the v1 format's
-  * option syntax (`changesFrom`/`changesTo` on `graft-lake` remains for
-  * option-driven readers; this is the catalog-native spelling). The
-  * feed is resolved ONCE at load (same pinning as every other surface:
-  * the endpoints are explicit versions, immutable by construction);
-  * `granularity=commit` adds `_commit_version` exactly like the other
-  * two surfaces — one implementation underneath all three.
+  * What each form returns, and how it time-travels. `VERSION AS OF`
+  * takes a snapshot number or a main-line tag name
+  * ([[LakeIdent.resolveVersion]]); under a `#branch=` pin only a number
+  * of the branch's own line. `TIMESTAMP AS OF` resolves to the newest
+  * version published at or before it, and refuses under a pin (a branch
+  * is a moving staged line).
+  *
+  *  - no suffix: the lake's data ([[GraftLakeTable]]); time-travels.
+  *  - `#branch=<name>`: the per-read branch pin — the branch's own
+  *    snapshot line, reconciled with the ambient
+  *    [[PartitionedLake.BranchKey]] (a different ambient branch
+  *    refuses). Composes with no suffix, `#files`, `#partitions`,
+  *    `#constraints` and `#changes`.
+  *  - `#files`: one row per live data file and delta sidecar;
+  *    `#partitions`: one row per partition directory (counts, bytes,
+  *    and a row count that is null where metadata cannot know);
+  *    `#constraints`: one row per ENFORCED CHECK. These describe ONE
+  *    snapshot, answered from its manifest alone, so they time-travel
+  *    and take the branch pin.
+  *  - `#history`: one audit row per retained snapshot
+  *    ([[PartitionedLake.history]]); `#tags`: one row per named ref;
+  *    `#branches`: one row per staged branch. These list the WHOLE lake
+  *    as it is now: no time travel, no branch pin.
+  *  - `#changes?...`: the row-level change feed between two snapshots
+  *    ([[PartitionedLake.changesBetween]]); `from`/`to` use the
+  *    `VERSION AS OF` vocabulary (numbers only under a pin) and
+  *    `granularity=commit` adds `_commit_version`. Its endpoints are
+  *    already explicit versions: no time travel.
   */
-private[io] class GraftLakeChangesTable(path: String, from: Long, to: Long,
-    keyCols: Seq[String], perCommit: Boolean,
-    branchPin: Option[String] = None)
-    extends Table with SupportsRead {
-  // the per-read branch pin (`#branch=<name>#changes?...`): validated
-  // and reconciled with the ambient conf at LOAD (conflict refuses
-  // early, like GraftLakeTable); unpinned loads keep resolving the
-  // ambient conf at frame-force time, verbatim old behavior
-  branchPin.foreach(PartitionedLake.requireRefName("branch", _))
-  PartitionedLake.resolveReadBranch(branchPin)
-  private def effectiveBranch: Option[String] =
-    PartitionedLake.resolveReadBranch(branchPin)
-  // LAZY: analysis may re-resolve the identifier several times, and
-  // each loadTable constructs a fresh table — building the full diff
-  // plan per resolution would pay both endpoints' manifest reads each
-  // time. The scan forces it once.
-  private lazy val frame: DataFrame = PartitionedLake.changesBetweenOn(
-    SparkSession.active, path, from, to, keyCols, perCommit,
-    effectiveBranch)
-  override def name(): String =
-    s"$path" + branchPin.map(b => s"#branch=$b").getOrElse("") +
-      s"#changes?from=$from&to=$to" +
-      (if (perCommit) "&granularity=commit" else "")
-  /** The feed's schema from the TO manifest alone (one metadata read):
-    * the to-version's columns + `_change_type` (+ `_commit_version`
-    * per-commit) — exactly `changesBetween`'s column set (every diff
-    * aligns to the final schema; spec-pinned against the API's actual
-    * output so the two derivations cannot drift silently). Everything
-    * nullable: pre-images of since-added columns carry null.
-    */
-  override val schema: StructType = {
-    // schemaAt: version-existence check + manifest header only — NOT
-    // manifestAt, whose retired-directory walk lists the partition
-    // tree (a schema read opens no partition directories, so paying
-    // that walk per analysis re-resolution would be waste)
-    val base = PartitionedLake.schemaAt(SparkSession.active, path, to,
-      effectiveBranch)
-    StructType(base.fields.map(_.copy(nullable = true)) ++
-      (StructField("_change_type", org.apache.spark.sql.types.StringType)
-        +: (if (perCommit) Seq(StructField("_commit_version", LongType))
-            else Nil)))
+private[io] final case class LakeIdent(base: String, branch: Option[String],
+    meta: Option[LakeMeta])
+
+private[io] object LakeIdent {
+  private val BranchMarker = "#branch="
+
+  def parse(path: String): LakeIdent = {
+    val changesAt = path.indexOf(LakeMeta.ChangesMarker)
+    val (head, meta) =
+      if (changesAt >= 0) (path.take(changesAt), Some(LakeMeta.Changes(
+        path.drop(changesAt + LakeMeta.ChangesMarker.length))))
+      else LakeMeta.bySuffix.find(m => path.endsWith(m.suffix))
+        .map(m => (path.stripSuffix(m.suffix), Some(m)))
+        .getOrElse((path, None))
+    head.indexOf(BranchMarker) match {
+      case -1 => LakeIdent(head, None, meta)
+      case i => LakeIdent(head.take(i),
+        Some(head.drop(i + BranchMarker.length)), meta)
+    }
   }
+
+  /** The ONE snapshot-ref vocabulary of every read surface — SQL
+    * `VERSION AS OF`, the `#changes` endpoints, and the `versionAsOf`
+    * option of both formats: a number is a snapshot version, anything
+    * else a named tag ([[PartitionedLake.tag]]). Tags are MAIN-LINE
+    * refs, so under a branch pin only numbers (of the branch's own
+    * line) resolve. `what` names the surface in the error.
+    */
+  def resolveVersion(spark: SparkSession, path: String, ref: String,
+      branchPin: Option[String], what: String): Long =
+    ref.toLongOption.getOrElse {
+      branchPin.foreach(b => sys.error(
+        s"$what '$ref' under the branch pin '$b' must be a numeric " +
+          "version of the branch's own line — tags are main-line refs"))
+      PartitionedLake.tagVersion(spark, path, ref).getOrElse {
+        val tags = PartitionedLake.tags(spark, path)
+        // the few most recent versions: the full list of a huge
+        // retained window would be an unbounded render in an error path
+        val vs = PartitionedLake.snapshots(spark, path)
+        sys.error(s"$what '$ref' is neither a numeric snapshot version " +
+          s"nor a tag on $path; tags: " +
+          (if (tags.isEmpty) "(none)"
+           else tags.map { case (n, v) => s"$n->$v" }.mkString(", ")) +
+          "; versions: " +
+          (if (vs.size <= 10) vs.mkString(", ")
+           else s"... ${vs.takeRight(10).mkString(", ")} " +
+             s"(${vs.size} retained)"))
+      }
+    }
+}
+
+/** A metadata-table suffix ([[LakeIdent]]). `timeTravelRefusal` says
+  * why the table refuses time travel (None: it describes one snapshot
+  * and time-travels); `wholeLake` tables list every line of the lake,
+  * so a branch pin means nothing to them.
+  */
+private[io] sealed abstract class LakeMeta(val suffix: String,
+    val timeTravelRefusal: Option[String], val wholeLake: Boolean)
+
+private[io] object LakeMeta {
+  val ChangesMarker = "#changes"
+
+  case object History extends LakeMeta("#history", Some("the history " +
+    "table is derived from ALL retained snapshots and cannot be pinned " +
+    "to one"), wholeLake = true)
+  case object Tags extends LakeMeta("#tags",
+    Some("the tag listing is current-state metadata"), wholeLake = true)
+  case object Branches extends LakeMeta("#branches",
+    Some("the branch listing is current-state metadata"), wholeLake = true)
+  case object Files extends LakeMeta("#files", None, wholeLake = false)
+  case object Partitions extends LakeMeta("#partitions", None,
+    wholeLake = false)
+  case object Constraints extends LakeMeta("#constraints", None,
+    wholeLake = false)
+  /** `query` is everything after `#changes`, parsed at load. */
+  final case class Changes(query: String) extends LakeMeta(ChangesMarker,
+    Some("the feed's endpoints are already explicit versions (its " +
+      "from=/to= parameters)"), wholeLake = false)
+
+  val bySuffix: Seq[LakeMeta] =
+    Seq(History, Tags, Branches, Files, Partitions, Constraints)
+}
+
+/** The ONE metadata-table class: every `#suffix` table of
+  * [[LakeIdent]] is a name, a schema and a driver-built frame, scanned
+  * through [[LakeFrameRelation]]. The frame is LAZY: analysis may
+  * re-resolve an identifier several times and each `loadTable` builds a
+  * fresh table, so only the scan that is planned builds its frame, once.
+  */
+private[io] class GraftLakeMetaTable(override val name: String,
+    override val schema: StructType, label: String, frame: => DataFrame)
+    extends Table with SupportsRead {
+  private lazy val df = frame
   override def capabilities(): util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder = () => new V1Scan {
-    override def readSchema(): StructType = frame.schema
+    override def readSchema(): StructType = df.schema
     override def toV1TableScan[T <: BaseRelation with TableScan](
         context: SQLContext): T =
-      new LakeV1ScanRelation(context, frame.schema, frame)
-        .asInstanceOf[T]
-    override def description(): String =
-      s"GraftLakeChanges($path, v$from..v$to)"
+      new LakeFrameRelation(context, df).asInstanceOf[T]
+    override def description(): String = label
   }
 }
 
@@ -1529,13 +1397,16 @@ private[io] class GraftLakeChangesTable(path: String, from: Long, to: Long,
   *
   * The identifier IS the lake path (namespace parts, if any, join with
   * '/'), so any lake is queryable without a CREATE TABLE step — the
-  * manifest is the table metadata. `VERSION AS OF` resolves through
-  * the [[TableCatalog]] versioned-load hook, which is what upgrades
-  * time travel from a format option to real SQL syntax.
-  * `INSERT INTO` / `INSERT OVERWRITE` write through the commit
-  * protocol ([[LakeWriteBuilder]]); CREATE/DROP/RENAME have no meaning
-  * for path-addressed lakes and refuse with directions (documented
-  * loudly on each mutation method).
+  * manifest is the table metadata. A path may carry a branch pin and a
+  * metadata-table suffix; [[LakeIdent]] holds that grammar and the
+  * time-travel rules of each suffix, and every entry point below reads
+  * the one parsed value. `VERSION AS OF` resolves through the
+  * [[TableCatalog]] versioned-load hook, which is what upgrades time
+  * travel from a format option to real SQL syntax. `INSERT INTO` /
+  * `INSERT OVERWRITE` write through the commit protocol
+  * ([[LakeWriteBuilder]]); CREATE/ALTER/DROP address a lake path
+  * (never a suffix) and RENAME refuses with directions (documented on
+  * each mutation method).
   */
 class LakeCatalog extends TableCatalog
     with org.apache.spark.sql.connector.catalog.ProcedureCatalog {
@@ -1600,25 +1471,92 @@ class LakeCatalog extends TableCatalog
       (fs.exists(root) && fs.listStatus(root).nonEmpty)
   }
 
-  /** Parse `<base>#changes?from=F&to=T&keyCols=a,b[&granularity=...]`
-    * — every parameter validated loudly (an unknown or misspelled key
-    * must not silently change feed semantics; same rule as the batch
-    * format's granularity validation).
+  private def spark: SparkSession = SparkSession.active
+
+  /** Every read entry point: `asOf` is `VERSION AS OF` (Left) or
+    * `TIMESTAMP AS OF` in epoch micros (Right). Refusals that need no
+    * storage fire first; then ONE existence probe (for `#history` its
+    * listing doubles as the probe, reused by the scan); then the
+    * version resolves and the table is built.
     */
-  private def changesTable(ident: Identifier, path: String): Table = {
-    val idx = path.indexOf("#changes")
-    // `<base>#branch=<name>#changes?...` — the branch pin composes: the
-    // feed diffs the branch's OWN version line ("what exactly did this
-    // branch stage, row-level") with no session-conf flips
-    val (base, branchPin) = branchSuffix(path.substring(0, idx))
-      .map { case (b, n) => (b, Some(n)) }
-      .getOrElse((path.substring(0, idx), None))
-    val rest = path.substring(idx + "#changes".length)
-    if (!exists(base)) throw new NoSuchTableException(ident)
+  private def load(ident: Identifier,
+      asOf: Option[Either[String, Long]]): Table = {
+    val path = pathOf(ident)
+    val id = LakeIdent.parse(path)
+    val base = id.base
+    // which refusal wins: #changes (pinned or not), then TIMESTAMP
+    // under a pin, then the other suffixes
+    def refuseTimeTravel(m: LakeMeta): Unit =
+      m.timeTravelRefusal.foreach(why => sys.error(
+        s"VERSION AS OF / TIMESTAMP AS OF on a ${m.suffix} table is not " +
+          s"supported: $why — query it unversioned"))
+    if (asOf.isDefined) {
+      id.meta.collect { case c: LakeMeta.Changes => refuseTimeTravel(c) }
+      if (asOf.exists(_.isRight)) id.branch.foreach(b => sys.error(
+        s"TIMESTAMP AS OF on a #branch= table is not supported: branch " +
+          s"'$b' is a moving staged line — pin it by numeric VERSION " +
+          "AS OF instead"))
+      id.meta.foreach(refuseTimeTravel)
+    }
+    for (m <- id.meta if m.wholeLake; b <- id.branch) sys.error(
+      s"${m.suffix} does not take a branch pin (#branch=$b): it lists " +
+        s"the whole lake — query `$base${m.suffix}`")
+    val listing =
+      if (id.meta.contains(LakeMeta.History))
+        PartitionedLake.historyListing(spark, base)
+      else Nil
+    if (listing.isEmpty && !exists(base)) throw new NoSuchTableException(ident)
+    val version = asOf.map {
+      case Left(v) => LakeIdent.resolveVersion(spark, base, v, id.branch,
+        "VERSION AS OF")
+      case Right(micros) =>
+        PartitionedLake.versionAt(spark, base, Math.floorDiv(micros, 1000L))
+          .getOrElse(sys.error(s"no snapshot of $base was published at or " +
+            "before the requested timestamp (the lake is younger, or the " +
+            "in-window versions were vacuumed)"))
+    }
+    id.meta match {
+      case None => new GraftLakeTable(base, version, id.branch)
+      case Some(m) =>
+        id.branch.foreach(PartitionedLake.requireRefName("branch", _))
+        def table(schema: StructType, frame: => DataFrame) =
+          new GraftLakeMetaTable(path + version.fold("")(v => s"@v$v"),
+            schema, s"GraftLake${m.suffix.drop(1).capitalize}($base)", frame)
+        m match {
+          case LakeMeta.History => table(PartitionedLake.historySchema,
+            PartitionedLake.historyFrom(spark, base, listing))
+          case LakeMeta.Tags => table(PartitionedLake.tagsSchema,
+            PartitionedLake.tagsFrame(spark, base))
+          case LakeMeta.Branches => table(PartitionedLake.branchesSchema,
+            PartitionedLake.branchesFrame(spark, base))
+          case LakeMeta.Files => table(PartitionedLake.filesSchema,
+            PartitionedLake.filesFrameMeta(spark, base, version, id.branch))
+          case LakeMeta.Partitions => table(PartitionedLake.partitionsSchema,
+            PartitionedLake.partitionsFrameMeta(spark, base, version,
+              id.branch))
+          case LakeMeta.Constraints => table(
+            PartitionedLake.constraintsSchema,
+            PartitionedLake.constraintsFrameMeta(spark, base, version,
+              id.branch))
+          case LakeMeta.Changes(query) => changesTable(id, query)
+        }
+    }
+  }
+
+  /** `#changes?from=F&to=T&keyCols=a,b[&granularity=...]` — every
+    * parameter validated loudly (an unknown or misspelled key must not
+    * silently change feed semantics; same rule as the batch format's
+    * granularity validation). The feed's schema comes from the `to`
+    * manifest header alone: its columns, all nullable (pre-images of
+    * since-added columns carry null), plus `_change_type` (and
+    * `_commit_version` per commit) — `changesBetween`'s column set,
+    * spec-pinned against the API's output.
+    */
+  private def changesTable(id: LakeIdent, query: String): Table = {
     val usage = "expected `<lake>#changes?from=<v>&to=<v>&keyCols=" +
       "<c1,c2>[&granularity=net|commit]`"
-    if (!rest.startsWith("?")) sys.error(s"malformed #changes table: $usage")
-    val params = rest.drop(1).split('&').filter(_.nonEmpty).map { kv =>
+    if (!query.startsWith("?")) sys.error(s"malformed #changes table: $usage")
+    val params = query.drop(1).split('&').filter(_.nonEmpty).map { kv =>
       val i = kv.indexOf('=')
       if (i <= 0) sys.error(s"malformed #changes parameter '$kv': $usage")
       kv.take(i) -> kv.drop(i + 1)
@@ -1628,22 +1566,9 @@ class LakeCatalog extends TableCatalog
       s"unknown #changes parameter(s) ${unknown.mkString(", ")}: $usage")
     def need(k: String): String =
       params.getOrElse(k, sys.error(s"#changes requires '$k': $usage"))
-    // endpoints resolve like VERSION AS OF: numeric, or a named tag —
-    // `from=baseline&to=7` reads "everything since the pinned release"
-    def version(k: String): Long = need(k).toLongOption.orElse {
-      // tags are MAIN-LINE refs; a branch-pinned feed addresses only
-      // the branch's own numeric line (same rule as VERSION AS OF
-      // under a pin)
-      if (branchPin.isDefined) sys.error(
-        s"#changes '$k'='${need(k)}' with a branch pin must be a " +
-          "numeric version of the branch's own line — tags are " +
-          s"main-line refs: $usage")
-      PartitionedLake.tagVersion(SparkSession.active, base, need(k))
-    }.getOrElse(
-        sys.error(s"#changes '$k' must be a snapshot version or a tag " +
-          s"name, got '${need(k)}' (tags: ${PartitionedLake
-            .tags(SparkSession.active, base).map(_._1)
-            .mkString(", ")}): $usage"))
+    def version(k: String): Long = LakeIdent.resolveVersion(spark, id.base,
+      need(k), id.branch, s"#changes $k")
+    val (from, to) = (version("from"), version("to"))
     val keyCols = need("keyCols").split(',').map(_.trim)
       .filter(_.nonEmpty).toSeq
     if (keyCols.isEmpty) sys.error(s"#changes keyCols is empty: $usage")
@@ -1654,242 +1579,59 @@ class LakeCatalog extends TableCatalog
       case other => sys.error(s"#changes granularity must be 'net' or " +
         s"'commit', got '$other': $usage")
     }
-    new GraftLakeChangesTable(base, version("from"), version("to"),
-      keyCols, perCommit, branchPin)
+    // a pin is reconciled with the ambient conf HERE (a conflict refuses
+    // at load); an unpinned feed resolves the ambient conf when the scan
+    // builds its frame, as every unpinned read does.
+    // schemaAt reads the manifest header only — NOT manifestAt, whose
+    // retired-directory walk lists the partition tree, waste for a
+    // schema at every analysis re-resolution
+    val base = PartitionedLake.schemaAt(spark, id.base, to,
+      PartitionedLake.resolveReadBranch(id.branch))
+    val schema = StructType(base.fields.map(_.copy(nullable = true)) ++
+      (StructField("_change_type", org.apache.spark.sql.types.StringType)
+        +: (if (perCommit) Seq(StructField("_commit_version", LongType))
+            else Nil)))
+    new GraftLakeMetaTable(
+      id.base + id.branch.fold("")(b => s"#branch=$b") +
+        s"#changes?from=$from&to=$to" +
+        (if (perCommit) "&granularity=commit" else ""),
+      schema, s"GraftLakeChanges(${id.base}, v$from..v$to)",
+      PartitionedLake.changesBetweenOn(spark, id.base, from, to, keyCols,
+        perCommit, PartitionedLake.resolveReadBranch(id.branch)))
   }
 
-  /** Parse `<base>#branch=<name>` — the SQL spelling of the per-read
-    * branch pin (`SELECT * FROM lake.`/path#branch=etl_audit``),
-    * riding the identifier exactly like the metadata-table suffixes
-    * because `#` cannot appear in a path. Returns (base, branch).
+  override def loadTable(ident: Identifier): Table = load(ident, None)
+
+  /** `VERSION AS OF`: string versions are legal SQL here (Iceberg's tag
+    * syntax) — a non-numeric version resolves through the lake's named
+    * tags ([[LakeIdent.resolveVersion]]).
     */
-  private def branchSuffix(path: String): Option[(String, String)] = {
-    val marker = "#branch="
-    val idx = path.indexOf(marker)
-    if (idx < 0) None
-    else Some((path.take(idx), path.drop(idx + marker.length)))
-  }
-
-  override def loadTable(ident: Identifier): Table = {
-    val path = pathOf(ident)
-    if (path.contains("#changes")) {
-      changesTable(ident, path)
-    } else if (path.endsWith("#files") && branchSuffix(path).isDefined) {
-      // branch inspection: `<base>#branch=<name>#files` — what exactly
-      // did this branch stage, at metadata cost
-      val (base, name) = branchSuffix(path.stripSuffix("#files")).get
-      if (!exists(base)) throw new NoSuchTableException(ident)
-      new GraftLakeFilesTable(base, None, Some(name))
-    } else if (path.endsWith("#partitions") &&
-        branchSuffix(path).isDefined) {
-      val (base, name) = branchSuffix(path.stripSuffix("#partitions")).get
-      if (!exists(base)) throw new NoSuchTableException(ident)
-      new GraftLakePartitionsTable(base, None, Some(name))
-    } else if (path.endsWith("#constraints") &&
-        branchSuffix(path).isDefined) {
-      // what would this branch PUBLISH as the constraint set
-      val (base, name) =
-        branchSuffix(path.stripSuffix("#constraints")).get
-      if (!exists(base)) throw new NoSuchTableException(ident)
-      new GraftLakeConstraintsTable(base, None, Some(name))
-    } else if (branchSuffix(path).isDefined) {
-      val (base, name) = branchSuffix(path).get
-      if (!exists(base)) throw new NoSuchTableException(ident)
-      new GraftLakeTable(base, None, Some(name))
-    } else if (path.endsWith("#history")) {
-      val base = path.stripSuffix("#history")
-      // the history listing doubles as the existence probe (one
-      // listing per query); only the no-versions corner (manifest-less
-      // or absent path) pays the root-listing fallback
-      val listing = PartitionedLake.historyListing(
-        SparkSession.active, base)
-      if (listing.isEmpty && !exists(base))
-        throw new NoSuchTableException(ident)
-      new GraftLakeHistoryTable(base, listing)
-    } else if (path.endsWith("#tags")) {
-      val base = path.stripSuffix("#tags")
-      if (!exists(base)) throw new NoSuchTableException(ident)
-      new GraftLakeTagsTable(base)
-    } else if (path.endsWith("#branches")) {
-      val base = path.stripSuffix("#branches")
-      if (!exists(base)) throw new NoSuchTableException(ident)
-      new GraftLakeBranchesTable(base)
-    } else if (path.endsWith("#files")) {
-      val base = path.stripSuffix("#files")
-      if (!exists(base)) throw new NoSuchTableException(ident)
-      new GraftLakeFilesTable(base, None)
-    } else if (path.endsWith("#partitions")) {
-      val base = path.stripSuffix("#partitions")
-      if (!exists(base)) throw new NoSuchTableException(ident)
-      new GraftLakePartitionsTable(base, None)
-    } else if (path.endsWith("#constraints")) {
-      val base = path.stripSuffix("#constraints")
-      if (!exists(base)) throw new NoSuchTableException(ident)
-      new GraftLakeConstraintsTable(base, None)
-    } else {
-      if (!exists(path)) throw new NoSuchTableException(ident)
-      new GraftLakeTable(path, None)
-    }
-  }
-
-  /** History tables cannot be time-traveled: the history IS the audit
-    * over all retained snapshots, so "history as of v" has no meaning —
-    * a targeted error beats the NoSuchTableException that a fall-through
-    * exists(path-with-#history) would report.
-    */
-  private def refuseVersionedMetaTable(path: String): Unit = {
-    if (path.endsWith("#history")) sys.error(
-      "VERSION AS OF / TIMESTAMP AS OF on a #history table is not " +
-        "supported: the history table is derived from ALL retained " +
-        "snapshots and cannot be pinned to one — query it unversioned")
-    if (path.contains("#changes")) sys.error(
-      "VERSION AS OF / TIMESTAMP AS OF on a #changes table is not " +
-        "supported: the feed's endpoints are already explicit versions " +
-        "(its from=/to= parameters) — query it unversioned")
-    if (path.endsWith("#tags")) sys.error(
-      "VERSION AS OF / TIMESTAMP AS OF on a #tags table is not " +
-        "supported: the tag listing is current-state metadata — query " +
-        "it unversioned")
-    if (path.endsWith("#branches")) sys.error(
-      "VERSION AS OF / TIMESTAMP AS OF on a #branches table is not " +
-        "supported: the branch listing is current-state metadata — " +
-        "query it unversioned")
-  }
-
-  /** The few most recent versions, for error messages — rendering the
-    * FULL list would pay an unbounded listing-to-string on a lake with
-    * a huge retained window, inside an error path.
-    */
-  private def versionsForError(path: String): String = {
-    val vs = PartitionedLake.snapshots(SparkSession.active, path)
-    if (vs.size <= 10) vs.mkString(", ")
-    else s"... ${vs.takeRight(10).mkString(", ")} (${vs.size} retained)"
-  }
-
-  /** Numeric-or-tag version resolution — shared by the data table and
-    * the snapshot-describing metadata tables (`#files`/`#partitions`).
-    */
-  private def resolveVersion(path: String, version: String): Long =
-    version.toLongOption.orElse(
-      PartitionedLake.tagVersion(SparkSession.active, path, version))
-      .getOrElse {
-        val tags = PartitionedLake.tags(SparkSession.active, path)
-        sys.error(
-          s"VERSION AS OF '$version' is neither a numeric snapshot " +
-            s"version nor a tag on $path; tags: " +
-            (if (tags.isEmpty) "(none)"
-             else tags.map { case (n, tv) => s"$n->$tv" }.mkString(", ")) +
-            s"; versions: ${versionsForError(path)}")
-      }
-
-  override def loadTable(ident: Identifier, version: String): Table = {
-    val path = pathOf(ident)
-    // a branch pin time-travels within the branch's OWN version line,
-    // numeric only (tags are main-line refs)
-    def branchVersion(name: String): Long =
-      version.toLongOption.getOrElse(sys.error(
-        s"VERSION AS OF '$version' on a #branch= table must be a " +
-          "numeric version of branch '" + name + "'s own line — tags " +
-          "are main-line refs"))
-    // #files / #partitions describe a SNAPSHOT — they time-travel
-    // (numeric or tag; numeric only under a branch pin); the other
-    // metadata tables refuse
-    if (path.endsWith("#files")) {
-      val rest = path.stripSuffix("#files")
-      val (base, branch) = branchSuffix(rest)
-        .map { case (b, n) => (b, Some(n)) }.getOrElse((rest, None))
-      if (!exists(base)) throw new NoSuchTableException(ident)
-      val v = branch.map(branchVersion)
-        .getOrElse(resolveVersion(base, version))
-      return new GraftLakeFilesTable(base, Some(v), branch)
-    }
-    if (path.endsWith("#partitions")) {
-      val rest = path.stripSuffix("#partitions")
-      val (base, branch) = branchSuffix(rest)
-        .map { case (b, n) => (b, Some(n)) }.getOrElse((rest, None))
-      if (!exists(base)) throw new NoSuchTableException(ident)
-      val v = branch.map(branchVersion)
-        .getOrElse(resolveVersion(base, version))
-      return new GraftLakePartitionsTable(base, Some(v), branch)
-    }
-    if (path.endsWith("#constraints")) {
-      val rest = path.stripSuffix("#constraints")
-      val (base, branch) = branchSuffix(rest)
-        .map { case (b, n) => (b, Some(n)) }.getOrElse((rest, None))
-      if (!exists(base)) throw new NoSuchTableException(ident)
-      val v = branch.map(branchVersion)
-        .getOrElse(resolveVersion(base, version))
-      return new GraftLakeConstraintsTable(base, Some(v), branch)
-    }
-    // meta-table refusals fire BEFORE the bare branch-pin case: a
-    // composed `#branch=<name>#changes?...` must get the #changes
-    // wording, not a branch-name validation error on 'name#changes?...'
-    refuseVersionedMetaTable(path)
-    branchSuffix(path).foreach { case (base, name) =>
-      if (!exists(base)) throw new NoSuchTableException(ident)
-      return new GraftLakeTable(base, Some(branchVersion(name)),
-        Some(name))
-    }
-    if (!exists(path)) throw new NoSuchTableException(ident)
-    // string versions are legal SQL here (Iceberg's tag syntax): a
-    // non-numeric version resolves through the lake's named tags
-    // (PartitionedLake.tag / CALL system.tag); unknown names refuse
-    // with both vocabularies listed
-    new GraftLakeTable(path, Some(resolveVersion(path, version)))
-  }
+  override def loadTable(ident: Identifier, version: String): Table =
+    load(ident, Some(Left(version)))
 
   /** `TIMESTAMP AS OF` — the engine hands epoch MICROseconds; resolve
     * to the newest version published at or before it (manifest mtime,
     * Delta's semantics — [[PartitionedLake.versionAt]]) and pin that.
     */
-  override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
-    val path = pathOf(ident)
-    // composed `#branch=...#changes` gets the #changes wording first
-    if (path.contains("#changes")) refuseVersionedMetaTable(path)
-    branchSuffix(path).foreach { case (_, name) => sys.error(
-      s"TIMESTAMP AS OF on a #branch= table is not supported: branch " +
-        s"'$name' is a moving staged line — pin it by numeric VERSION " +
-        "AS OF instead") }
-    def versionAtOrRefuse(base: String): Long =
-      PartitionedLake.versionAt(SparkSession.active, base,
-        Math.floorDiv(timestampMicros, 1000L)).getOrElse(sys.error(
-        s"no snapshot of $base was published at or before the requested " +
-          "timestamp (the lake is younger, or the in-window versions " +
-          "were vacuumed)"))
-    if (path.endsWith("#files")) {
-      val base = path.stripSuffix("#files")
-      if (!exists(base)) throw new NoSuchTableException(ident)
-      return new GraftLakeFilesTable(base, Some(versionAtOrRefuse(base)))
-    }
-    if (path.endsWith("#partitions")) {
-      val base = path.stripSuffix("#partitions")
-      if (!exists(base)) throw new NoSuchTableException(ident)
-      return new GraftLakePartitionsTable(base,
-        Some(versionAtOrRefuse(base)))
-    }
-    if (path.endsWith("#constraints")) {
-      val base = path.stripSuffix("#constraints")
-      if (!exists(base)) throw new NoSuchTableException(ident)
-      return new GraftLakeConstraintsTable(base,
-        Some(versionAtOrRefuse(base)))
-    }
-    refuseVersionedMetaTable(path)
-    if (!exists(path)) throw new NoSuchTableException(ident)
-    new GraftLakeTable(path, Some(versionAtOrRefuse(path)))
-  }
+  override def loadTable(ident: Identifier, timestampMicros: Long): Table =
+    load(ident, Some(Right(timestampMicros)))
 
-  override def tableExists(ident: Identifier): Boolean = {
+  override def tableExists(ident: Identifier): Boolean =
+    exists(LakeIdent.parse(pathOf(ident)).base)
+
+  /** The lake path a DDL statement addresses. Every [[LakeIdent]]
+    * suffix refuses: a metadata table or a branch pin is a read-only
+    * view, and Hadoop keeps `#` literal, so creating one would publish a
+    * lake in a directory no read can reach.
+    */
+  private def ddlPathOf(ident: Identifier, op: String): String = {
     val path = pathOf(ident)
-    val stripped =
-      if (path.endsWith("#history")) path.stripSuffix("#history")
-      else if (path.endsWith("#tags")) path.stripSuffix("#tags")
-      else if (path.endsWith("#branches")) path.stripSuffix("#branches")
-      else if (path.endsWith("#files")) path.stripSuffix("#files")
-      else if (path.endsWith("#partitions")) path.stripSuffix("#partitions")
-      else if (path.endsWith("#constraints")) path.stripSuffix("#constraints")
-      else if (path.contains("#changes")) path.take(path.indexOf("#changes"))
-      else path
-    exists(branchSuffix(stripped).map(_._1).getOrElse(stripped))
+    val base = LakeIdent.parse(path).base
+    if (base != path) sys.error(
+      s"cannot $op `$path`: the suffix ${path.drop(base.length)} names a " +
+        s"read-only view of the lake at $base, not a table — $op the " +
+        "lake itself")
+    path
   }
 
   // a path catalog has no enumerable namespace — tables are lakes on
@@ -1943,10 +1685,7 @@ class LakeCatalog extends TableCatalog
   override def createTable(ident: Identifier, schema: StructType,
       partitions: Array[Transform],
       properties: util.Map[String, String]): Table = {
-    val path = pathOf(ident)
-    if (path.endsWith("#history") || path.contains("#changes"))
-      sys.error(s"cannot CREATE a metadata table ($path): #history and " +
-        "#changes are derived views over a lake's snapshots")
+    val path = ddlPathOf(ident, "CREATE")
     val cols = partitions.toSeq.map {
       case t if t.name == "identity" && t.references.length == 1 &&
           t.references.head.fieldNames.length == 1 =>
@@ -2019,10 +1758,7 @@ class LakeCatalog extends TableCatalog
   override def alterTable(ident: Identifier,
       changes: org.apache.spark.sql.connector.catalog.TableChange*): Table = {
     import org.apache.spark.sql.connector.catalog.TableChange
-    val path = pathOf(ident)
-    if (path.contains("#")) sys.error(
-      s"cannot ALTER a metadata table ($path): #history and #changes " +
-        "are derived views")
+    val path = ddlPathOf(ident, "ALTER")
     if (!exists(path)) throw new NoSuchTableException(ident)
     val spark = SparkSession.active
     changes.foreach {
@@ -2136,10 +1872,7 @@ class LakeCatalog extends TableCatalog
     * [[TableCatalog]] contract.
     */
   override def dropTable(ident: Identifier): Boolean = {
-    val path = pathOf(ident)
-    if (path.endsWith("#history") || path.contains("#changes"))
-      sys.error(s"cannot DROP a metadata table ($path): #history and " +
-        "#changes are derived views — drop the lake itself")
+    val path = ddlPathOf(ident, "DROP")
     val spark = SparkSession.active
     if (!exists(path)) false
     // only a MANIFEST-BEARING lake may be dropped: the read-side

@@ -111,6 +111,13 @@ object PartitionedLake {
   private val ManifestDirName = "_manifest"
   private val StagingDirName = "_staging"
 
+  /** The merge-on-read duplicate-identity refusal: one literal shared by
+    * the in-plan `raise_error` text and the driver-side matcher that
+    * lifts it out of the job failure.
+    */
+  private val MorDupIdentityRefusal =
+    "merge-on-read contract is one row per identity"
+
   // %09d pads for sortable names but is MINIMUM width: version 10^9
   // writes 10 digits, so the matcher accepts \d{9,} — a fixed {9} would
   // silently stop resolving past that version (split-brain to an older
@@ -1138,8 +1145,15 @@ object PartitionedLake {
     }
     val staging = new Path(new Path(path, StagingDirName),
       UUID.randomUUID().toString.take(8))
-    checked.write.mode("overwrite").partitionBy(partitionCols: _*)
+    // a refused write (a CHECK violation, an in-plan raise_error) leaves
+    // no staging directory behind: nothing will ever commit or sweep it
+    try checked.write.mode("overwrite").partitionBy(partitionCols: _*)
       .parquet(staging.toString)
+    catch { case t: Throwable =>
+      try fs.delete(staging, true)
+      catch { case scala.util.control.NonFatal(e) => t.addSuppressed(e) }
+      throw t
+    }
     val conf = spark.sparkContext.hadoopConfiguration
     val pairs = leafPartitionDirs(fs, staging, partitionCols.size)
       .flatMap { case (rel, dirPath) =>
@@ -2669,7 +2683,8 @@ object PartitionedLake {
   }
 
   /** [[history]]'s row shape — shared with the SQL metadata table
-    * ([[GraftLakeHistoryTable]]) so the two surfaces cannot drift.
+    * (`#history`, a [[GraftLakeMetaTable]]) so the two surfaces cannot
+    * drift.
     */
   private[io] val historySchema: StructType = {
     import org.apache.spark.sql.types._
@@ -3544,7 +3559,8 @@ object PartitionedLake {
   }
 
   /** The `#tags` metadata table's row shape — shared with
-    * [[graft.io.GraftLakeTagsTable]] so the surfaces cannot drift.
+    * the SQL `#tags` table ([[GraftLakeMetaTable]]) so the surfaces
+    * cannot drift.
     */
   private[io] val tagsSchema: StructType = {
     import org.apache.spark.sql.types._
@@ -4754,8 +4770,8 @@ object PartitionedLake {
           "for the same (partition, key) identity — e.g. ("),
         concat_ws(", ", ident.map(c =>
           coalesce(col(c).cast("string"), lit("null"))).toIndexedSeq: _*),
-        lit(") — the lake's merge-on-read contract is one row per " +
-          "identity; dedupe the source (or use " +
+        lit(s") — the lake's $MorDupIdentityRefusal; dedupe the source " +
+          "(or use " +
           s"${graft.io.LakeDeltaRowLevel.ModeKey}=" +
           s"${graft.io.LakeDeltaRowLevel.CopyOnWrite} for keyless " +
           "multiset semantics)"))
@@ -4820,15 +4836,16 @@ object PartitionedLake {
         .select((pinned.schema.fieldNames :+ MorOpCol)
           .map(col).toIndexedSeq: _*)
       // the dup refusal fires INSIDE the staging job (raise_error above)
-      // — nothing has committed at that point; unwrap Spark's job-abort
-      // layers so the top-level message stays the directed one
+      // — nothing has committed at that point, and stage() removed its
+      // directory; lift the directed message out of Spark's job-abort
+      // layers to the top, keeping the job failure as its cause
       val (logStaging, stagedLog) = try {
         stage(spark, fs, path, newLog, partitionCols, Nil)
       } catch { case t: Throwable =>
         val dup = Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-          .map(x => Option(x.getMessage).getOrElse(""))
-          .find(_.contains("one row per identity"))
-        dup.foreach(msg => sys.error(msg))
+          .flatMap(x => Option(x.getMessage))
+          .find(_.contains(MorDupIdentityRefusal))
+        dup.foreach(msg => throw new IllegalStateException(msg, t))
         throw t
       }
       val autoCompact = morLogGovern(fs, path, logStaging, stagedLog)

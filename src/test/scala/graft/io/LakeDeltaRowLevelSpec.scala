@@ -230,6 +230,22 @@ class LakeDeltaRowLevelSpec extends AnyFunSuite {
         s"unexpected: ${e.getMessage}")
       // nothing was published
       assert(PartitionedLake.snapshots(spark, dup) === Seq(1L))
+      // ...nothing was left behind: the refused staging job's directory
+      // is gone
+      val staging = new java.io.File(dup, "_staging")
+      assert(!staging.exists || staging.list().isEmpty,
+        s"leftover staging: ${Option(staging.list()).map(_.mkString(", "))}")
+      // ...and the directed refusal keeps the staging job's failure (the
+      // in-plan raise_error) in its cause chain
+      val chain = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).toSeq
+      val directed = chain.indexWhere(x =>
+        Option(x.getMessage).exists(_.contains("one row per identity")))
+      assert(directed >= 0 && chain.drop(directed + 1).exists {
+        case s: org.apache.spark.SparkThrowable =>
+          s.getCondition == "USER_RAISED_EXCEPTION"
+        case _ => false
+      }, chain.mkString(" <- "))
     }
   }
 

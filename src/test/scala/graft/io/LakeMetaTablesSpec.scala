@@ -175,4 +175,39 @@ class LakeMetaTablesSpec extends AnyFunSuite {
       assert(!catalog.tableExists(ident(absent)), absent)
     }
   }
+
+  test("DDL refuses every suffix: CREATE on a missing base publishes no directory, DROP or ALTER of an existing lake's suffix leaves the lake as it was") {
+    useCatalog()
+    def chain(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .map(x => String.valueOf(x.getMessage)).mkString(" | ")
+    val suffixes = Seq("#history", "#tags", "#branches", "#files",
+      "#partitions", "#constraints", "#changes?from=1&to=2&keyCols=k",
+      "#branch=wip", "#branch=wip#files")
+    suffixes.foreach { sfx =>
+      // Hadoop keeps '#' literal: a create that got through would publish
+      // a lake in a directory named `lake#tags`, which no read reaches
+      val missing = freshLake("ddl-create")
+      val e = intercept[Exception](spark.sql(
+        s"CREATE TABLE graft_lake.`$missing$sfx` (k BIGINT, part STRING) " +
+          "PARTITIONED BY (part)"))
+      assert(chain(e).contains(sfx), s"$sfx: ${chain(e)}")
+      val dir = new java.io.File(missing).getParentFile
+      assert(dir.list().isEmpty,
+        s"$sfx: CREATE left ${dir.list().mkString(", ")}")
+    }
+    val lake = freshLake("ddl-drop")
+    PartitionedLake.write(Seq((1L, "a")).toDF("k", "part"), lake, "part")
+    suffixes.foreach { sfx =>
+      val e = intercept[Exception](
+        spark.sql(s"DROP TABLE graft_lake.`$lake$sfx`"))
+      assert(chain(e).contains(sfx), s"$sfx: ${chain(e)}")
+      assert(PartitionedLake.snapshots(spark, lake) === Seq(1L), sfx)
+    }
+    val alter = intercept[Exception](spark.sql(
+      s"ALTER TABLE graft_lake.`$lake#files` ADD COLUMNS (x INT)"))
+    assert(chain(alter).contains("#files"), chain(alter))
+    assert(PartitionedLake.snapshots(spark, lake) === Seq(1L))
+    assert(PartitionedLake.read(spark, lake).collect().length === 1)
+  }
 }
