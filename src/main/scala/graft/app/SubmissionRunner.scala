@@ -14,9 +14,18 @@ import java.time.LocalDate
   * cross-sheet matrices, declared-count reconciliation, final dedup.
   *
   * Each sheet's evaluation is ONE lazy DataFrame plan (scan -> broadcast
-  * joins -> single-pass rule explode); nothing materializes until the error
-  * report is consumed. Drivers `collect()` only scalars (declared counts,
-  * summary pivot).
+  * joins -> single-pass rule explode), but `validate` itself runs jobs
+  * before the error report is consumed:
+  *  - `CrossSheet.crossSheetBiospecimen` numbers its scoped rows with
+  *    `.rdd.zipWithIndex`, which executes the biospecimen matrix at
+  *    construction;
+  *  - with declared counts, the unioned error set is pinned with
+  *    `localCheckpoint` (the whole rule pipeline runs here);
+  *  - each declared-count reconciliation `count()`s its passing IDs.
+  * On a dirty SeroNet-shaped submission with declared counts that is
+  * about 56 jobs (10 for the matrix, 24 for the pin, 22 for the two
+  * counts). Drivers `collect()` only scalars (declared counts, summary
+  * pivot).
   */
 object SubmissionRunner {
 

@@ -124,36 +124,3 @@ object SheetReader {
     spark.createDataFrame(spark.sparkContext.parallelize(data), schema)
   }
 }
-
-/** Error-report sink: one `<sheet>_Errors.csv` per distinct sheet name,
-  * sorted by Row_Index (write_error_file, File_Submission_Object.py:417-430;
-  * the `uni_name in [...]` comparison at :425 is always False — defect
-  * §2.9-6 — so every file sorts by Row_Index; replicated).
-  */
-object ErrorWriter {
-
-  def write(errors: DataFrame, outDir: String,
-      gzip: Boolean = false): Seq[(String, Long)] = {
-    import org.apache.spark.sql.functions.col
-    // the incoming frame is usually the WHOLE lazy scan->parse->rule
-    // pipeline; materialize it once — the loop below otherwise
-    // re-executes it 2N+1 times (sheet listing, then count + write per
-    // sheet). Error sets are small (rule output), so the checkpoint is
-    // cheap and lineage-free.
-    val pinned = errors.localCheckpoint()
-    val sheets = pinned.select("CSV_Sheet_Name").distinct()
-      .collect().map(_.getString(0)).sorted.toIndexedSeq
-    sheets.map { name =>
-      val curr = pinned.filter(col("CSV_Sheet_Name") === name)
-        .orderBy("Row_Index")
-        .select(graft.core.ValidationError.columns.map(col): _*)
-      val fileName = name.replace(".csv", "_Errors.csv")
-      val n = curr.count()
-      val writer = curr.coalesce(1).write.mode("overwrite")
-        .option("header", "true")
-      (if (gzip) writer.option("compression", "gzip") else writer)
-        .csv(s"$outDir/$fileName")
-      (fileName, n)
-    }
-  }
-}

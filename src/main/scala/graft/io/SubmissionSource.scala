@@ -1,6 +1,7 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Submission-directory source: one CSV per sheet under a prefix (local
@@ -28,12 +29,15 @@ object SubmissionSource {
 
   /** submission.csv metadata (FSO:73-94): the CBC name is the SECOND header
     * cell; declared participant/biospecimen counts sit at rows [1][1] and
-    * [2][1] of the body.
+    * [2][1] of the body. Row_Index is the line number, so body rows 0-2
+    * are `Row_Index <= 4`: one filtered scan, sorted on the driver (a
+    * global sort would run a sample, a shuffle and a collect job).
     */
   def metadata(submission: DataFrame): Option[SubmissionMeta] = {
     val cols = submission.columns.filterNot(_ == "Row_Index")
     if (cols.length < 2) return None
-    val rows = submission.orderBy("Row_Index").collect()
+    val rows = submission.filter(col("Row_Index") <= 4L).collect()
+      .sortBy(_.getAs[Long]("Row_Index"))
     def cell(rowIdx: Int): Option[Long] =
       if (rows.length > rowIdx) scala.util.Try(rows(rowIdx).getString(1).trim.toLong).toOption
       else None

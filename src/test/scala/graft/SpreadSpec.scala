@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Spread
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,42 +12,18 @@ class SpreadSpec extends AnyFunSuite {
   import SparkTestSession._
 
   test("query construction triggers zero Spark jobs") {
-    val probeGroup = "spread-construction-probe"
-    val probeJobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    @volatile var sentinelSeen = false
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val g = Option(j.properties)
-          .map(_.getProperty("spark.jobGroup.id", "")).getOrElse("")
-        if (g == probeGroup) probeJobs.incrementAndGet()
-        if (g == "spread-sentinel") sentinelSeen = true
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // construction-pure queries that all sit on Spread.byKey call sites
-      val names = Seq("q24_rule_date_range", "q27_rule_total_live",
-        "q32_rule_viability", "q42_dedup_minhash_lsh",
-        "q44_embedding_neardup", "q45_cosine_topk", "q72_ann_ivf")
-      // warm the Tables metadata cache: FIRST-touch parquet schema
-      // inference legitimately runs a driver job; the property under test
-      // is that QUERY construction itself is job-free
+    // construction-pure queries that all sit on Spread.byKey call sites
+    val names = Seq("q24_rule_date_range", "q27_rule_total_live",
+      "q32_rule_viability", "q42_dedup_minhash_lsh",
+      "q44_embedding_neardup", "q45_cosine_topk", "q72_ann_ivf")
+    // warm the Tables metadata cache: FIRST-touch parquet schema
+    // inference legitimately runs a driver job; the property under test
+    // is that QUERY construction itself is job-free
+    names.foreach(n => QueryRegistry.queries(n)(spark, sf))
+    val (_, jobs) = JobProbe.count(spark) {
       names.foreach(n => QueryRegistry.queries(n)(spark, sf))
-      spark.sparkContext.setJobGroup(probeGroup, "build only", false)
-      try names.foreach(n => QueryRegistry.queries(n)(spark, sf))
-      finally spark.sparkContext.clearJobGroup()
-      // sentinel: the listener bus is FIFO, so once this job's event has
-      // been delivered, any earlier construction-time job event has too
-      spark.sparkContext.setJobGroup("spread-sentinel", "flush", false)
-      try spark.range(5).count()
-      finally spark.sparkContext.clearJobGroup()
-      val deadline = System.currentTimeMillis() + 30000
-      while (!sentinelSeen && System.currentTimeMillis() < deadline)
-        Thread.sleep(25)
-      assert(sentinelSeen, "listener bus did not deliver the sentinel event")
-      assert(probeJobs.get() == 0,
-        s"query construction ran ${probeJobs.get()} Spark job(s)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs == 0, s"query construction ran $jobs Spark job(s)")
   }
 
   test("readMany construction runs no per-file count() jobs") {
@@ -60,42 +35,20 @@ class SpreadSpec extends AnyFunSuite {
     java.nio.file.Files.writeString(dir.resolve("a.csv"), "X\n1\n2\n")
     java.nio.file.Files.writeString(dir.resolve("b.csv"), "X\n3\n")
     val paths = Seq(s"$dir/a.csv", s"$dir/b.csv")
-    val probeGroup = "readmany-construction-probe"
-    val probeJobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    @volatile var sentinelSeen = false
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val g = Option(j.properties)
-          .map(_.getProperty("spark.jobGroup.id", "")).getOrElse("")
-        if (g == probeGroup) probeJobs.incrementAndGet()
-        if (g == "readmany-sentinel") sentinelSeen = true
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // warm: first touch runs CSV header/schema inference jobs legitimately
+    // warm: first touch runs CSV header/schema inference jobs legitimately
+    graft.io.SheetReader.readMany(spark, paths)
+    val (built, jobs) = JobProbe.count(spark) {
       graft.io.SheetReader.readMany(spark, paths)
-      spark.sparkContext.setJobGroup(probeGroup, "build only", false)
-      val built =
-        try graft.io.SheetReader.readMany(spark, paths)
-        finally spark.sparkContext.clearJobGroup()
-      spark.sparkContext.setJobGroup("readmany-sentinel", "flush", false)
-      try spark.range(5).count()
-      finally spark.sparkContext.clearJobGroup()
-      val deadline = System.currentTimeMillis() + 30000
-      while (!sentinelSeen && System.currentTimeMillis() < deadline)
-        Thread.sleep(25)
-      assert(sentinelSeen, "listener bus did not deliver the sentinel event")
-      // header-inference legitimately runs one small job per csv (no
-      // schema supplied) plus ONE zipWithIndex partition-size job for the
-      // whole union; the property is no count() job per file on top: the
-      // old counting construction ran paths.size extra jobs here
-      assert(built.get.columns.contains("Row_Index"))
-      assert(probeJobs.get() <= paths.size + 1,
-        s"readMany construction ran ${probeJobs.get()} jobs " +
-          s"(> ${paths.size} header reads + 1 index job " +
-          "=> per-file count() is back)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    // header-inference legitimately runs one small job per csv (no
+    // schema supplied) plus ONE zipWithIndex partition-size job for the
+    // whole union; the property is no count() job per file on top: the
+    // old counting construction ran paths.size extra jobs here
+    assert(built.get.columns.contains("Row_Index"))
+    assert(jobs <= paths.size + 1,
+      s"readMany construction ran $jobs jobs " +
+        s"(> ${paths.size} header reads + 1 index job " +
+        "=> per-file count() is back)")
   }
 
   test("fires on a low-split file scan and repartitions by the key") {
