@@ -1,6 +1,6 @@
 package graft.app
 
-import graft.core.ColumnError
+import graft.core.{ColumnError, ExecMode}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -17,13 +17,17 @@ object StatusDerivation {
   final case class FileStatus(sheet: String, status: String, batchStatus: String)
 
   /** Severity counts per sheet from the distributed error table — the one
-    * collect() this module needs.
+    * collect() this module needs. On `SubmissionRunner.validate`'s pinned
+    * result it runs no rule pipeline, and a small stamped source runs
+    * without code generation ([[graft.core.ExecMode]]).
     */
   def severityCounts(errors: DataFrame): Map[(String, String), Long] =
-    errors.groupBy("CSV_Sheet_Name", "Message_Type").count()
-      .collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
-      .toMap
+    ExecMode.scoped(errors.sparkSession, ExecMode.sourceBytes(errors)) {
+      errors.groupBy("CSV_Sheet_Name", "Message_Type").count()
+        .collect()
+        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
+        .toMap
+    }
 
   /** Row-error mode (error_string != "Column_Error"). */
   def derive(sheets: Seq[String], counts: Map[(String, String), Long]): Seq[FileStatus] =

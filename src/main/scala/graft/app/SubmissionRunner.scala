@@ -1,6 +1,6 @@
 package graft.app
 
-import graft.core.{ColumnError, ValidationError}
+import graft.core.{ColumnError, ExecMode, ValidationError}
 import graft.dispatch.{CrossSheet, MergeTables, SheetCatalog}
 import graft.rules.RuleEvaluator
 import graft.types.CellType
@@ -13,19 +13,29 @@ import java.time.LocalDate
   * column-name conformance, context merges, per-sheet rule evaluation,
   * cross-sheet matrices, declared-count reconciliation, final dedup.
   *
-  * Each sheet's evaluation is ONE lazy DataFrame plan (scan -> broadcast
-  * joins -> single-pass rule explode), but `validate` itself runs jobs
-  * before the error report is consumed:
+  * Each sheet's evaluation is ONE DataFrame plan (scan -> broadcast
+  * joins -> single-pass rule explode). `validate` is eager: it runs the
+  * whole rule pipeline and returns the error set pinned, so the writer
+  * and the status rollup read it without re-running anything. Its jobs:
   *  - `CrossSheet.crossSheetBiospecimen` numbers its scoped rows with
   *    `.rdd.zipWithIndex`, which executes the biospecimen matrix at
   *    construction;
   *  - with declared counts, the unioned error set is pinned with
-  *    `localCheckpoint` (the whole rule pipeline runs here);
-  *  - each declared-count reconciliation `count()`s its passing IDs.
-  * On a dirty SeroNet-shaped submission with declared counts that is
-  * about 56 jobs (10 for the matrix, 24 for the pin, 22 for the two
-  * counts). Drivers `collect()` only scalars (declared counts, summary
-  * pivot).
+  *    `localCheckpoint` (the whole rule pipeline runs here), and each
+  *    declared-count reconciliation `count()`s its passing IDs;
+  *  - the deduplicated error set is pinned with `localCheckpoint`: the
+  *    rule pipeline (or, with declared counts, the reconciliation and the
+  *    dedup shuffle over the first pin) runs here.
+  * On a dirty SeroNet-shaped submission with declared counts that is 58
+  * jobs (10 for the matrix, 24 for the first pin, 22 for the two counts,
+  * 2 for the final pin). Drivers `collect()` only scalars (declared
+  * counts, summary pivot).
+  *
+  * Execution mode: when every sheet carries a source-size stamp (sheets
+  * read by [[graft.io.SheetReader]]) and their sum is small, the whole of
+  * `validate` runs without code generation ([[graft.core.ExecMode]]); the
+  * returned error set carries the same stamp, so `ErrorWriter.write` and
+  * `StatusDerivation.severityCounts` pick the same mode.
   */
 object SubmissionRunner {
 
@@ -43,17 +53,29 @@ object SubmissionRunner {
       icdExists: Option[Column => Column] = None,
       contextFallback: String => Option[DataFrame] = _ => None)
 
+  /** `errors` is pinned: reading it runs no rule pipeline. `sourceBytes`
+    * is the sheets' summed source-size stamp (`None` if any sheet has
+    * none) and `interpreted` whether validation ran without code
+    * generation. */
   final case class Result(
       errors: DataFrame,
       columnErrors: Seq[ColumnError],
       partListSheets: Seq[String],
-      bioListSheets: Seq[String])
+      bioListSheets: Seq[String],
+      sourceBytes: Option[Long],
+      interpreted: Boolean)
 
   /** Sheets never rule-checked (nci-seronet-data-validator.py:85). */
   val skippedSheets: Set[String] = Set("submission.csv", "shipping_manifest.csv")
 
   def validate(spark: SparkSession, sheets: Map[String, DataFrame],
       cfg: Config): Result = {
+    val bytes = ExecMode.sourceBytes(sheets.values)
+    ExecMode.scoped(spark, bytes)(run(spark, sheets, cfg, bytes))
+  }
+
+  private def run(spark: SparkSession, sheets: Map[String, DataFrame],
+      cfg: Config, bytes: Option[Long]): Result = {
     // check_col_names (File_Submission_Object.py:55-72): driver-side set diff
     val columnErrors = sheets.toSeq.sortBy(_._1).flatMap { case (name, df) =>
       if (skippedSheets.contains(name)) Nil
@@ -107,10 +129,11 @@ object SubmissionRunner {
     val unionedLazy = sheetErrors.reduceOption(_ unionByName _)
       .getOrElse(ValidationError.empty(spark))
     // each reconciliation call .count()s a plan embedding the WHOLE
-    // rule pipeline, and the returned result executes it once more —
+    // rule pipeline, and the final pin executes it once more —
     // materialize the (small) error set once instead of paying the
     // full scan->parse->rule-explode cost up to three times. Only when
-    // a reconciliation will actually run; otherwise stay lazy.
+    // a reconciliation will actually run; otherwise the final pin is
+    // the pipeline's only run.
     val unioned =
       if (cfg.declaredParticipants.isDefined || cfg.declaredBiospecimens.isDefined)
         unionedLazy.localCheckpoint()
@@ -129,8 +152,9 @@ object SubmissionRunner {
       acc
     }
 
-    Result(RuleEvaluator.dedupFirst(withRecon).drop("rule_seq"),
-      columnErrors, partList, bioList)
+    val deduped = RuleEvaluator.dedupFirst(withRecon).drop("rule_seq")
+    val errors = bytes.fold(deduped)(ExecMode.stamp(deduped, _)).localCheckpoint()
+    Result(errors, columnErrors, partList, bioList, bytes, ExecMode.interpreted(bytes))
   }
 
   /** Slack-summary pivot (A2: pd.crosstab, nci-seronet-data-validator.py:227):

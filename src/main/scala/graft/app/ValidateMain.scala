@@ -50,6 +50,8 @@ object ValidateMain {
         asOf = LocalDate.now(),
         declaredParticipants = meta.flatMap(_.declaredParticipants),
         declaredBiospecimens = meta.flatMap(_.declaredBiospecimens)))
+      println(s"source ${result.sourceBytes.fold("size unknown")(b => s"$b bytes")}, " +
+        s"validated ${if (result.interpreted) "interpreted" else "with code generation"}")
       val written = ErrorWriter.write(result.errors, outDir)
       written.foreach { case (f, n) => println(s"$f has $n Errors") }
       val counts = StatusDerivation.severityCounts(result.errors)

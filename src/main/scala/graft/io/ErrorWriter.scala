@@ -1,9 +1,10 @@
 package graft.io
 
-import graft.core.ValidationError
+import graft.core.{ExecMode, ValidationError}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 
 /** Error-report sink: one `<sheet>_Errors.csv` per distinct sheet name,
@@ -16,10 +17,12 @@ import org.apache.spark.sql.functions.col
   * Row_Index order, plus `_SUCCESS`. A report of the same name from an
   * earlier run is replaced; other files in `outDir` are left alone.
   *
-  * Jobs: the same number however many sheets there are — five, plus one
-  * per shuffle stage of the incoming plan:
-  *  - the pin runs the incoming frame (usually the whole lazy scan ->
-  *    parse -> rule pipeline) once: one job and its plan's shuffle stages;
+  * Jobs: the same number however many sheets there are — four for an
+  * already pinned frame (`SubmissionRunner.validate`'s result), else five
+  * plus one per shuffle stage of the incoming plan:
+  *  - the pin runs the incoming frame (a lazy error plan) once: one job
+  *    and its plan's shuffle stages; a frame that is already a
+  *    materialized checkpoint is used as it is;
   *  - one `groupBy(CSV_Sheet_Name).count()` yields both the sheet list
   *    and the returned counts (a write's task stats carry per-task row
   *    totals only, not per-directory ones): a shuffle and a collect;
@@ -37,6 +40,9 @@ import org.apache.spark.sql.functions.col
   * On a local or HDFS path the move is a rename; on s3a a rename is a copy
   * of every object followed by a delete, so the move costs one copy of the
   * reports.
+  *
+  * Execution mode: a frame stamped with a small source size is written
+  * without code generation ([[graft.core.ExecMode]]).
   */
 object ErrorWriter {
 
@@ -45,17 +51,29 @@ object ErrorWriter {
   private val SheetCopy = "sheet"
 
   def write(errors: DataFrame, outDir: String,
-      gzip: Boolean = false): Seq[(String, Long)] = {
-    // error sets are rule output, far smaller than the submission, so a
-    // lineage-free pin is cheap; without it the count and the write would
-    // each re-run the whole pipeline
-    val pinned = errors.localCheckpoint()
+      gzip: Boolean = false): Seq[(String, Long)] =
+    ExecMode.scoped(errors.sparkSession, ExecMode.sourceBytes(errors)) {
+      // error sets are rule output, far smaller than the submission, so a
+      // lineage-free pin is cheap; without it the count and the write would
+      // each re-run the whole pipeline
+      writePinned(if (isPinned(errors)) errors else errors.localCheckpoint(),
+        outDir, gzip)
+    }
+
+  /** Whether `df` is a materialized checkpoint: reading it runs no plan. */
+  private def isPinned(df: DataFrame): Boolean = df.queryExecution.analyzed match {
+    case r: LogicalRDD => r.rdd.isCheckpointed
+    case _ => false
+  }
+
+  private def writePinned(pinned: DataFrame, outDir: String,
+      gzip: Boolean): Seq[(String, Long)] = {
     val counts = pinned.groupBy("CSV_Sheet_Name").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1).toIndexedSeq
     if (counts.isEmpty) return Seq.empty
 
     val out = new Path(outDir)
-    val fs = out.getFileSystem(errors.sparkSession.sessionState.newHadoopConf())
+    val fs = out.getFileSystem(pinned.sparkSession.sessionState.newHadoopConf())
     val staging = new Path(out, s"_staging-${java.util.UUID.randomUUID()}")
     try {
       val writer = pinned

@@ -1,8 +1,10 @@
 package graft.io
 
+import graft.core.ExecMode
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType, StringType}
+import org.apache.spark.sql.types.{LongType, Metadata, StructField, StructType, StringType}
 
 /** CSV sheet ingest with the reference's exact semantics (SURVEY §1.2/§1.3):
   *
@@ -16,7 +18,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType, StringType
   *  - blank-header columns are dropped (pandas `Unnamed:` columns,
   *    File_Submission_Object.py:44); the all-blank-row drop (:43) is a no-op
   *    in the reference because blanks are `''` (never NaN) — replicated by
-  *    not dropping.
+  *    not dropping;
+  *  - `Row_Index`'s metadata carries the byte size of the files read, the
+  *    stamp [[graft.core.ExecMode]] picks the execution mode from.
   */
 object SheetReader {
 
@@ -35,8 +39,19 @@ object SheetReader {
       .option("multiLine", "true")
       .csv(path)
 
-  def read(spark: SparkSession, path: String): DataFrame =
-    withRowIndex(clean(rawCsv(spark, path)))
+  /** Bytes of the files a raw scan lists. `spark.read` filled its file
+    * index when it resolved the path, so this runs no job. */
+  private def listedBytes(raw: DataFrame): Option[Long] =
+    raw.queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
+        l.relation.asInstanceOf[HadoopFsRelation].location.sizeInBytes
+    }
+
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val raw = rawCsv(spark, path)
+    val df = clean(raw)
+    indexRows(spark, df.rdd, df.schema, sourceBytes = listedBytes(raw))
+  }
 
   /** Multi-file sheet (get_df_from_keys, s3.py:140-179): the reference
     * concatenates every matching key in listing order with a single
@@ -55,7 +70,8 @@ object SheetReader {
       // listing order. No count() per file: construction runs at most one
       // job (zipWithIndex's partition-size pass — zero when the union has
       // <= 1 partition), same contract as every other builder here.
-      val dfs = paths.map(p => clean(rawCsv(spark, p)))
+      val raws = paths.map(p => rawCsv(spark, p))
+      val dfs = raws.map(clean)
       // schema drift across parts: pd.concat unions the columns and
       // continues (missing cells become NaN floats in the reference —
       // which its dynamic typing then treats as NUMBERS, a pathology).
@@ -70,8 +86,10 @@ object SheetReader {
         df.select(order.map(c =>
           if (df.columns.contains(c)) col(c) else lit("").as(c)): _*)
       }
+      val sizes = raws.map(listedBytes)
       Some(indexRows(spark, aligned.map(_.rdd).reduce(_ union _),
-        aligned.head.schema))
+        aligned.head.schema,
+        sourceBytes = Option.when(sizes.forall(_.isDefined))(sizes.flatten.sum)))
     }
 
   /** Drop pandas-style unnamed columns: blank headers surface as `_cN` in
@@ -98,8 +116,9 @@ object SheetReader {
 
   private def indexRows(spark: SparkSession,
       rows: org.apache.spark.rdd.RDD[Row], baseSchema: StructType,
-      startAt: Long = 2L): DataFrame = {
-    val schema = StructType(baseSchema.fields :+ StructField("Row_Index", LongType))
+      startAt: Long = 2L, sourceBytes: Option[Long] = None): DataFrame = {
+    val schema = StructType(baseSchema.fields :+ StructField("Row_Index", LongType,
+      metadata = sourceBytes.fold(Metadata.empty)(ExecMode.stampMetadata)))
     val indexed = rows.zipWithIndex().map { case (r, i) =>
       Row.fromSeq(r.toSeq :+ (i + startAt))
     }

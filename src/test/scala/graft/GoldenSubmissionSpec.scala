@@ -2,16 +2,69 @@ package graft
 
 import graft.app.{StatusDerivation, SubmissionRunner, SummaryFormatter}
 import graft.io.{ErrorWriter, SubmissionSource}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import java.time.LocalDate
+import java.util.zip.GZIPInputStream
+import scala.jdk.CollectionConverters._
 
 /** Golden end-to-end: CSV fixtures on disk -> SubmissionSource ->
   * SubmissionRunner -> ErrorWriter -> read the emitted *_Errors.csv back
   * and pin exact rows (the reference's TEST_MODE shape, SURVEY §5).
+  *
+  * Each `validate` test runs on both sides of the execution-mode gate:
+  * the sheets as read (stamped with their source size, so these small
+  * fixtures validate without code generation) and the same sheets with
+  * the stamp stripped (validated with code generation). Both sides must
+  * give the same error set and the same reports.
   */
 class GoldenSubmissionSpec extends AnyFunSuite {
   import SparkTestSession._
+
+  private val sides = Seq("stamped", "stripped")
+
+  private def onSide(side: String, sheets: Map[String, DataFrame]): Map[String, DataFrame] =
+    if (side == "stamped") sheets else ExecModeSpec.stripped(sheets)
+
+  /** Stamped sheets report their files' bytes and run interpreted;
+    * stripped ones report no size and run compiled. */
+  private def checkMode(side: String, dir: String, result: SubmissionRunner.Result): Unit =
+    if (side == "stamped") {
+      val bytes = Files.list(Paths.get(dir)).iterator().asScala
+        .filter(_.toString.endsWith(".csv")).map(Files.size(_)).sum
+      assert(result.sourceBytes.contains(bytes), result.sourceBytes)
+      assert(result.interpreted)
+    } else {
+      assert(result.sourceBytes.isEmpty, result.sourceBytes)
+      assert(!result.interpreted)
+    }
+
+  private type ErrorRow = (String, Long, String, String, String, String)
+
+  private def errorSet(errors: DataFrame): Set[ErrorRow] =
+    errors.collect().map(r =>
+      (r.getAs[String]("CSV_Sheet_Name"), r.getAs[Long]("Row_Index"),
+        r.getAs[String]("Column_Name"), r.getAs[String]("Column_Value"),
+        r.getAs[String]("Message_Type"), r.getAs[String]("Error_Message"))).toSet
+
+  /** Each report's part file: the header, then the data lines sorted
+    * (rows that share a Row_Index may come in either order). */
+  private def reports(outDir: String): Map[String, Seq[String]] =
+    Files.list(Paths.get(outDir)).iterator().asScala.filter(Files.isDirectory(_))
+      .map { report =>
+        val part = Files.list(report).iterator().asScala
+          .find(_.getFileName.toString.startsWith("part-")).get
+        report.getFileName.toString -> lines(part)
+      }.toMap
+
+  private def lines(part: Path): Seq[String] = {
+    val in = Files.newInputStream(part)
+    val src = scala.io.Source.fromInputStream(
+      if (part.toString.endsWith(".gz")) new GZIPInputStream(in) else in, "UTF-8")
+    try { val all = src.getLines().toList; all.head +: all.tail.sorted }
+    finally src.close()
+  }
 
   private def writeFixtures(dir: String): Unit = {
     def put(name: String, content: String): Unit =
@@ -35,10 +88,11 @@ class GoldenSubmissionSpec extends AnyFunSuite {
       "14_000003,Positive").mkString("\n"))
   }
 
-  test("golden submission: fixtures -> errors -> files -> statuses -> summary") {
+  /** The golden pass on one side of the gate: its error set and reports. */
+  private def goldenPass(side: String): (Set[ErrorRow], Map[String, Seq[String]]) = {
     val dir = Files.createTempDirectory("graft-golden").toString
     writeFixtures(dir)
-    val sheets = SubmissionSource.load(spark, dir)
+    val sheets = onSide(side, SubmissionSource.load(spark, dir))
     assert(sheets.keySet == Set("submission.csv", "demographic.csv",
       "prior_clinical_test.csv"))
 
@@ -54,11 +108,9 @@ class GoldenSubmissionSpec extends AnyFunSuite {
     val result = SubmissionRunner.validate(spark, sheets,
       SubmissionRunner.Config(cbcId = 14, asOf = LocalDate.of(2026, 8, 12),
         declaredParticipants = meta.declaredParticipants))
+    checkMode(side, dir, result)
 
-    val got = result.errors.collect().map(r =>
-      (r.getAs[String]("CSV_Sheet_Name"), r.getAs[Long]("Row_Index"),
-        r.getAs[String]("Column_Name"), r.getAs[String]("Column_Value"),
-        r.getAs[String]("Message_Type"), r.getAs[String]("Error_Message"))).toSet
+    val got = errorSet(result.errors)
 
     val demographicExpected = Set(
       ("demographic.csv", 3L, "Age", "250.0", "Error",
@@ -100,6 +152,29 @@ class GoldenSubmissionSpec extends AnyFunSuite {
     assert(summary.isFailure)
     assert(summary.text.contains("*Validation fail:*"))
     assert(summary.text.contains("demographic.csv"))
+    (got, reports(outDir))
+  }
+
+  test("golden submission: fixtures -> errors -> files -> statuses -> summary") {
+    val Seq(stamped, stripped) = sides.map(goldenPass)
+    assert(stamped._1 == stripped._1)
+    assert(stamped._2 == stripped._2)
+  }
+
+  test("a submission validated without declared counts is pinned: " +
+      "severityCounts runs no rule pipeline") {
+    // without declared counts nothing forced the error set before; the
+    // status rollup after the writer then re-ran scan -> rules -> dedup
+    sides.foreach { side =>
+      val dir = Files.createTempDirectory("graft-golden-pin").toString
+      writeFixtures(dir)
+      val sheets = onSide(side, SubmissionSource.load(spark, dir))
+      val result = SubmissionRunner.validate(spark, sheets,
+        SubmissionRunner.Config(cbcId = 14, asOf = LocalDate.of(2026, 8, 12)))
+      val (counts, jobs) = JobProbe.count(spark)(StatusDerivation.severityCounts(result.errors))
+      assert(jobs <= 2, s"$side: severityCounts ran $jobs jobs")
+      assert(counts.get(("demographic.csv", "Error")).exists(_ >= 5L), counts)
+    }
   }
 
   test("S9: the Slack send path POSTs the summary to a loopback webhook " +
@@ -144,14 +219,17 @@ class GoldenSubmissionSpec extends AnyFunSuite {
     } finally server.stop(0)
   }
 
-  test("S4: the gzip error sink writes .csv.gz parts that read back as the plain write") {
+  /** The gzip pass on one side of the gate: its plain and gzip reports. */
+  private def gzipPass(side: String): (Map[String, Seq[String]], Map[String, Seq[String]]) = {
     val dir = Files.createTempDirectory("graft-gzip").toString
     writeFixtures(dir)
-    val sheets = SubmissionSource.load(spark, dir)
+    val sheets = onSide(side, SubmissionSource.load(spark, dir))
     val meta = SubmissionSource.metadata(sheets("submission.csv")).get
-    val errors = SubmissionRunner.validate(spark, sheets,
+    val result = SubmissionRunner.validate(spark, sheets,
       SubmissionRunner.Config(cbcId = 14, asOf = LocalDate.of(2026, 8, 12),
-        declaredParticipants = meta.declaredParticipants)).errors
+        declaredParticipants = meta.declaredParticipants))
+    checkMode(side, dir, result)
+    val errors = result.errors
     val plainDir = Files.createTempDirectory("graft-plain-out").toString
     val gzipDir = Files.createTempDirectory("graft-gzip-out").toString
     val plain = ErrorWriter.write(errors, plainDir)
@@ -171,9 +249,17 @@ class GoldenSubmissionSpec extends AnyFunSuite {
       assert(back.size == n, file)
       assert(back == rows(s"$plainDir/$file"), file)
     }
+    (reports(plainDir), reports(gzipDir))
   }
 
-  test("full-family golden submission: gated rules, context merges, bio cross-sheet") {
+  test("S4: the gzip error sink writes .csv.gz parts that read back as the plain write") {
+    val Seq(stamped, stripped) = sides.map(gzipPass)
+    assert(stamped == stripped)
+    assert(stamped._1 == stamped._2)
+  }
+
+  /** The full-family pass on one side of the gate: its error set and reports. */
+  private def fullFamilyPass(side: String): (Set[ErrorRow], Map[String, Seq[String]]) = {
     val dir = Files.createTempDirectory("graft-golden-full").toString
     def put(name: String, content: String): Unit =
       Files.writeString(Paths.get(dir, name), content)
@@ -204,13 +290,11 @@ class GoldenSubmissionSpec extends AnyFunSuite {
       "14_001,Test Assay,Approved",
       "14_002,Other Assay,Nonsense").mkString("\n"))  // enum violation
 
-    val sheets = SubmissionSource.load(spark, dir)
+    val sheets = onSide(side, SubmissionSource.load(spark, dir))
     val result = SubmissionRunner.validate(spark, sheets,
       SubmissionRunner.Config(cbcId = 14, asOf = LocalDate.of(2026, 8, 12)))
-    val got = result.errors.collect().map(r =>
-      (r.getAs[String]("CSV_Sheet_Name"), r.getAs[Long]("Row_Index"),
-        r.getAs[String]("Column_Name"), r.getAs[String]("Column_Value"),
-        r.getAs[String]("Message_Type"), r.getAs[String]("Error_Message"))).toSet
+    checkMode(side, dir, result)
+    val got = errorSet(result.errors)
 
     // cross-column checks on the PBMC row (rendered converted values)
     assert(got.contains(("biospecimen.csv", 3L, "Total_Cells_Hemocytometer_Count",
@@ -234,6 +318,15 @@ class GoldenSubmissionSpec extends AnyFunSuite {
       e._6 == "ID is found in Biospecimen.csv, however is missing from Aliquot.csv"))
     // participant 14_000001/2 present in prior+demo+bio -> no participant cross error
     assert(!got.exists(e => e._1 == "Cross_Participant_ID.csv"))
+    val outDir = Files.createTempDirectory("graft-golden-full-out").toString
+    ErrorWriter.write(result.errors, outDir)
+    (got, reports(outDir))
+  }
+
+  test("full-family golden submission: gated rules, context merges, bio cross-sheet") {
+    val Seq(stamped, stripped) = sides.map(fullFamilyPass)
+    assert(stamped._1 == stripped._1)
+    assert(stamped._2 == stripped._2)
   }
 
   test("unnamed columns are dropped and '' survives ingest") {

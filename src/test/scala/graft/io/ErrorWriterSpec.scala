@@ -120,6 +120,24 @@ class ErrorWriterSpec extends AnyFunSuite {
     assert(entries(Paths.get(out)) == Seq("notes.txt", "x_Errors.csv", "y_Errors.csv"))
   }
 
+  test("a pinned frame writes byte-identical reports in one job fewer") {
+    val rows = errorRows(Seq("x.csv", "y.csv", "z.csv"), perSheet = 5)
+    def reportBytes(out: String, written: Seq[(String, Long)]): Map[String, Seq[Byte]] =
+      written.map { case (file, _) =>
+        val part = Files.list(Paths.get(out, file)).iterator().asScala
+          .find(_.getFileName.toString.startsWith("part-")).get
+        file -> Files.readAllBytes(part).toSeq
+      }.toMap
+    val (lazyOut, pinnedOut) = (tmp("lazy"), tmp("pinned"))
+    val (lazyWritten, lazyJobs) = JobProbe.count(spark)(ErrorWriter.write(frame(rows), lazyOut))
+    val pinned = frame(rows).localCheckpoint()
+    val (pinnedWritten, pinnedJobs) = JobProbe.count(spark)(ErrorWriter.write(pinned, pinnedOut))
+    checkReports(pinnedOut, rows, pinnedWritten)
+    assert(pinnedWritten == lazyWritten)
+    assert(reportBytes(pinnedOut, pinnedWritten) == reportBytes(lazyOut, lazyWritten))
+    assert(pinnedJobs == lazyJobs - 1, s"jobs: lazy $lazyJobs, pinned $pinnedJobs")
+  }
+
   /** Writes a good report, then runs `failing`; asserts the failure's cause
     * chain reaches `message`, the old report is byte-identical and no
     * staging directory is left. */
