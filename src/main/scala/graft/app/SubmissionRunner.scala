@@ -46,10 +46,10 @@ object SubmissionRunner {
       declaredBiospecimens: Option[Long] = None,
       expectedColumns: Map[String, Seq[String]] = Map.empty,
       // default (None): the bundled public CMS ICD-10-CM catalog (~94k
-      // codes) via a broadcast-backed IcdCatalog.existsFn resolved against
-      // the session inside validate() — a reference user gets working
-      // check_icd10 out of the box; inject a custom membership fn to
-      // override
+      // codes) via IcdCatalog.existsFn(spark), a lookup in the code set
+      // each JVM loads once from the jar (no broadcast) — a reference
+      // user gets working check_icd10 out of the box; inject a custom
+      // membership fn to override
       icdExists: Option[Column => Column] = None,
       contextFallback: String => Option[DataFrame] = _ => None)
 

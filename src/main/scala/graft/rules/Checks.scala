@@ -352,8 +352,7 @@ object RuleEvaluator {
     // spread BEFORE the memo projection: on a low-split source (single
     // parquet row-group) the parse cascade would otherwise run serially
     // inside the scan stage; no-op when the scan already parallelizes
-    val spread = graft.operators.Spread.byKey(sheet, col("Row_Index"))
-    val prepared = CellType.memoColumns(spread, memoNames)
+    val prepared = CellType.memoColumns(spread(sheet, col("Row_Index")), memoNames)
     def emitOf(r: CompiledRule): Column =
       if (r.keepBlank) r.predicate
       else r.predicate && col(r.column) =!= ""
@@ -388,6 +387,15 @@ object RuleEvaluator {
         col("e.rule_seq"))
   }
 
+  /** `Spread.byKey`, except for a sheet read by [[graft.io.SheetReader]]
+    * (it carries a source-size stamp): a submission sheet is validated
+    * without a keyed shuffle. Spreading merged sheets of 1 MiB or more
+    * cost about 5% more CPU at 20k participants (4 seeds, wall time
+    * within noise) and gained nothing at 40k (SCALE.md "Sheet ingest"). */
+  private def spread(sheet: DataFrame, key: Column): DataFrame =
+    if (graft.core.ExecMode.sourceBytes(sheet).isDefined) sheet
+    else graft.operators.Spread.byKey(sheet, key)
+
   /** One row `e` per non-null struct of `structs` (a rule or pattern that
     * fired, `when(cond, struct)`), beside the `keep` columns. Explodes the
     * plain array, THEN drops the nulls: `array_compact` is a lambda
@@ -413,7 +421,7 @@ object RuleEvaluator {
     // timestamps, strings as-is), and a post-aggregate predicate on the
     // rendered KEY would be pushed below the groupBy by Catalyst,
     // re-evaluating the whole render tree once more per input row
-    val ids = graft.operators.Spread.byKey(sheet, col(column))
+    val ids = spread(sheet, col(column))
       .filter(col(column) =!= "")
       .select(col(column))
     CellType.memoColumns(ids, Seq(column))
