@@ -1,8 +1,7 @@
 package graft.app
 
-import graft.io.{ErrorWriter, SubmissionSource}
 import org.apache.spark.sql.SparkSession
-import java.time.LocalDate
+import java.time.{LocalDate, LocalDateTime}
 
 /** TEST_MODE-style CLI (reference entry point 2, SURVEY §3.2): validate one
   * submission directory of CSVs and write `*_Errors.csv` + a console
@@ -30,40 +29,30 @@ object ValidateMain {
       if (dir.contains(",")) {
         BatchRunner.run(spark, dir.split(',').toSeq, outDir, cbcId,
           LocalDate.now()).foreach {
-          case BatchRunner.Validated(s, files, _, summary) =>
-            println(s"$s: VALIDATED, ${files.map(_._2).sum} errors in ${files.size} files" +
-              (if (summary.isFailure) " (failure channel)" else ""))
+          case v: BatchRunner.Validated =>
+            println(s"${v.submission}: VALIDATED, ${v.errorFiles.map(_._2).sum} errors " +
+              s"in ${v.errorFiles.size} files" +
+              (if (v.summary.isFailure) " (failure channel)" else ""))
           case BatchRunner.Rejected(s, reason) => println(s"$s: REJECTED: $reason")
           case BatchRunner.Failed(s, err) => println(s"$s: FAILED: $err")
         }
         return
       }
-      val sheets = SubmissionSource.load(spark, dir)
-      if (sheets.isEmpty) { println(s"no sheets found under $dir"); return }
-      val meta = sheets.get("submission.csv").flatMap(SubmissionSource.metadata)
-      SubmissionSource.qualityGate(sheets, 0, cbcKnown = true) match {
-        case Some(reason) => println(s"SUBMISSION REJECTED: $reason"); return
-        case None =>
+      BatchRunner.submission(spark, dir, dir.split('/').last, outDir, cbcId,
+        LocalDate.now(), LocalDateTime.now().toString) match {
+        case v: BatchRunner.Validated =>
+          println(s"source ${v.sourceBytes.fold("size unknown")(b => s"$b bytes")}, " +
+            s"validated ${if (v.interpreted) "interpreted" else "with code generation"}")
+          v.errorFiles.foreach { case (f, n) => println(s"$f has $n Errors") }
+          v.statuses.foreach { st =>
+            println(f"${st.sheet}%-28s ${st.status}%-36s ${st.batchStatus}")
+          }
+          println("---- summary " +
+            (if (v.summary.isFailure) "(FAILURE channel)" else "(success channel)"))
+          println(v.summary.text)
+        case BatchRunner.Rejected(_, reason) => println(s"SUBMISSION REJECTED: $reason")
+        case BatchRunner.Failed(_, err) => println(s"FAILED: $err")
       }
-      val result = SubmissionRunner.validate(spark, sheets, SubmissionRunner.Config(
-        cbcId = cbcId,
-        asOf = LocalDate.now(),
-        declaredParticipants = meta.flatMap(_.declaredParticipants),
-        declaredBiospecimens = meta.flatMap(_.declaredBiospecimens)))
-      println(s"source ${result.sourceBytes.fold("size unknown")(b => s"$b bytes")}, " +
-        s"validated ${if (result.interpreted) "interpreted" else "with code generation"}")
-      val written = ErrorWriter.write(result.errors, outDir)
-      written.foreach { case (f, n) => println(s"$f has $n Errors") }
-      val counts = StatusDerivation.severityCounts(result.errors)
-      StatusDerivation.derive(sheets.keys.toSeq.sorted, counts).foreach { st =>
-        println(f"${st.sheet}%-28s ${st.status}%-36s ${st.batchStatus}")
-      }
-      val summary = SummaryFormatter.format(
-        dir.split('/').last, "0", cbcId.toString,
-        sheets.keys.toSeq.sorted, counts,
-        java.time.LocalDateTime.now().toString)
-      println("---- summary " + (if (summary.isFailure) "(FAILURE channel)" else "(success channel)"))
-      println(summary.text)
     } finally spark.stop()
   }
 }

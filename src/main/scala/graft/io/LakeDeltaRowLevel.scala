@@ -8,6 +8,7 @@ import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, CreateNamedStruct, Expression, GetStructField, Literal, UnsafeProjection}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.connector.catalog.MetadataColumn
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics, SupportsRuntimeFiltering}
@@ -16,7 +17,7 @@ import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFac
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DateType, StringType, StructField, StructType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
@@ -89,6 +90,19 @@ object LakeDeltaRowLevel {
 
   def modeOf(): String =
     SQLConf.get.getConfString(ModeKey, CopyOnWrite)
+
+  /** A catalyst value of `dt` as the external value a commit receipt
+    * carries. Dates and timestamps are pinned to java.sql.Date /
+    * java.sql.Timestamp, the types collect() yields by default:
+    * `createToScalaConverter` follows spark.sql.datetime.java8API.enabled,
+    * so without the pin a receipt's type would depend on that setting.
+    */
+  private[io] def receiptValue(dt: DataType): Any => Any = dt match {
+    case DateType => d => DateTimeUtils.toJavaDate(d.asInstanceOf[Int])
+    case TimestampType => t => DateTimeUtils.toJavaTimestamp(t.asInstanceOf[Long])
+    case _ => org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(dt)
+  }
 
   private[io] def identTypeOf(m: PartitionedLake.Manifest, partCols: Seq[String],
       key: String): StructType =
@@ -511,12 +525,12 @@ private[io] class LakeDeltaOpsWriter(staging: String,
   // count — what lets the driver commit skip its summary job entirely.
   // Values are converted to EXTERNAL Scala types immediately (the
   // projection reuses its row buffer, and the driver-side consumers —
-  // partitionFilter/sparkDirsFor — speak external values).
+  // partitionFilter/sparkDirsFor — speak external values), of types
+  // that do not depend on the session (LakeDeltaRowLevel.receiptValue).
   private val identPos = identCols.map(c => tableSchema.fieldIndex(c))
   private val extractIdent: Seq[InternalRow => Any] = identPos.map { i =>
     val dt = tableSchema(i).dataType
-    val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
-      .createToScalaConverter(dt)
+    val conv = LakeDeltaRowLevel.receiptValue(dt)
     (r: InternalRow) => if (r.isNullAt(i)) null else conv(r.get(i, dt))
   }
   private val partsSeen =

@@ -3,6 +3,7 @@ package graft.io
 import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.{array, broadcast, coalesce, col, collect_set, concat, concat_ws, count, explode, lit, raise_error, struct, sum, when}
@@ -111,12 +112,28 @@ object PartitionedLake {
   private val ManifestDirName = "_manifest"
   private val StagingDirName = "_staging"
 
-  /** The merge-on-read duplicate-identity refusal: one literal shared by
-    * the in-plan `raise_error` text and the driver-side matcher that
-    * lifts it out of the job failure.
+  /** The merge-on-read duplicate-identity refusal. The staging job raises
+    * it in-plan with `raise_error`, which throws a `SparkThrowable` of
+    * condition `USER_RAISED_EXCEPTION` whose one parameter, `errorMessage`,
+    * begins with [[MorDupIdentityTag]]. [[morDupRefusal]] finds it in the
+    * job failure's cause chain by that condition and tag, not by any
+    * exception's message, so a layer that re-wraps or rewords the failure
+    * does not hide it.
     */
   private val MorDupIdentityRefusal =
     "merge-on-read contract is one row per identity"
+  private val MorDupIdentityTag = "[GRAFT_MOR_DUP_IDENTITY] "
+
+  /** The directed duplicate-identity refusal raised inside `t`'s job, if
+    * its cause chain holds one: the refusal's message, without the tag. */
+  private[graft] def morDupRefusal(t: Throwable): Option[String] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).collectFirst {
+      case s: SparkThrowable
+          if s.getCondition == "USER_RAISED_EXCEPTION" &&
+            Option(s.getMessageParameters.get("errorMessage"))
+              .exists(_.startsWith(MorDupIdentityTag)) =>
+        s.getMessageParameters.get("errorMessage").stripPrefix(MorDupIdentityTag)
+    }
 
   // %09d pads for sortable names but is MINIMUM width: version 10^9
   // writes 10 digits, so the matcher accepts \d{9,} — a fixed {9} would
@@ -4766,7 +4783,8 @@ object PartitionedLake {
       // one-row-per-identity refusal rides the same window in-plan —
       // it fires inside the staging job, before anything commits
       val dupMsg = concat(
-        lit("row-level delta write produced more than one post-image " +
+        lit(MorDupIdentityTag +
+          "row-level delta write produced more than one post-image " +
           "for the same (partition, key) identity — e.g. ("),
         concat_ws(", ", ident.map(c =>
           coalesce(col(c).cast("string"), lit("null"))).toIndexedSeq: _*),
@@ -4842,10 +4860,7 @@ object PartitionedLake {
       val (logStaging, stagedLog) = try {
         stage(spark, fs, path, newLog, partitionCols, Nil)
       } catch { case t: Throwable =>
-        val dup = Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-          .flatMap(x => Option(x.getMessage))
-          .find(_.contains(MorDupIdentityRefusal))
-        dup.foreach(msg => throw new IllegalStateException(msg, t))
+        morDupRefusal(t).foreach(msg => throw new IllegalStateException(msg, t))
         throw t
       }
       val autoCompact = morLogGovern(fs, path, logStaging, stagedLog)

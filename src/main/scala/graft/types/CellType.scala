@@ -57,12 +57,16 @@ object CellType {
     // Java-only shapes — a [dDfF] SUFFIX ("1d", "2.5f"; "inf"/"NaN"
     // survive because their prefix is not numeric) and a 0x/0X hex
     // prefix — and the cast verdict short-circuits everything for
-    // non-numeric cells
-    val lastCh = upper(substring(t, -1, 1))
+    // non-numeric cells. The probes list both cases instead of calling
+    // upper(): Spark's case mapping goes through ICU, and no other
+    // character upper-cases to D, F, X or 0 (full mappings such as
+    // "ﬀ" → "FF" change the length, so they never matched either)
+    val lastCh = substring(t, -1, 1)
+    val hex = Seq("0x", "0X")
     val javaOnly =
-      upper(substring(t, 1, 2)) === "0X" ||
-      upper(substring(t, 2, 2)) === "0X" ||
-      ((lastCh === "D" || lastCh === "F") &&
+      substring(t, 1, 2).isin(hex: _*) ||
+      substring(t, 2, 2).isin(hex: _*) ||
+      (lastCh.isin("d", "D", "f", "F") &&
         t.substr(lit(1), length(t) - 1).try_cast(DoubleType).isNotNull)
     when(!underscoreGuard(c) && !javaOnly, v)
   }
@@ -158,11 +162,19 @@ object CellType {
       lit("yyyy-M-d"))
   }
 
-  /** Month-name date parse (both orders), or null. Case-insensitive via a
-    * single lower(trim()) — no locale-sensitive Java month parsing.
+  /** ASCII upper case to lower case, every other character unchanged. */
+  private def asciiLower(c: Column): Column =
+    translate(c, ('A' to 'Z').mkString, ('a' to 'z').mkString)
+
+  /** Month-name date parse (both orders), or null. Case-insensitive via
+    * one ASCII-only lower-casing of the trimmed cell — no locale-sensitive
+    * Java month parsing and no ICU case mapping. Only `İ` (U+0130) and the
+    * Kelvin sign (U+212A) lower-case to ASCII letters under `lower()`;
+    * neither can complete a month token, so every cell types the same
+    * either way.
     */
   def monthNameTs(c: Column): Column = {
-    val ln = lower(trim(c))
+    val ln = asciiLower(trim(c))
     coalesce(
       when(ln.rlike(monthFirstRe), fromParts(
         regexp_extract(ln, monthFirstRe, 2),

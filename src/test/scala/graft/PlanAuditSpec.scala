@@ -59,6 +59,40 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(executedPlan("q23_rule_number_range").contains("*("))
   }
 
+  test("the ICD-10 lookup is the only ScalaUDF in a validated sheet's plan") {
+    import graft.dispatch.{MergeTables, SheetCatalog}
+    import graft.io.{IcdCatalog, SheetReader}
+    import graft.rules.RuleEvaluator
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    val columns = Seq("Research_Participant_ID", "Age", "Race", "Ethnicity", "Gender",
+      "Is_Symptomatic", "Date_of_Symptom_Onset", "Symptoms_Resolved",
+      "Date_of_Symptom_Resolution", "Covid_Disease_Severity", "Diabetes_Mellitus",
+      "Other_Comorbidity")
+    val demo = SheetReader.fromRows(spark, columns, Seq(
+      Seq("14_000001", "30", "Asian", "Hispanic or Latino", "Female", "Yes",
+        "1/2/2021", "No", "N/A", "3", "Yes", "E11.9"),
+      Seq("14_000002", "abc", "x", "", "Male", "No", "N/A", "N/A", "N/A", "0", "No",
+        "NOPE99")))
+    val prior = SheetReader.fromRows(spark,
+      Seq("Research_Participant_ID", "SARS_CoV_2_PCR_Test_Result"),
+      Seq(Seq("14_000001", "Positive"), Seq("14_000002", "Negative")))
+    val (merged, drop) = MergeTables.merge("demographic.csv", demo, Map(
+      "demographic.csv" -> demo, "prior_clinical_test.csv" -> prior))
+    val plan = SheetCatalog.plan("demographic.csv",
+      merged.columns.filterNot(_ == "Row_Index").toSeq, drop, 14,
+      java.time.LocalDate.of(2026, 8, 12), IcdCatalog.existsFn(spark))
+    assert(plan.rowRules.map(_.column).distinct.size >= 10, plan.rowRules.map(_.column))
+    val errors = RuleEvaluator.evaluate("demographic.csv", merged, plan.rowRules)
+    val qe = errors.queryExecution
+    assert(!qe.executedPlan.toString.contains("BatchEvalPython"))
+    val udfs = qe.optimizedPlan.flatMap(_.expressions)
+      .flatMap(_.collect { case u: ScalaUDF => u })
+    assert(udfs.nonEmpty)
+    assert(udfs.forall(_.udfName.contains(IcdCatalog.ExistsUdfName)), udfs.map(_.udfName))
+    // the ICD rule fires on the unknown code: the check is in the plan, not pruned
+    assert(errors.collect().nonEmpty)
+  }
+
   test("cosine top-k broadcasts the query side") {
     val p = plan("q45_cosine_topk")
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"), p)

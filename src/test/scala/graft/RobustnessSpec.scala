@@ -242,6 +242,56 @@ class RobustnessSpec extends AnyFunSuite {
     assert(rows.map(_.getLong(0)).sum === 4L)
   }
 
+  test("a merge-on-read duplicate-identity refusal is found by its condition and tag, not by messages") {
+    import graft.io.{LakeCatalog, LakeDeltaRowLevel, PartitionedLake}
+    import spark.implicits._
+    val lake = java.nio.file.Files.createTempDirectory("graft-mor-refusal").toString + "/lake"
+    PartitionedLake.write(Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("k", "part", "bal"),
+      lake, "part")
+    spark.conf.set("spark.sql.catalog.graft_lake", classOf[LakeCatalog].getName)
+    spark.conf.set(LakeDeltaRowLevel.ModeKey, LakeDeltaRowLevel.MergeOnRead)
+    spark.conf.set(LakeDeltaRowLevel.KeyKey, "k")
+    val refused = try {
+      Seq((7L, "a", 1.0), (7L, "a", 2.0)).toDF("k", "part", "bal")
+        .createOrReplaceTempView("mor_refusal_src")
+      intercept[IllegalStateException] {
+        spark.sql(s"""MERGE INTO graft_lake.`$lake` t USING mor_refusal_src s
+                     |ON t.k = s.k
+                     |WHEN MATCHED THEN UPDATE SET bal = s.bal
+                     |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      }
+    } finally {
+      spark.conf.unset(LakeDeltaRowLevel.ModeKey)
+      spark.conf.unset(LakeDeltaRowLevel.KeyKey)
+    }
+    assert(refused.getMessage.startsWith("row-level delta write produced more than one"),
+      refused.getMessage)
+    assert(refused.getMessage.contains("one row per identity"))
+    assert(PartitionedLake.snapshots(spark, lake) === Seq(1L))
+    val jobFailure = refused.getCause
+    // re-wrapped by layers that reword or drop the message: still found
+    val rewrapped = new RuntimeException("commit failed",
+      new org.apache.spark.SparkException("stage aborted (details redacted)",
+        new RuntimeException(null: String, jobFailure)))
+    assert(PartitionedLake.morDupRefusal(rewrapped).contains(refused.getMessage))
+    // the raised SparkThrowable itself with its message rewritten: the
+    // condition and the tagged parameter alone identify it
+    val raised = Iterator.iterate[Throwable](jobFailure)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case t: org.apache.spark.SparkThrowable
+        if t.getCondition == "USER_RAISED_EXCEPTION" => t }.get
+    final class Reworded(cause: Throwable) extends RuntimeException("redacted", cause)
+        with org.apache.spark.SparkThrowable {
+      override def getCondition: String = raised.getCondition
+      override def getMessageParameters: java.util.Map[String, String] =
+        raised.getMessageParameters
+    }
+    assert(PartitionedLake.morDupRefusal(new RuntimeException("x", new Reworded(null)))
+      .contains(refused.getMessage))
+    // the refusal's words without the marker are not a refusal
+    assert(PartitionedLake.morDupRefusal(new RuntimeException(
+      "failed: " + refused.getMessage, new RuntimeException(refused.getMessage))).isEmpty)
+  }
+
   test("foreachBatch sink is idempotent under batch replay") {
     val inDir = java.nio.file.Files.createTempDirectory("graft-fb-in").toString
     val outDir = java.nio.file.Files.createTempDirectory("graft-fb-out").toString

@@ -79,6 +79,44 @@ class LakeDeltaRowLevelSpec extends AnyFunSuite {
       ("b", 3L, 3.0), ("c", 4L, 4.0)))
   }
 
+  test("MoR UPDATE on a date-partitioned lake commits the same rows with java8API on and off") {
+    useCatalog()
+    val java8 = "spark.sql.datetime.java8API.enabled"
+    def updated(java8Api: Boolean): Seq[(Long, String, Double)] = {
+      val lake = freshLake(s"date-java8-$java8Api")
+      PartitionedLake.write(Seq((1L, "2021-01-03", 1.0), (2L, "2021-01-03", 2.0),
+          (3L, "2021-02-01", 3.0), (4L, "2021-03-09", 4.0)).toDF("k", "d", "bal")
+        .withColumn("d", to_date(col("d"))), lake, "d")
+      val before = dataFiles(lake)
+      spark.conf.set(java8, java8Api.toString)
+      try withMor() {
+        spark.sql(s"UPDATE graft_lake.`$lake` SET bal = bal + 10 WHERE k <= 3")
+      } finally spark.conf.unset(java8)
+      assert(dataFiles(lake) === before)
+      assert(liveDeltaDirs(lake) === Set("d=2021-01-03", "d=2021-02-01"))
+      assert(PartitionedLake.snapshots(spark, lake) === Seq(1L, 2L))
+      PartitionedLake.read(spark, lake).select(col("k"), col("d").cast("string"), col("bal"))
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq.sorted
+    }
+    // the receipts' partition values keep one external type either way
+    val day = java.time.LocalDate.of(2021, 1, 3).toEpochDay.toInt
+    val micros = 1609632000000000L
+    spark.conf.set(java8, "true")
+    try {
+      assert(org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToScalaConverter(org.apache.spark.sql.types.DateType)(day)
+        .isInstanceOf[java.time.LocalDate])
+      assert(LakeDeltaRowLevel.receiptValue(org.apache.spark.sql.types.DateType)(day) ==
+        java.sql.Date.valueOf("2021-01-03"))
+      assert(LakeDeltaRowLevel.receiptValue(org.apache.spark.sql.types.TimestampType)(micros)
+        .isInstanceOf[java.sql.Timestamp])
+    } finally spark.conf.unset(java8)
+    val off = updated(java8Api = false)
+    assert(off === Seq((1L, "2021-01-03", 11.0), (2L, "2021-01-03", 12.0),
+      (3L, "2021-02-01", 13.0), (4L, "2021-03-09", 4.0)))
+    assert(updated(java8Api = true) === off)
+  }
+
   test("row-level DELETE writes a tombstone; partition-exact DELETE still converts to the zero-job metadata retirement") {
     val lake = freshLake("del")
     seed(lake)
