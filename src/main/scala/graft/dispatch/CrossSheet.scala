@@ -73,7 +73,8 @@ object CrossSheet {
       (!prior && demo && bio,
         "ID is found in Demographic and Biospecimen but is missing from Prior_Clinical_Test"))
     val structs = patterns.zipWithIndex.map { case ((p, msg), i) =>
-      when(p, errStruct("Cross_Participant_ID.csv", lit(-10L), key,
+      when(p, errStruct("Cross_Participant_ID.csv",
+        lit(ValidationError.CrossSheetRowIndex), key,
         col(key), lit(msg), seqBase + i))
     }
     RuleEvaluator.explodeFired(scoped, structs).select("e.*")
@@ -194,7 +195,8 @@ object CrossSheet {
       else ("submit_Biospecimen_IDs", "Biospecimen")
     val rows =
       if (declaredCount != passCount)
-        Seq(org.apache.spark.sql.Row("Error", "submission.csv", -5L, colLabel,
+        Seq(org.apache.spark.sql.Row("Error", "submission.csv",
+          ValidationError.CountMismatchRowIndex, colLabel,
           declaredCount.toString,
           s"After validation only $passCount $noun IDS are valid", seqBase))
       else Seq.empty

@@ -72,21 +72,8 @@ class LakeBatchProvider extends RelationProvider
           "alongside changesFrom/changesTo"))
       val from = need("changesFrom").toLong
       val to = need("changesTo").toLong
-      val keyCols = need("keyCols").split(',').map(_.trim)
-        .filter(_.nonEmpty).toSeq
-      // same loud vocabulary as the streaming provider's perCommitOf —
-      // a typo ('commits', 'per-commit') must not silently flip feed
-      // semantics between surfaces; case-insensitive (the
-      // pre-validation behavior accepted 'Commit')
-      val perCommit = parameters.getOrElse("granularity", "net")
-          .toLowerCase(java.util.Locale.ROOT) match {
-        case "net" => false
-        case "commit" => true
-        case other => sys.error(s"graft-lake change feed: granularity " +
-          s"must be 'net' (default — one net diff of the version range) " +
-          s"or 'commit' (per-version changes tagged _commit_version), " +
-          s"got '$other'")
-      }
+      val (keyCols, perCommit) = PartitionedLake.changeFeedOptions(
+        "graft-lake change feed:", parameters)
       return new LakeFrameRelation(sqlContext,
         PartitionedLake.changesBetweenOn(spark, path, from, to, keyCols,
           perCommit, branch))

@@ -1,10 +1,6 @@
 package graft.io
 
-import java.util.UUID
-
 import org.apache.hadoop.fs.Path
-import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType}
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, CreateNamedStruct, Expression, GetStructField, Literal, UnsafeProjection}
@@ -13,13 +9,10 @@ import org.apache.spark.sql.connector.catalog.MetadataColumn
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics, SupportsRuntimeFiltering}
 import org.apache.spark.sql.connector.write.{DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, SupportsDelta, WriterCommitMessage}
-import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{DataType, DateType, StringType, StructField, StructType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
 
 /** MERGE-ON-READ row-level SQL — the [[SupportsDelta]] counterpart of
   * [[LakeRowLevelOperation]]'s group-based copy-on-write. Where the
@@ -233,39 +226,17 @@ private[io] class LakeDeltaRowLevelOperation(path: String,
       outSchema = requiredSchema
 
     override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-      val (c, r) = filters.partition { f =>
-        LakeFilters.toColumn(f).isDefined &&
-          LakeFilters.compile(f, dtOf).isDefined &&
-          f.references.forall(partCols.contains)
-      }
+      val (c, r, a) = LakeFilters.split(filters, partCols, dtOf)
       claimed = c
       residual = r
-      accepted = filters.filter(f => LakeFilters.toColumn(f).isDefined)
+      accepted = a
       residual
     }
     override def pushedFilters(): Array[Filter] = accepted
 
     override def build(): Scan = {
-      if (pinned.files.valuesIterator.exists(_.exists(_.bytes.isEmpty)))
-        sys.error(s"merge-on-read row-level SQL on $path needs a " +
-          "post-adoption snapshot (per-file byte lengths in the " +
-          "manifest) — run PartitionedLake.compact(spark, path) once " +
-          "to modernize it")
-      if (pinned.files.valuesIterator.exists(_.exists(_.physNames.nonEmpty)))
-        sys.error(s"merge-on-read row-level SQL on $path is not " +
-          "supported while renamed columns' physical-name pins are " +
-          "live — run PartitionedLake.compact(spark, path) first " +
-          "(rewrites files under the current names)")
-      val deltaInfo: Map[String, Seq[(String, Long)]] =
-        if (pinned.deltas.isEmpty) Map.empty
-        else LakeNativeBatchScan.morDeltaInfo(SparkSession.active, path,
-          pinned).getOrElse(sys.error(
-          s"merge-on-read row-level SQL on $path needs the native " +
-            "sidecar merge, but this snapshot's live deltas are not " +
-            "native-eligible (per-directory sidecar bytes over " +
-            s"${LakeNativeBatchScan.MorMaxDeltaBytesPerDir}, or " +
-            "missing sidecar files) — run " +
-            "PartitionedLake.compact(spark, path) first"))
+      val deltaInfo = LakeNativeBatchScan.rowLevelDeltaInfo(
+        SparkSession.active, path, pinned, "merge-on-read row-level SQL")
       val needIdent =
         outSchema.fieldNames.contains(LakeDeltaRowLevel.IdentCol)
       // the inner (parquet-facing) schema: the requested DATA columns,
@@ -400,29 +371,22 @@ private[io] class LakeDeltaWrite(path: String,
   override def toBatch: DeltaBatchWrite = this
   override def description(): String = s"GraftLakeDeltaWrite($path)"
 
-  private val opsRoot =
-    new Path(path, s"_staging/ops-${UUID.randomUUID().toString.take(8)}")
+  private val opsRoot = new StagingRoot(path, "ops-")
 
   override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DeltaWriterFactory = {
-    val spark = SparkSession.active
-    val opSchema = StructType(pinned.schema.fields :+
-      StructField(PartitionedLake.MorOpCol, StringType))
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
-    val owf = new ParquetFileFormat()
-      .prepareWrite(spark, job, Map.empty, opSchema)
-    new LakeDeltaWriterFactory(opsRoot.toString, pinned.schema,
-      writeSchema, identType, partCols :+ keyCol, owf,
-      new SerializableConfiguration(job.getConfiguration))
-  }
+      info: PhysicalWriteInfo): DeltaWriterFactory =
+    new LakeDeltaWriterFactory(opsRoot.path.toString,
+      LakeStagedWrite.prepare(SparkSession.active, StructType(
+        pinned.schema.fields :+
+          StructField(PartitionedLake.MorOpCol, StringType))),
+      pinned.schema, writeSchema, identType, partCols :+ keyCol)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
     // only files named by COMMITTED task attempts participate in the
-    // fold — a retried or speculative attempt's leftover ops file
-    // (possibly truncated, certainly duplicate) must not be read, so
-    // the commit enumerates attempt-reported names rather than listing
-    // the staging directory (the standard DSv2 commit-protocol shape)
+    // fold ([[LakeStagedWrite]]): a retried or speculative
+    // attempt's leftover ops file (possibly truncated, certainly
+    // duplicate) must not be read
     val results = messages.collect { case m: LakeDeltaTaskResult => m }
     val files = results.flatMap(_.files).toSeq
     // matched nothing, inserted nothing: publish nothing (no version
@@ -432,17 +396,14 @@ private[io] class LakeDeltaWrite(path: String,
     // and the (conservative) unconsumed-post-image count — the commit
     // then needs NO separate summary job over the op files (round 19)
     PartitionedLake.commitRowLevelDeltas(spark, path, pinned, partCols,
-      keyCol, opsRoot, files,
+      keyCol, opsRoot.path, files,
       partsHint = Some(results.flatMap(_.parts).distinct.toArray),
       suspectsHint = Some(results.map(_.suspects).sum),
       uOpsHint = Some(results.map(_.uOps).sum))
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = opsRoot.getFileSystem(
-      SparkSession.active.sparkContext.hadoopConfiguration)
-    fs.delete(opsRoot, true)
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    opsRoot.abort()
 }
 
 /** A committed attempt's receipt: its op count, the exact staging
@@ -463,14 +424,14 @@ private[io] case class LakeDeltaTaskResult(ops: Long, files: Seq[String],
   extends WriterCommitMessage
 
 private[io] class LakeDeltaWriterFactory(staging: String,
-    tableSchema: StructType, writeSchema: StructType,
-    identType: StructType, identCols: Seq[String],
-    owf: OutputWriterFactory, conf: SerializableConfiguration)
+    stage: ParquetStage, tableSchema: StructType, writeSchema: StructType,
+    identType: StructType, identCols: Seq[String])
     extends DeltaWriterFactory {
   override def createWriter(partitionId: Int,
       taskId: Long): DeltaWriter[InternalRow] =
-    new LakeDeltaOpsWriter(staging, tableSchema, writeSchema,
-      identType, identCols, owf, conf, partitionId, taskId)
+    new LakeDeltaOpsWriter(new Path(staging),
+      new StagedFile(stage, "ops", partitionId, taskId), tableSchema,
+      writeSchema, identType, identCols)
 }
 
 /** One task's ops file. INSERT rows arrive in the write schema's
@@ -482,14 +443,10 @@ private[io] class LakeDeltaWriterFactory(staging: String,
   * `representUpdateAsDeleteAndInsert`; the defensive implementation
   * preserves its exact semantics anyway.
   */
-private[io] class LakeDeltaOpsWriter(staging: String,
+private[io] class LakeDeltaOpsWriter(staging: Path, file: StagedFile,
     tableSchema: StructType, writeSchema: StructType,
-    identType: StructType, identCols: Seq[String],
-    owf: OutputWriterFactory, conf: SerializableConfiguration,
-    partitionId: Int, taskId: Long) extends DeltaWriter[InternalRow] {
-
-  private val opSchema = StructType(tableSchema.fields :+
-    StructField(PartitionedLake.MorOpCol, StringType))
+    identType: StructType, identCols: Seq[String])
+    extends DeltaWriter[InternalRow] {
 
   // lazy: a pure DELETE's write schema is identity-only (no data
   // row), so binding table columns against it would fail — and its
@@ -512,12 +469,6 @@ private[io] class LakeDeltaOpsWriter(staging: String,
     } :+ (Literal(UTF8String.fromString("D"), StringType): Expression))
       .toIndexedSeq)
 
-  private val taskContext = new TaskAttemptContextImpl(conf.value,
-    new TaskAttemptID(new TaskID(new org.apache.hadoop.mapreduce.JobID(
-      "graft-delta", 0), TaskType.MAP, partitionId), taskId.toInt))
-
-  private var writer: OutputWriter = _
-  private var fileName: String = _
   private var ops = 0L
 
   // task-side commit receipt accounting (round 19): the partition
@@ -563,32 +514,16 @@ private[io] class LakeDeltaOpsWriter(staging: String,
     lastIdent = ident
   }
 
-  private def out(): OutputWriter = {
-    if (writer == null) {
-      // the attempt id (taskId) is part of the name, so two attempts of
-      // one task never collide — and commit() reports exactly this name,
-      // which is how the driver fold excludes the losing attempt's file
-      fileName = f"ops-$partitionId%05d-$taskId" +
-        owf.getFileExtension(taskContext)
-      writer = owf.newInstance(new Path(staging, fileName).toString,
-        opSchema, taskContext)
-    }
-    writer
-  }
-
-  private def closeCurrent(): Unit =
-    if (writer != null) { writer.close(); writer = null }
-
   override def insert(row: InternalRow): Unit = {
     val projected = insertProj(row)
     track("U", projected)
-    out().write(projected); ops += 1
+    file.write(staging, projected); ops += 1
   }
 
   override def delete(meta: InternalRow, id: InternalRow): Unit = {
     val projected = deleteProj(id)
     track("D", projected)
-    out().write(projected); ops += 1
+    file.write(staging, projected); ops += 1
   }
 
   override def update(meta: InternalRow, id: InternalRow,
@@ -596,24 +531,20 @@ private[io] class LakeDeltaOpsWriter(staging: String,
     delete(meta, id); insert(row)
   }
 
+  /** Reports exactly this attempt's file name: the driver fold reads
+    * only committed attempts' names, so a losing attempt's file is
+    * never folded.
+    */
   override def commit(): WriterCommitMessage = {
-    closeCurrent()
+    val name = file.roll().map(_.getName)
     if (ops == 0) LakeDeltaTaskResult(0L, Nil)
-    else LakeDeltaTaskResult(ops, Option(fileName).toSeq,
-      partsSeen.toSeq, suspects, uOps)
+    else LakeDeltaTaskResult(ops, name.toSeq, partsSeen.toSeq, suspects,
+      uOps)
   }
 
   /** A failed attempt deletes its (possibly partial) file — belt to the
     * commit-side braces of reading only committed attempts' names.
     */
-  override def abort(): Unit = {
-    closeCurrent()
-    if (fileName != null) {
-      val p = new Path(staging, fileName)
-      try p.getFileSystem(conf.value).delete(p, false)
-      catch { case _: java.io.IOException => () } // best-effort cleanup
-      fileName = null
-    }
-  }
-  override def close(): Unit = closeCurrent()
+  override def abort(): Unit = file.abort()
+  override def close(): Unit = { file.roll(); () }
 }

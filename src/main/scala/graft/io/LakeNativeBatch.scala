@@ -593,9 +593,14 @@ private[io] object LakeNativeBatchScan {
     * routes to the delegated V1 plan.
     */
   def eligible(m: PartitionedLake.Manifest): Boolean =
-    m.deltas.isEmpty && m.files.nonEmpty &&
-      m.files.valuesIterator.forall(_.forall(e =>
-        e.bytes.isDefined && e.physNames.isEmpty))
+    m.deltas.isEmpty && m.files.nonEmpty && filesReadable(m)
+
+  /** Every file has its byte length and no physical-name pins — the
+    * file shape the native batch reads, deltas or not.
+    */
+  private def filesReadable(m: PartitionedLake.Manifest): Boolean =
+    m.files.valuesIterator.forall(_.forall(e =>
+      e.bytes.isDefined && e.physNames.isEmpty))
 
   /** Per-directory sidecar bytes above which a dirty directory routes
     * to the V1 fallback's DISTRIBUTED anti-join instead of the native
@@ -631,9 +636,7 @@ private[io] object LakeNativeBatchScan {
   def morDeltaInfo(spark: SparkSession, path: String,
       m: PartitionedLake.Manifest)
       : Option[Map[String, Seq[(String, Long)]]] = {
-    val cowOk = m.deltas.nonEmpty &&
-      m.files.valuesIterator.forall(_.forall(e =>
-        e.bytes.isDefined && e.physNames.isEmpty))
+    val cowOk = m.deltas.nonEmpty && filesReadable(m)
     val keyOk = m.mor.exists(identityKeyOk(m, _))
     if (!cowOk || !keyOk) return None
     val cap = SQLConf.get.getConfString(MorMaxDeltaBytesPerDir,
@@ -652,6 +655,39 @@ private[io] object LakeNativeBatchScan {
     } catch {
       case _: java.io.FileNotFoundException => None
     }
+  }
+
+  /** The gate both row-level scans (copy-on-write
+    * [[LakeRowLevelOperation]], merge-on-read
+    * [[LakeDeltaRowLevelOperation]]) pass at build: a snapshot the native
+    * batch cannot read refuses with compact() directions — the V1
+    * fallback has no batch form to serve a row-level scan — and the
+    * live deltas' per-directory sidecars come back for the native merge
+    * (empty when there are none). `what` names the statement kind.
+    */
+  def rowLevelDeltaInfo(spark: SparkSession, path: String,
+      m: PartitionedLake.Manifest, what: String)
+      : Map[String, Seq[(String, Long)]] = {
+    val compact = "run PartitionedLake.compact(spark, path)"
+    val metadataDelete = "partition-scoped DELETE works regardless " +
+      "(metadata retirement)"
+    if (m.files.valuesIterator.exists(_.exists(_.bytes.isEmpty)))
+      sys.error(s"$what on $path needs a post-adoption snapshot " +
+        s"(per-file byte lengths in the manifest) — $compact once to " +
+        "modernize it")
+    if (m.files.valuesIterator.exists(_.exists(_.physNames.nonEmpty)))
+      sys.error(s"$what on $path is not supported while renamed " +
+        "columns' physical-name pins are live (old files need the " +
+        "per-pin-group projection only the V1 read path speaks) — " +
+        s"$compact first (rewrites files under the current names); " +
+        metadataDelete)
+    if (m.deltas.isEmpty) Map.empty
+    else morDeltaInfo(spark, path, m).getOrElse(sys.error(
+      s"$what on $path needs the native merge-on-read read, but this " +
+        "snapshot's live deltas are not native-eligible (per-directory " +
+        s"sidecar bytes over $MorMaxDeltaBytesPerDir, an unhashable " +
+        s"identity key, or missing sidecar files) — $compact first " +
+        s"(materializes the deltas away); $metadataDelete"))
   }
 }
 

@@ -1,25 +1,12 @@
 package graft.io
 
-import java.util.UUID
-
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.hadoop.fs.Path
-import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType}
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression, UnsafeProjection}
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, NullOrdering, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, RowLevelOperation, RowLevelOperationBuilder, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, RowLevelOperation, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.{StringType, StructType}
-import org.apache.spark.util.SerializableConfiguration
+import org.apache.spark.sql.types.StructType
 
 /** SQL UPDATE / MERGE INTO / row-level DELETE for the lake — the
   * GROUP-BASED (copy-on-write) `RowLevelOperation`, where a group is a
@@ -62,17 +49,18 @@ import org.apache.spark.util.SerializableConfiguration
   * Routing: ALWAYS the native batch. Live merge-on-read deltas ride
   * the native sidecar merge (round 16): the scan carries each dirty
   * kept directory's POST-MERGE rows and the commit supersedes its
-  * deltas with the rewrite, so UPDATE/MERGE work mid-ingest; a
-  * snapshot the native merge cannot serve (over-cap sidecars,
-  * unhashable key) and pre-bytes legacy snapshots REFUSE at scan
-  * build with compact() directions — the V1 fallback cannot serve a
-  * row-level scan (no batch form). LakeRowLevelSpec pins the refusal
-  * matrix and the mid-ingest semantics. Partition-only DELETEs never
-  * reach this
-  * class either: the engine's metadata-delete optimization converts
-  * them back to [[GraftLakeTable.deleteWhere]]'s zero-data-job
-  * retirement (`canDeleteWhere` stays the honest gate), which is also
-  * why the refusal must NOT sit in `newRowLevelOperationBuilder` — the
+  * deltas with the rewrite, so UPDATE/MERGE work mid-ingest. Snapshots
+  * the native scan cannot read (pre-bytes legacy entries, live
+  * physical-name pins, deltas the native merge cannot serve) REFUSE at
+  * scan build with compact() directions through the gate both
+  * row-level scans share ([[LakeNativeBatchScan.rowLevelDeltaInfo]]) —
+  * the V1 fallback cannot serve a row-level scan (no batch form).
+  * LakeRowLevelSpec pins the refusal matrix and the mid-ingest
+  * semantics. Partition-only DELETEs never reach this class either:
+  * the engine's metadata-delete optimization converts them back to
+  * [[GraftLakeTable.deleteWhere]]'s zero-data-job retirement
+  * (`canDeleteWhere` stays the honest gate), which is also why the
+  * refusal must NOT sit in `newRowLevelOperationBuilder` — the
   * analyzer constructs the operation before that optimization runs.
   */
 private[io] class LakeRowLevelOperation(path: String,
@@ -120,24 +108,12 @@ private[io] class LakeRowLevelOperation(path: String,
     override def pushedFilters(): Array[Filter] = groupFilters
 
     override def build(): Scan = {
-      // the refusal sits HERE, not in newRowLevelOperationBuilder: the
+      // the refusals sit HERE, not in newRowLevelOperationBuilder: the
       // scan is only built for plans that stay row-level, so a
       // partition-scoped DELETE on a MOR lake still converts to the
       // metadata retirement (the analyzer rewrite constructs the
       // operation BEFORE the metadata-delete optimization can rescue
-      // it — refusing at construction would break those DELETEs)
-      if (pinned.files.valuesIterator.exists(_.exists(_.bytes.isEmpty)))
-        sys.error(s"row-level SQL writes on $path need a post-adoption " +
-          "snapshot (per-file byte lengths in the manifest) — run " +
-          "PartitionedLake.compact(spark, path) once to modernize it")
-      if (pinned.files.valuesIterator.exists(_.exists(_.physNames.nonEmpty)))
-        sys.error(s"row-level SQL writes on $path are not supported " +
-          "while renamed columns' physical-name pins are live (old " +
-          "files need the per-pin-group projection only the V1 read " +
-          "path speaks) — run PartitionedLake.compact(spark, path) " +
-          "first (rewrites files under the current names); " +
-          "partition-scoped DELETE works regardless (metadata " +
-          "retirement)")
+      // it — refusing at construction would break those DELETEs).
       // LIVE MERGE-ON-READ DELTAS ride the native sidecar merge (round
       // 16): the scan carries each dirty kept directory's POST-MERGE
       // rows (base anti-join sidecar keys + 'U' post-images), and the
@@ -146,21 +122,9 @@ private[io] class LakeRowLevelOperation(path: String,
       // the merge read, so UPDATE/MERGE work MID-INGEST, between CDC
       // batches and compaction. Inserts into dirty UNSCANNED
       // directories still refuse inside the commit rebase loop (the
-      // silent-row-loss guard), and a snapshot the native merge cannot
-      // serve (over-cap sidecars, unhashable key) refuses here with
-      // compact directions instead of guessing.
-      val deltaInfo: Map[String, Seq[(String, Long)]] =
-        if (pinned.deltas.isEmpty) Map.empty
-        else LakeNativeBatchScan.morDeltaInfo(SparkSession.active, path,
-          pinned).getOrElse(sys.error(
-          s"row-level SQL writes on $path need the native merge-on-read " +
-            "read, but this snapshot's live deltas are not " +
-            "native-eligible (per-directory sidecar bytes over " +
-            s"${LakeNativeBatchScan.MorMaxDeltaBytesPerDir}, an " +
-            "unhashable identity key, or missing sidecar files) — run " +
-            "PartitionedLake.compact(spark, path) first (materializes " +
-            "the deltas away); partition-scoped DELETE works " +
-            "regardless (metadata retirement)"))
+      // silent-row-loss guard).
+      val deltaInfo = LakeNativeBatchScan.rowLevelDeltaInfo(
+        SparkSession.active, path, pinned, "row-level SQL")
       // ALWAYS the native batch (an empty created lake included — its
       // declared layout names the partition columns); residual = empty
       // disables parquet pushdown AND stats skipping: a group rewrite
@@ -189,31 +153,48 @@ private[io] class LakeRowLevelOperation(path: String,
         "refusing to derive a replaced-directory set")
   }
 
+  /** Re-harvests footer bounds for every column that carried stats in
+    * the pre-rewrite snapshot: without this, an UPDATE/MERGE on a
+    * z-ordered lake would silently strip the rewritten partitions'
+    * bounds from the manifest and file skipping (q157 / readBox) would
+    * degrade to full directory reads there until a compact(statsCols).
+    * statsColsOf covers NUMERIC and STRING bounds — a lake whose
+    * discipline is string-only must not lose it to a rewrite
+    * (LakeStringStatsSpec's sticky sweep pins this path).
+    */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
       override def build(): Write =
-        new LakeReplaceDataWrite(path, pinned, partCols, info.schema(),
-          () => replacedDirs)
+        new LakeReplaceDataWrite(path, "GraftLakeReplaceData", partCols,
+          info.schema(), () => PartitionedLake.statsColsOf(Some(pinned)),
+          (staging, staged) => PartitionedLake.commitReplaceData(
+            SparkSession.active, path, staging.path, staged, replacedDirs,
+            pinned))
     }
 
   override def description(): String = s"GraftLakeRowLevel($cmd, $path)"
 }
 
-/** The ReplaceData batch write: tasks stream their (partition-ordered)
-  * rows into per-directory parquet files under one `_staging/<uuid>`
-  * root — Spark's own [[ParquetFileFormat]] writer, Spark's own
-  * partition-path rendering ([[ExternalCatalogUtils
-  * .getPartitionPathString]] over a session-timezone string cast, the
-  * exact function chain FileFormatWriter's dynamic-partition path
-  * uses) — and the driver commits them through the snapshot protocol.
+/** The partition-ordered staged batch write behind copy-on-write
+  * `ReplaceData` ([[LakeRowLevelOperation]]) and dynamic partition
+  * overwrite (`INSERT OVERWRITE` under
+  * `spark.sql.sources.partitionOverwriteMode=dynamic`, or
+  * `DataFrameWriterV2.overwritePartitions()` — the engine has no V1
+  * exec for it; [[LakeWriteBuilder]]). Tasks stream their rows into
+  * per-directory parquet files under one staging root
+  * ([[LakeStagedRowsWriter]]: one open writer per task via the required
+  * partition-column ordering, bounds re-harvested task-side for
+  * `statsCols`, evaluated when the writer factory is built), and
+  * `publish` commits the committed attempts' files, by directory.
   */
-private[io] class LakeReplaceDataWrite(path: String,
-    old: PartitionedLake.Manifest, partCols: Seq[String],
-    writeSchema: StructType, replacedDirs: () => Set[String])
+private[io] class LakeReplaceDataWrite(path: String, label: String,
+    partCols: Seq[String], writeSchema: StructType,
+    statsCols: () => Seq[String],
+    publish: (StagingRoot, Map[String, Seq[PartitionedLake.FileEntry]]) => Unit)
     extends Write with BatchWrite with RequiresDistributionAndOrdering {
 
   override def toBatch: BatchWrite = this
-  override def description(): String = s"GraftLakeReplaceData($path)"
+  override def description(): String = s"$label($path)"
 
   // per-task clustering of partition values WITHOUT a shuffle: ordering
   // alone guarantees each task sees its directories contiguously, so
@@ -225,282 +206,16 @@ private[io] class LakeReplaceDataWrite(path: String,
     Expressions.sort(Expressions.column(c), SortDirection.ASCENDING,
       NullOrdering.NULLS_FIRST)).toArray
 
-  private val stagingRoot =
-    new Path(path, s"_staging/${UUID.randomUUID()}")
+  private val staging = new StagingRoot(path, "")
 
   override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DataWriterFactory = {
-    val spark = SparkSession.active
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
-    val dataSchema = StructType(
-      writeSchema.fields.filterNot(f => partCols.contains(f.name)))
-    // Spark's parquet write pipeline, configured once on the driver
-    // (compression, ParquetWriteSupport schema, output timestamp type)
-    // and shipped as a serializable factory — not a reimplementation
-    val owf = new ParquetFileFormat()
-      .prepareWrite(spark, job, Map.empty, dataSchema)
-    // re-harvest footer bounds for every column that carried stats in
-    // the pre-rewrite snapshot: without this, an UPDATE/MERGE on a
-    // z-ordered lake would silently strip the rewritten partitions'
-    // bounds from the manifest and file skipping (q157 / readBox)
-    // would degrade to full directory reads there until a
-    // compact(statsCols). The footer read happens task-side on the
-    // just-written (page-cached) file — one metadata read per file.
-    // statsColsOf covers NUMERIC and STRING bounds — a lake whose
-    // discipline is string-only must not lose it to a rewrite
-    // (LakeStringStatsSpec's sticky sweep pins this path)
-    val statsCols = PartitionedLake.statsColsOf(Some(old)).toSet
-      .intersect(dataSchema.fieldNames.toSet)
-    new LakeReplaceDataWriterFactory(stagingRoot.toString, writeSchema,
-      dataSchema, partCols, owf,
-      new SerializableConfiguration(job.getConfiguration),
-      spark.sessionState.conf.sessionLocalTimeZone, statsCols)
-  }
+      info: PhysicalWriteInfo): DataWriterFactory =
+    LakeStagedRowsFactory.prepare(SparkSession.active, staging.path,
+      "part", writeSchema, partCols, statsCols())
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
-    val staged = messages.iterator
-      .flatMap { case m: LakeReplaceTaskResult => m.entries }
-      .toSeq.groupBy(_._1)
-      .map { case (d, es) => d -> es.map(_._2) }
-    PartitionedLake.commitReplaceData(spark, path, stagingRoot, staged,
-      replacedDirs(), old)
-  }
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    publish(staging, LakeStagedRows.fold(messages))
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = stagingRoot.getFileSystem(
-      SparkSession.active.sparkContext.hadoopConfiguration)
-    fs.delete(stagingRoot, true)
-  }
-}
-
-/** Dynamic partition overwrite (`INSERT OVERWRITE` under
-  * `spark.sql.sources.partitionOverwriteMode=dynamic`, or
-  * `DataFrameWriterV2.overwritePartitions()`): a REAL DSv2 batch write
-  * — the engine has no V1 fallback exec for dynamic overwrite — that
-  * stages partitioned parquet through the same task pipeline as the
-  * row-level rewrite ([[LakeReplaceDataWriterFactory]]: one open
-  * writer per task via the required partition-column ordering,
-  * task-side stats re-harvest) and commits ONE snapshot replacing
-  * EXACTLY the partitions the data touched. An empty source overwrites
-  * nothing and publishes nothing (no version churn). The head manifest
-  * is resolved at commit; racing commits into a replaced partition
-  * conflict through the standard rebase check.
-  */
-private[io] class LakeDynamicOverwriteWrite(path: String,
-    partCols: Seq[String], writeSchema: StructType)
-    extends Write with BatchWrite with RequiresDistributionAndOrdering {
-
-  override def toBatch: BatchWrite = this
-  override def description(): String = s"GraftLakeDynamicOverwrite($path)"
-
-  override def requiredDistribution(): Distribution =
-    Distributions.unspecified()
-  override def requiredNumPartitions(): Int = 0
-  override def requiredOrdering(): Array[SortOrder] = partCols.map(c =>
-    Expressions.sort(Expressions.column(c), SortDirection.ASCENDING,
-      NullOrdering.NULLS_FIRST)).toArray
-
-  private val stagingRoot =
-    new Path(path, s"_staging/${UUID.randomUUID()}")
-
-  override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DataWriterFactory = {
-    val spark = SparkSession.active
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
-    val dataSchema = StructType(
-      writeSchema.fields.filterNot(f => partCols.contains(f.name)))
-    val owf = new ParquetFileFormat()
-      .prepareWrite(spark, job, Map.empty, dataSchema)
-    // inherit the snapshot's stats harvest (same rule as ReplaceData):
-    // a backfill into a z-order-maintained lake keeps its file skipping
-    val statsCols = PartitionedLake.statsColsOf(
-      PartitionedLake.manifestAt(spark, path, None)).toSet
-      .intersect(dataSchema.fieldNames.toSet)
-    new LakeReplaceDataWriterFactory(stagingRoot.toString, writeSchema,
-      dataSchema, partCols, owf,
-      new SerializableConfiguration(job.getConfiguration),
-      spark.sessionState.conf.sessionLocalTimeZone, statsCols)
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
-    val staged = messages.iterator
-      .flatMap { case m: LakeReplaceTaskResult => m.entries }
-      .toSeq.groupBy(_._1)
-      .map { case (d, es) => d -> es.map(_._2) }
-    if (staged.isEmpty) { abort(messages); return } // empty source: no-op
-    val old = PartitionedLake.manifestAt(spark, path, None).getOrElse(
-      sys.error(s"cannot dynamic-overwrite the pre-protocol lake at " +
-        s"$path: adopt it first (any PartitionedLake write publishes a " +
-        "manifest)"))
-    PartitionedLake.commitStaged(
-      stagingRoot.getFileSystem(
-        spark.sparkContext.hadoopConfiguration), path, stagingRoot,
-      staged, staged.keySet, writeSchema, Some(old), None)
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = stagingRoot.getFileSystem(
-      SparkSession.active.sparkContext.hadoopConfiguration)
-    fs.delete(stagingRoot, true)
-  }
-}
-
-/** One task's staged files as (directory, manifest entry) pairs. Row
-  * and byte counts ride the message so the driver commit needs zero
-  * footer reads; column bounds are harvested task-side for exactly the
-  * columns the replaced snapshot already carried stats for (see
-  * [[LakeReplaceDataWrite.createBatchWriterFactory]]).
-  */
-private[io] case class LakeReplaceTaskResult(
-    entries: Seq[(String, PartitionedLake.FileEntry)])
-  extends WriterCommitMessage
-
-private[io] class LakeReplaceDataWriterFactory(staging: String,
-    writeSchema: StructType, dataSchema: StructType, partCols: Seq[String],
-    owf: OutputWriterFactory, conf: SerializableConfiguration, tz: String,
-    statsCols: Set[String]) extends DataWriterFactory {
-  override def createWriter(partitionId: Int,
-      taskId: Long): DataWriter[InternalRow] =
-    new LakeReplaceDataWriter(staging, writeSchema, dataSchema, partCols,
-      owf, conf, tz, partitionId, taskId, statsCols)
-}
-
-private[io] class LakeReplaceDataWriter(staging: String,
-    writeSchema: StructType, dataSchema: StructType, partCols: Seq[String],
-    owf: OutputWriterFactory, conf: SerializableConfiguration, tz: String,
-    partitionId: Int, taskId: Long,
-    statsCols: Set[String]) extends DataWriter[InternalRow] {
-
-  // Bound lazily against the FIRST row: a group-based rewrite's query
-  // output PREPENDS bookkeeping columns (`__row_operation` from the
-  // engine's addOperationColumn) ahead of the declared write schema,
-  // and the engine applies its restoring rowProjection only for
-  // connectors that also declare metadata columns — for everyone else
-  // the raw query rows reach the writer. The write schema's fields are
-  // the row's SUFFIX by construction (extras are prepended), so one
-  // arity offset re-aligns every binding.
-  private var fieldOffset = -1
-  private var casters: Seq[Cast] = _
-  private var dataProj: UnsafeProjection = _
-  private def bind(row: InternalRow): Unit = {
-    fieldOffset = row.numFields - writeSchema.length
-    // loud on ANY unexpected layout: today's engine prepends exactly
-    // one bookkeeping column (__row_operation) or none — a wider (or
-    // negative) offset means the suffix-alignment assumption broke
-    // (trailing/reordered extras in a future engine), and a misaligned
-    // binding would write WRONG column values into parquet silently
-    require(fieldOffset == 0 || fieldOffset == 1,
-      s"ReplaceData row has ${row.numFields} fields for a " +
-        s"${writeSchema.length}-column write schema — the one-prepended-" +
-        "bookkeeping-column layout this writer aligns against has " +
-        "changed; refusing rather than bind columns by guesswork")
-    // same-arity layout tripwire: a future engine that APPENDS its one
-    // bookkeeping column passes the arity check above but misaligns
-    // every binding by one. Under the prepend contract field 0 IS the
-    // engine's __row_operation — a non-null int holding one of the
-    // RowDeltaUtils operation constants — so verify exactly that
-    // before trusting the offset (an appended layout would put the
-    // first DATA column at field 0, which fails the null check or the
-    // constant-set check instead of silently writing shifted values)
-    if (fieldOffset == 1) {
-      import org.apache.spark.sql.catalyst.util.RowDeltaUtils._
-      val ops = Set(WRITE_OPERATION, WRITE_WITH_METADATA_OPERATION,
-        REINSERT_OPERATION, INSERT_OPERATION, UPDATE_OPERATION,
-        DELETE_OPERATION)
-      require(!row.isNullAt(0) && ops.contains(row.getInt(0)),
-        "ReplaceData row carries one extra field but field 0 is not a " +
-          "RowDeltaUtils operation constant — the engine no longer " +
-          "PREPENDS its bookkeeping column, so the suffix alignment " +
-          "this writer binds with would write misaligned values; " +
-          "refusing")
-    }
-    // Spark-identical partition path rendering: session-tz string cast
-    // per column + getPartitionPathString (escaping + the
-    // __HIVE_DEFAULT_PARTITION__ null form)
-    casters = partCols.map { c =>
-      val i = writeSchema.fieldIndex(c)
-      Cast(BoundReference(i + fieldOffset, writeSchema(i).dataType,
-        nullable = true), StringType, Option(tz))
-    }
-    dataProj = UnsafeProjection.create(
-      dataSchema.fieldNames.toIndexedSeq.map { n =>
-        val i = writeSchema.fieldIndex(n)
-        BoundReference(i + fieldOffset, writeSchema(i).dataType,
-          nullable = true): Expression
-      })
-  }
-
-  private def dirOf(row: InternalRow): String =
-    partCols.indices.map { j =>
-      val v = casters(j).eval(row)
-      ExternalCatalogUtils.getPartitionPathString(partCols(j),
-        if (v == null) null else v.toString)
-    }.mkString("/")
-
-  private val taskContext = new TaskAttemptContextImpl(conf.value,
-    new TaskAttemptID(new TaskID(new org.apache.hadoop.mapreduce.JobID(
-      "graft-replace", 0), TaskType.MAP, partitionId), taskId.toInt))
-  private val ext = owf.getFileExtension(taskContext)
-
-  private var currentDir: String = _
-  private var writer: OutputWriter = _
-  private var rowsInFile = 0L
-  private var fileSeq = 0
-  private val results =
-    ArrayBuffer.empty[(String, PartitionedLake.FileEntry)]
-
-  private def closeCurrent(): Unit = if (writer != null) {
-    writer.close()
-    val p = new Path(writer.path())
-    val len = p.getFileSystem(conf.value).getFileStatus(p).getLen
-    // bounds for the columns the replaced snapshot carried stats for —
-    // the file was just written by this task, so the footer read is a
-    // page-cache hit, and the rewritten partitions keep their q157/
-    // readBox skipping instead of degrading until the next compact
-    val (stats, strStats) =
-      if (statsCols.isEmpty)
-        (Map.empty[String, (Double, Double)],
-          Map.empty[String, (String, String)])
-      else {
-        val (_, n, st) = PartitionedLake.footerInfo(conf.value, p, statsCols)
-        (n, st)
-      }
-    results += ((currentDir,
-      PartitionedLake.FileEntry(p.getName, stats, Some(rowsInFile),
-        Some(len), strStats = strStats)))
-    writer = null
-  }
-
-  override def write(row: InternalRow): Unit = {
-    if (fieldOffset < 0) bind(row)
-    val d = dirOf(row)
-    if (d != currentDir || writer == null) {
-      closeCurrent()
-      currentDir = d
-      rowsInFile = 0L
-      // task+sequence-unique names; the commit move re-prefixes with
-      // its commit id, and orphaned attempts die with the staging dir
-      val name = f"part-$partitionId%05d-$taskId-$fileSeq$ext"
-      fileSeq += 1
-      writer = owf.newInstance(
-        new Path(new Path(staging, d), name).toString, dataSchema,
-        taskContext)
-    }
-    writer.write(dataProj(row))
-    rowsInFile += 1
-  }
-
-  override def commit(): WriterCommitMessage = {
-    closeCurrent()
-    LakeReplaceTaskResult(results.toSeq)
-  }
-
-  override def abort(): Unit = {
-    if (writer != null) { writer.close(); writer = null }
-    // the files vanish with the staging root (driver-side abort)
-  }
-
-  override def close(): Unit = closeCurrent()
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    staging.abort()
 }

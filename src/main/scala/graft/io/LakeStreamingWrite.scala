@@ -1,18 +1,10 @@
 package graft.io
 
-import java.util.UUID
-
 import org.apache.hadoop.fs.Path
-import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType}
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.util.SerializableConfiguration
 
 /** `df.writeStream.format("graft-lake-v2")` — the NATIVE DSv2
   * streaming sink: every micro-batch commits exactly-once through the
@@ -27,11 +19,11 @@ import org.apache.spark.util.SerializableConfiguration
   * (default: the streaming query's checkpoint-stable id), so a
   * kill-and-restart replaying the last epoch is skipped WHOLE at the
   * manifest — not deduped row-by-row. Within an epoch, task retries
-  * are excluded by the commit-message protocol: tasks stream rows
-  * into per-attempt parquet files under a private epoch staging dir,
-  * the driver folds ONLY files reported by committed attempts, and
-  * aborted attempts delete their files (same shape as
-  * [[LakeDeltaOpsWriter]]).
+  * are excluded by the lake's staged-write protocol: tasks stream rows
+  * into per-attempt flat parquet files under a private epoch staging
+  * dir — the copy-on-write statements' [[LakeStagedRowsWriter]] with
+  * no partition columns — the driver folds ONLY files reported by
+  * committed attempts, and aborted attempts delete their files.
   *
   * Modes, chosen by the query's output mode + options:
   *  - `keyCol` option present → per-epoch keyed UPSERT
@@ -65,29 +57,22 @@ private[io] class LakeStreamingWrite(path: String,
     s"graft-lake-v2 streaming write: keyCol '$k' is not a column of " +
       s"the stream (${writeSchema.fieldNames.mkString(", ")})"))
 
-  private val stagingRoot =
-    new Path(path, s"_staging/stream-${UUID.randomUUID().toString.take(8)}")
+  private val staging = new StagingRoot(path, "stream-")
 
   override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    val spark = SparkSession.active
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
-    val owf = new ParquetFileFormat()
-      .prepareWrite(spark, job, Map.empty, writeSchema)
-    new LakeStreamingWriterFactory(stagingRoot.toString, writeSchema,
-      owf, new SerializableConfiguration(job.getConfiguration))
-  }
+      info: PhysicalWriteInfo): StreamingDataWriterFactory =
+    LakeStagedRowsFactory.prepare(SparkSession.active, staging.path,
+      "rows", writeSchema, partCols = Nil, statsCols = Nil)
 
-  private def epochDir(epochId: Long) = new Path(stagingRoot, s"ep$epochId")
+  private def epochDir(epochId: Long) =
+    LakeStagedRowsFactory.epochDir(staging.path, epochId)
 
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
-    val fs = stagingRoot.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val files = messages.collect {
-      case m: LakeStreamTaskResult => m.files
-    }.flatten.toSeq
+    val fs = staging.fs
+    val files = LakeStagedRows.fold(messages).valuesIterator.flatten
+      .map(_.name).toSeq
     // an empty epoch publishes nothing (no version churn) — the
     // replay guard does not need to see it either: replaying an
     // empty epoch re-publishes nothing
@@ -138,10 +123,7 @@ private[io] class LakeStreamingWrite(path: String,
     // a failed COMMIT retains its staged files (see commit()); a task-
     // level failure before commit has only partial output — clean it
     if (commitFailedEpochs.contains(epochId)) return
-    val fs = stagingRoot.getFileSystem(
-      SparkSession.active.sparkContext.hadoopConfiguration)
-    fs.delete(epochDir(epochId), true)
-    sweepRootIfEmpty(fs)
+    cleanEpoch(staging.fs, epochId)
   }
 
   // the per-write staging root should not outlive the stream as empty
@@ -150,72 +132,7 @@ private[io] class LakeStreamingWrite(path: String,
   private def sweepRootIfEmpty(
       fs: org.apache.hadoop.fs.FileSystem): Unit =
     try {
-      if (fs.exists(stagingRoot) && fs.listStatus(stagingRoot).isEmpty)
-        fs.delete(stagingRoot, false)
+      if (fs.exists(staging.path) && fs.listStatus(staging.path).isEmpty)
+        fs.delete(staging.path, false)
     } catch { case _: java.io.IOException => () }
-}
-
-/** A committed attempt's receipt: the staged file name(s) it wrote
-  * (within its epoch's staging dir). The driver folds only these.
-  */
-private[io] case class LakeStreamTaskResult(files: Seq[String])
-  extends WriterCommitMessage
-
-private[io] class LakeStreamingWriterFactory(stagingRoot: String,
-    schema: StructType, owf: OutputWriterFactory,
-    conf: SerializableConfiguration) extends StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] =
-    new LakeStreamTaskWriter(
-      new Path(stagingRoot, s"ep$epochId").toString, schema, owf, conf,
-      partitionId, taskId)
-}
-
-/** One task attempt's flat parquet file of this epoch's rows
-  * (partition values ride as ordinary columns; the driver commit
-  * produces the partitioned layout). The attempt id is part of the
-  * file name, so retried attempts never collide and the driver can
-  * fold exactly the committed ones.
-  */
-private[io] class LakeStreamTaskWriter(epochDir: String,
-    schema: StructType, owf: OutputWriterFactory,
-    conf: SerializableConfiguration, partitionId: Int, taskId: Long)
-    extends DataWriter[InternalRow] {
-
-  private val taskContext = new TaskAttemptContextImpl(conf.value,
-    new TaskAttemptID(new TaskID(new org.apache.hadoop.mapreduce.JobID(
-      "graft-stream", 0), TaskType.MAP, partitionId), taskId.toInt))
-
-  private var writer: OutputWriter = _
-  private var fileName: String = _
-
-  override def write(row: InternalRow): Unit = {
-    if (writer == null) {
-      fileName = f"rows-$partitionId%05d-$taskId" +
-        owf.getFileExtension(taskContext)
-      writer = owf.newInstance(new Path(epochDir, fileName).toString,
-        schema, taskContext)
-    }
-    writer.write(row)
-  }
-
-  private def closeCurrent(): Unit =
-    if (writer != null) { writer.close(); writer = null }
-
-  override def commit(): WriterCommitMessage = {
-    closeCurrent()
-    LakeStreamTaskResult(Option(fileName).toSeq)
-  }
-
-  override def abort(): Unit = {
-    closeCurrent()
-    if (fileName != null) {
-      val p = new Path(epochDir, fileName)
-      try p.getFileSystem(conf.value).delete(p, false)
-      catch { case _: java.io.IOException => () } // best-effort
-      fileName = null
-    }
-  }
-
-  override def close(): Unit = closeCurrent()
 }

@@ -188,6 +188,21 @@ private[io] object LakeFilters {
     case _ => None
   }
 
+  /** A scan builder's pushed filters as (claimed, residual, accepted):
+    * claimed filters reference only `partCols` and compile exactly
+    * ([[compile]]), the rest are residual, and accepted are those with a
+    * [[toColumn]] translation ([[LakeScanBuilder.pushFilters]] says what
+    * each set does).
+    */
+  def split(filters: Array[Filter], partCols: Seq[String],
+      dt: String => Option[org.apache.spark.sql.types.DataType])
+      : (Array[Filter], Array[Filter], Array[Filter]) = {
+    val (claimed, residual) = filters.partition(f =>
+      toColumn(f).isDefined && compile(f, dt).isDefined &&
+        f.references.forall(partCols.contains))
+    (claimed, residual, filters.filter(f => toColumn(f).isDefined))
+  }
+
   /** Compile a v1 `Filter` into an EXACT three-valued (Kleene)
     * evaluator over TYPED partition values — the engine-grade
     * semantics that let [[LakeScanBuilder]] CLAIM a partition-column
@@ -716,9 +731,12 @@ private[io] class GraftLakeTable(path: String, version: Option[Long],
   *    [[PartitionedLake.overwritePartitions]] (replace exactly the
   *    matched directories, one commit; sub-partition predicates refuse
   *    at write planning with MERGE/upsert directions);
-  *  - dynamic mode is the one REAL batch write here
-  *    ([[LakeDynamicOverwriteWrite]] — the engine has no V1 exec for
-  *    `OverwritePartitionsDynamic`).
+  *  - dynamic mode is the one REAL batch write here — the engine has
+  *    no V1 exec for `OverwritePartitionsDynamic` — and shares the
+  *    copy-on-write statements' staged write ([[LakeReplaceDataWrite]]):
+  *    it replaces exactly the partitions the data touched, resolving
+  *    the head manifest at commit, and an empty source publishes
+  *    nothing.
   *
   * Every route inherits the snapshot's stats harvest
   * ([[PartitionedLake.statsColsOf]]) so SQL writes keep a z-order-
@@ -781,9 +799,32 @@ private[io] class LakeWriteBuilder(path: String, partitionCols: Seq[String],
       writerId, writeSchema, complete = overwriteAll)
   }
 
+  /** Dynamic overwrite's commit: one snapshot replacing exactly the
+    * directories the data touched, over the head manifest resolved now
+    * (racing commits into a replaced partition conflict through the
+    * standard rebase check); an empty source publishes nothing (no
+    * version churn).
+    */
+  private def commitDynamic(staging: StagingRoot,
+      staged: Map[String, Seq[PartitionedLake.FileEntry]]): Unit =
+    if (staged.isEmpty) staging.abort()
+    else {
+      val old = PartitionedLake.manifestAt(SparkSession.active, path, None)
+        .getOrElse(sys.error(s"cannot dynamic-overwrite the pre-protocol " +
+          s"lake at $path: adopt it first (any PartitionedLake write " +
+          "publishes a manifest)"))
+      PartitionedLake.commitStaged(staging.fs, path, staging.path, staged,
+        staged.keySet, writeSchema, Some(old), None)
+    }
+
   override def build(): org.apache.spark.sql.connector.write.Write =
-    if (dynamic) new LakeDynamicOverwriteWrite(path, partitionCols,
-      writeSchema)
+    if (dynamic) new LakeReplaceDataWrite(path, "GraftLakeDynamicOverwrite",
+      partitionCols, writeSchema,
+      // inherit the snapshot's stats harvest (same rule as ReplaceData):
+      // a backfill into a z-order-maintained lake keeps its file skipping
+      () => PartitionedLake.statsColsOf(
+        PartitionedLake.manifestAt(SparkSession.active, path, None)),
+      commitDynamic)
     else new V1Write {
       override def toStreaming
           : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
@@ -841,14 +882,10 @@ private[io] class LakeScanBuilder(path: String, version: Option[Long],
     *  - residual opaque: engine-only.
     */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (c, r) = filters.partition { f =>
-      LakeFilters.toColumn(f).isDefined &&
-        LakeFilters.compile(f, dtOf).isDefined &&
-        f.references.forall(partCols.contains)
-    }
+    val (c, r, a) = LakeFilters.split(filters, partCols, dtOf)
     claimed = c
     residual = r
-    accepted = filters.filter(f => LakeFilters.toColumn(f).isDefined)
+    accepted = a
     residual
   }
   override def pushedFilters(): Array[Filter] = accepted
@@ -1569,16 +1606,8 @@ class LakeCatalog extends TableCatalog
     def version(k: String): Long = LakeIdent.resolveVersion(spark, id.base,
       need(k), id.branch, s"#changes $k")
     val (from, to) = (version("from"), version("to"))
-    val keyCols = need("keyCols").split(',').map(_.trim)
-      .filter(_.nonEmpty).toSeq
-    if (keyCols.isEmpty) sys.error(s"#changes keyCols is empty: $usage")
-    val perCommit = params.getOrElse("granularity", "net")
-        .toLowerCase(java.util.Locale.ROOT) match {
-      case "net" => false
-      case "commit" => true
-      case other => sys.error(s"#changes granularity must be 'net' or " +
-        s"'commit', got '$other': $usage")
-    }
+    val (keyCols, perCommit) =
+      PartitionedLake.changeFeedOptions("#changes", params)
     // a pin is reconciled with the ambient conf HERE (a conflict refuses
     // at load); an unpinned feed resolves the ambient conf when the scan
     // builds its frame, as every unpinned read does.

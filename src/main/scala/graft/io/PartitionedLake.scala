@@ -2967,6 +2967,32 @@ object PartitionedLake {
     changesBetweenOn(spark, path, fromVersion, toVersion, keyCols,
       perCommit = false, activeBranch())
 
+  /** The change feed's two options, parsed one way on every surface
+    * (`graft-lake`'s `changesFrom`/`changesTo` read, `<lake>#changes?`,
+    * `graft-lake-cdf`): `keyCols` is the comma-separated row identity
+    * and names at least one column; `granularity` is `net` (the
+    * default) or `commit`, case-insensitive, and anything else refuses
+    * — a typo ('commits', 'per-commit') must not silently flip feed
+    * semantics between surfaces. `where` starts every message. Returns
+    * (keyCols, perCommit).
+    */
+  private[graft] def changeFeedOptions(where: String,
+      params: Map[String, String]): (Seq[String], Boolean) = {
+    val keyCols = params.get("keyCols").toSeq.flatMap(_.split(','))
+      .map(_.trim).filter(_.nonEmpty)
+    if (keyCols.isEmpty) sys.error(s"$where keyCols is required: the " +
+      "comma-separated row identity, e.g. keyCols=part,k")
+    val perCommit = params.getOrElse("granularity", "net")
+        .toLowerCase(java.util.Locale.ROOT) match {
+      case "net" => false
+      case "commit" => true
+      case other => sys.error(s"$where granularity must be 'net' " +
+        "(default — one net diff of the version range) or 'commit' " +
+        s"(per-version changes tagged _commit_version), got '$other'")
+    }
+    (keyCols, perCommit)
+  }
+
   /** The explicit-branch seam both CDF granularities resolve through —
     * what the per-read `#branch=<name>#changes` pin routes to (the
     * public overloads pass the ambient conf, verbatim old behavior).
@@ -4415,8 +4441,10 @@ object PartitionedLake {
     * Idempotent under micro-batch replay (the foreachBatch redelivery
     * contract): 'U' re-applies to the same value, a replayed 'D' finds
     * no row, and within one batch `cdcApply`'s latest-wins collapse
-    * orders replayed ops by `seq`. Same key-partition stability contract
-    * as [[upsert]].
+    * orders replayed ops by `seq`. Ops are ordered by `seq` within a
+    * batch ONLY: across batches the source's order stands, so a stale
+    * op arriving in a later batch than its successor overwrites it.
+    * Same key-partition stability contract as [[upsert]].
     */
   def cdcSink(spark: SparkSession, path: String, partitionCol: String,
       keyCol: String, valueCol: String, ops: DataFrame,

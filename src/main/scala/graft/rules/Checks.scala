@@ -1,5 +1,6 @@
 package graft.rules
 
+import graft.core.ValidationError
 import graft.types.CellType
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -342,7 +343,7 @@ object RuleEvaluator {
     val present = sheet.columns.toSet
     val usable = rules.filter(_.inputs.forall(present.contains))
     if (usable.isEmpty)
-      return graft.core.ValidationError.empty(sheet.sparkSession)
+      return ValidationError.empty(sheet.sparkSession)
     // project each referenced column's CellType parse ONCE ("parse once,
     // branch many"): every rule column needs its memos for the rendered
     // Column_Value, plus whatever the predicates declare. CollapseProject
@@ -431,7 +432,7 @@ object RuleEvaluator {
       .select(
         lit("Error").as("Message_Type"),
         lit(sheetName).as("CSV_Sheet_Name"),
-        lit(-3L).as("Row_Index"),
+        lit(ValidationError.DupIdRowIndex).as("Row_Index"),
         lit(column).as("Column_Name"),
         col("Column_Value"),
         concat(lit("Id is repeated "), col("n").cast("string"),

@@ -66,16 +66,9 @@ class LakeChangeFeedProvider extends StreamSourceProvider with DataSourceRegiste
     parameters.getOrElse("path",
       sys.error("graft-lake-cdf requires .option(\"path\", <lake root>)"))
 
-  private def perCommitOf(parameters: Map[String, String]): Boolean =
-    parameters.getOrElse("granularity", "net")
-        .toLowerCase(java.util.Locale.ROOT) match {
-      case "net" => false
-      case "commit" => true
-      case other => sys.error(s"graft-lake-cdf: granularity must be " +
-        s"'net' (default — each batch is the net diff of its version " +
-        s"range) or 'commit' (per-version changes tagged " +
-        s"_commit_version), got '$other'")
-    }
+  private def optionsOf(parameters: Map[String, String])
+      : (Seq[String], Boolean) =
+    PartitionedLake.changeFeedOptions("graft-lake-cdf:", parameters)
 
   private def feedSchema(sqlContext: SQLContext, path: String,
       perCommit: Boolean): StructType = {
@@ -92,15 +85,13 @@ class LakeChangeFeedProvider extends StreamSourceProvider with DataSourceRegiste
       schema: Option[StructType], providerName: String,
       parameters: Map[String, String]): (String, StructType) =
     (shortName(), schema.getOrElse(
-      feedSchema(sqlContext, pathOf(parameters), perCommitOf(parameters))))
+      feedSchema(sqlContext, pathOf(parameters), optionsOf(parameters)._2)))
 
   override def createSource(sqlContext: SQLContext, metadataPath: String,
       schema: Option[StructType], providerName: String,
       parameters: Map[String, String]): Source = {
     val path = pathOf(parameters)
-    val keyCols = parameters.getOrElse("keyCols", sys.error(
-      "graft-lake-cdf requires .option(\"keyCols\", \"part,...,key\")"))
-      .split(',').map(_.trim).filter(_.nonEmpty).toSeq
+    val (keyCols, perCommit) = optionsOf(parameters)
     val start = parameters.getOrElse("startingVersion", "0") match {
       case "latest" => PartitionedLake
         .snapshots(sqlContext.sparkSession, path).lastOption.getOrElse(0L)
@@ -109,7 +100,6 @@ class LakeChangeFeedProvider extends StreamSourceProvider with DataSourceRegiste
     val maxVersions = parameters.get("maxVersionsPerTrigger").map(_.toLong)
     maxVersions.foreach(m => require(m > 0,
       s"maxVersionsPerTrigger must be positive, got $m"))
-    val perCommit = perCommitOf(parameters)
     new LakeChangeFeedSource(sqlContext, path, keyCols, start,
       schema.getOrElse(feedSchema(sqlContext, path, perCommit)), maxVersions,
       metadataPath, perCommit)

@@ -440,9 +440,16 @@ class PartitionedLakeSpec extends AnyFunSuite {
       q.processAllAvailable() // micro-batch 1: b1 alone
       // micro-batch 2 REPLAYS b1 in full alongside b2 (the foreachBatch
       // redelivery contract): replayed U re-applies, replayed D finds no
-      // row, and b2's seq-200 op must win over the replayed seq-100 one
-      b1.union(b2).write.mode("append").parquet(opsDir)
+      // row, and b2's seq-200 op must win over the replayed seq-100 one.
+      // One file: the file source can list part of a multi-file append,
+      // which would split the replay over two micro-batches
+      b1.union(b2).coalesce(1).write.mode("append").parquet(opsDir)
       q.processAllAvailable()
+      // the premise: exactly two batches read ops, and the second read
+      // all 5 — 5/2 of the first batch's 2 (numInputRows counts every
+      // scan of a batch, and the sink scans each batch more than once)
+      val read = q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq
+      assert(read.size === 2 && read(1) * 2 === read(0) * 5, read)
     } finally q.stop()
 
     // the lake must equal the one-shot batch fold of the whole op log

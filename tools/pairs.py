@@ -18,9 +18,15 @@ appended to the `--log` file (JSON lines) as it finishes, so
 For each workload and each gated metric (BENCHMARK.json `end_to_end`, read
 from the change checkout, or from the repo this script sits in when only
 summarizing) it prints both sides' medians and quartiles, the pairs the
-change wins, and whether the claim rule holds: the change wins at least
-9 of 10 pairs, its median beats the parent's by more than the parent's
-IQR, and no run failed.
+change wins, whether the claim rule holds (the change wins at least 9 of
+10 pairs, its median beats the parent's by more than the parent's IQR,
+and no run failed) and the no-regression verdict against the metric's
+`bound`:
+  ok          the change's median is no worse than the parent's by more
+              than `bound` times the parent's median;
+  unresolved  otherwise, when the parent's IQR exceeds `bound` times its
+              median and not every change run beats every parent run;
+  worse       neither.
 """
 import argparse
 import json
@@ -72,13 +78,29 @@ def order_of(index):
     return ("parent", "change") if index % 2 == 0 else ("change", "parent")
 
 
-def summarize(records, gated):
+def verdict(par, chg, better, bound):
+    """The no-regression verdict (module doc) for one metric's runs."""
+    sign = 1.0 if better == "lower" else -1.0
+    pmed, cmed = percentile(par, 50), percentile(chg, 50)
+    if sign * (cmed - pmed) <= bound * abs(pmed):
+        return "ok"
+    spread = percentile(par, 75) - percentile(par, 25)
+    beats_all = all(sign * (p - c) > 0 for p in par for c in chg)
+    if spread > bound * abs(pmed) and not beats_all:
+        return "unresolved"
+    return "worse"
+
+
+def summarize(records, gated, bounds=None):
     """Per (workload, metric) figures from run records.
 
     `records`: dicts with workload, seed, side and result (a parsed result
-    line or None). `gated`: {metric: "lower" | "higher"}. Returns a list of
-    dicts, one per workload and metric, in first-seen workload order.
+    line or None). `gated`: {metric: "lower" | "higher"}. `bounds`:
+    {metric: relative bound}; a metric with a bound gets a `verdict`.
+    Returns a list of dicts, one per workload and metric, in first-seen
+    workload order.
     """
+    bounds = bounds or {}
     rows = []
     workloads = list(dict.fromkeys(r["workload"] for r in records))
     for w in workloads:
@@ -108,6 +130,8 @@ def summarize(records, gated):
                 "parent_q": pq, "change_q": cq, "wins": wins,
                 "gap": gap, "parent_iqr": iqr,
                 "holds": failures == 0 and wins * 10 >= 9 * len(pairs) and gap > iqr,
+                "verdict": (verdict(par, chg, better, bounds[metric])
+                            if metric in bounds else None),
             })
     return rows
 
@@ -127,13 +151,22 @@ def render(rows):
             f"({(cq[1] - pq[1]) / pq[1] * 100:+.1f}%); "
             f"change wins {r['wins']}/{r['pairs']}, gap {r['gap']:.4g} vs parent IQR "
             f"{r['parent_iqr']:.4g}, failed runs {r['failures']}; "
-            f"rule {'holds' if r['holds'] else 'does not hold'}")
+            f"rule {'holds' if r['holds'] else 'does not hold'}"
+            + (f"; no-regression {r['verdict']}" if r["verdict"] else ""))
     return "\n".join(out)
 
 
-def gated_metrics(root):
+def end_to_end(root):
     with open(os.path.join(root, "BENCHMARK.json")) as f:
-        return {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
+        return json.load(f)["end_to_end"]
+
+
+def gated_metrics(root):
+    return {m["name"]: m["better"] for m in end_to_end(root)}
+
+
+def metric_bounds(root):
+    return {m["name"]: m["bound"] for m in end_to_end(root) if "bound" in m}
 
 
 def run_one(checkout, workload, seed):
@@ -161,7 +194,9 @@ def main(argv=None):
                     help="print the table for an earlier log; run nothing")
     a = ap.parse_args(argv)
     if a.summarize:
-        print(render(summarize(read_log(a.summarize), gated_metrics(os.path.dirname(HERE)))))
+        root = os.path.dirname(HERE)
+        print(render(summarize(read_log(a.summarize), gated_metrics(root),
+                               metric_bounds(root))))
         return 0
     if not (a.parent and a.change) or len(a.workload) != len(a.seeds) or not a.workload:
         ap.error("give PARENT, CHANGE and one --seeds per --workload")
@@ -178,7 +213,7 @@ def main(argv=None):
                         f.write(json.dumps(rec) + "\n")
                 print(f"{workload} seed {seed} {side}: "
                       f"{'FAILED' if failed(rec['result']) else 'ok'}", flush=True)
-    print(render(summarize(records, gated_metrics(a.change))))
+    print(render(summarize(records, gated_metrics(a.change), metric_bounds(a.change))))
     return 0
 
 

@@ -90,6 +90,52 @@ class SummarizeTest(unittest.TestCase):
         self.assertEqual(cpu["pairs"], 1)
         self.assertFalse(cpu["holds"])
 
+    def test_no_regression_ok_within_the_bound(self):
+        parent = [line(v) for v in (60.0, 61.0, 62.0, 63.0, 64.0)]
+        # median 62 -> 76.5: +23% against a 25% bound
+        change = [line(v) for v in (75.0, 76.0, 76.5, 77.0, 78.0)]
+        rows = pairs.summarize(records("w", parent, change), GATED,
+                               {"pass_cpu_s": 0.25, "live_heap_mb": 0.1})
+        self.assertEqual([r["verdict"] for r in rows], ["ok", "ok"])
+        text = pairs.render(rows)
+        self.assertIn("no-regression ok", text)
+
+    def test_no_regression_worse_past_the_bound_with_a_tight_parent(self):
+        parent = [line(v) for v in (60.0, 61.0, 62.0, 63.0, 64.0)]
+        # +30% against a 25% bound; parent IQR 2 is well inside the bound
+        change = [line(v) for v in (80.0, 80.5, 80.6, 81.0, 82.0)]
+        cpu = pairs.summarize(records("w", parent, change), GATED,
+                              {"pass_cpu_s": 0.25})[0]
+        self.assertEqual(cpu["verdict"], "worse")
+
+    def test_no_regression_unresolved_when_the_parent_spreads_past_the_bound(self):
+        # parent median 60, IQR 40 - 90 = 50 (> 25% of 60)
+        parent = [line(v) for v in (30.0, 40.0, 60.0, 90.0, 100.0)]
+        change = [line(v) for v in (35.0, 80.0, 80.0, 85.0, 95.0)]
+        cpu = pairs.summarize(records("w", parent, change), GATED,
+                              {"pass_cpu_s": 0.25})[0]
+        self.assertEqual(cpu["verdict"], "unresolved")
+
+    def test_no_regression_runs_higher_is_better_metrics_the_other_way(self):
+        parent = [line(1.0, heap=v) for v in (100.0, 101.0, 102.0)]
+        lower = [line(1.0, heap=v) for v in (80.0, 81.0, 82.0)]
+        higher = [line(1.0, heap=v) for v in (120.0, 121.0, 122.0)]
+        gated = {"live_heap_mb": "higher"}
+        self.assertEqual(pairs.summarize(records("w", parent, lower), gated,
+                                         {"live_heap_mb": 0.1})[0]["verdict"], "worse")
+        self.assertEqual(pairs.summarize(records("w", parent, higher), gated,
+                                         {"live_heap_mb": 0.1})[0]["verdict"], "ok")
+        # no bound given: no verdict, and render says nothing of it
+        rows = pairs.summarize(records("w", parent, higher), gated)
+        self.assertIsNone(rows[0]["verdict"])
+        self.assertNotIn("no-regression", pairs.render(rows))
+
+    def test_bounds_come_from_benchmark_json(self):
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        bounds = pairs.metric_bounds(root)
+        self.assertEqual(set(bounds), set(pairs.gated_metrics(root)))
+        self.assertTrue(all(0 < b < 1 for b in bounds.values()))
+
     def test_summarize_reads_a_log(self):
         recs = records("submission_dirty", [line(63.0)], [line(58.0)])
         with tempfile.TemporaryDirectory() as d:
