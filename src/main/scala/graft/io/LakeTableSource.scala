@@ -458,24 +458,23 @@ private[io] object LakeFilters {
   *    data files, no jobs). Degrades to a real scan in every other
   *    case, never to a wrong answer — exactly
   *    [[PartitionedLake.rowCount]]'s None contract.
-  *  - everything else -> [[LakeV1FallbackScan]], a `V1Scan` handing the
+  *  - a snapshot the native batch can express exactly
+  *    ([[LakeNativeBatchScan.eligible]]: no live deltas, byte lengths on
+  *    every file, no physical-name pins) -> [[LakeNativeBatchScan]], the
+  *    DSv2 file batch: claimed partition filters and footer bounds
+  *    prune directories and files at planning, and runtime filters
+  *    (DPP) prune them again at execution;
+  *  - a DIRTY (merge-on-read) snapshot whose sidecars fit the task-side
+  *    merge ([[LakeNativeBatchScan.morDeltaInfo]]) -> the same native
+  *    batch, merging each dirty directory's log inside its tasks;
+  *  - everything else (adopted legacy files, renamed columns' pins,
+  *    oversized logs) -> [[LakeV1FallbackScan]], a `V1Scan` handing the
   *    engine the SAME delegated DataFrame plan the Scala API and the v1
   *    format build (manifest-scoped file list, merge-on-read merging,
-  *    pruned columns, pushed partition predicates) — DSv2 read == v1
-  *    read == API read by construction, not by parallel implementation
-  *    (the JDBC/Delta migration shim, used here for the same reason:
-  *    a derived DataFrame plan cannot be expressed as DSv2 file
-  *    partitions).
-  *
-  * Known limitation, documented honestly: STATIC partition pruning is
-  * complete (claimed filters prune directories before the scan), but
-  * DYNAMIC partition pruning / runtime filters (a join-driven bloom on
-  * the partition key) do not reach the manifest-scoped file list — the
-  * V1Scan shim has no `SupportsRuntimeFiltering` seam. A selective
-  * dim-driven fact prune should filter the dimension FIRST and pass the
-  * resulting keys as a static `IN` predicate (which claims and prunes),
-  * or read through the bucketed-table path (io/Bucketing) where the
-  * engine's own DPP applies.
+  *    pruned columns, pushed partition predicates). Static partition
+  *    pruning is complete there, but runtime filters do not reach its
+  *    file list — the V1Scan shim has no `SupportsRuntimeFiltering`
+  *    seam; `compact()` restores the native route.
   */
 private[io] class GraftLakeTable(path: String, version: Option[Long],
     branchPin: Option[String] = None)
@@ -1850,11 +1849,13 @@ class LakeCatalog extends TableCatalog
             "top-level columns only, got nested field " +
             u.fieldNames().mkString("."))
         // SET rewrites the CURRENT default (future inserts); DROP
-        // arrives as an empty string. The EXISTENCE default — what old
-        // files read — stays pinned at its ADD-time value by design.
+        // arrives as no default or one with empty SQL text. The
+        // EXISTENCE default — what old files read — stays pinned at its
+        // ADD-time value by design.
         PartitionedLake.setColumnCurrentDefault(spark, path,
           u.fieldNames().head,
-          Option(u.newDefaultValue()).map(_.trim).filter(_.nonEmpty))
+          Option(u.newCurrentDefault()).flatMap(d => Option(d.getSql))
+            .map(_.trim).filter(_.nonEmpty))
       case ac: TableChange.AddConstraint =>
         ac.constraint() match {
           case c: org.apache.spark.sql.connector.catalog.constraints

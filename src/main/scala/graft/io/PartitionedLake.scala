@@ -254,7 +254,7 @@ object PartitionedLake {
     * stay broadcast-sized (both the fold and every merged read
     * broadcast the log identities). These knobs turn that contract
     * from a comment into a MECHANISM, enforced at every commit that
-    * publishes a log ([[cdcSinkMergeOnRead]], [[commitRowLevelDeltas]]):
+    * publishes a log (both writers publish through [[publishMorLog]]):
     * a partition whose post-commit log would exceed `maxRows` either
     * auto-compacts right after the commit (`onExceed=compact`, the
     * default — the lake keeps absorbing batches at bounded read cost)
@@ -263,7 +263,7 @@ object PartitionedLake {
     * breach surfaced, not absorbed). `maxRows <= 0` disables the
     * governor. The check costs nothing: the staged log's per-file row
     * counts are already harvested from parquet footers at stage time,
-    * and the fold re-emits each touched partition's WHOLE log, so the
+    * and the publish stages each touched partition's WHOLE log, so the
     * staged counts ARE the post-commit accumulation.
     */
   val MorLogMaxRowsKey = "spark.graft.lake.morLog.maxRows"
@@ -1244,6 +1244,33 @@ object PartitionedLake {
         "readable and the change feed stays consistent.")
   }
 
+  /** Additive schema evolution — the one gate every incremental data
+    * write ([[append]], [[upsert]], [[overwritePartitions]]) passes.
+    * The `incoming` frame may CARRY NEW COLUMNS (the snapshot schema
+    * widens; parquet's by-name reads give old files null there, so the
+    * whole lake surfaces them) and may OMIT lake columns (nulls). A
+    * column present in both MUST keep its type — refused here, not left
+    * to union analysis, because union quietly COERCES (long + double ->
+    * double) and the widened schema would then fail against untouched
+    * partitions' old files at read time, poisoning the lake. A write
+    * that LOOKS like a rename refuses too ([[refuseSuspectedRename]]).
+    * Returns the widened schema: the lake's columns (lake types), then
+    * the incoming frame's new ones; `what` names the incoming side.
+    */
+  private def evolvedSchema(lake: StructType, incoming: StructType,
+      what: String): StructType = {
+    val conflicts = incoming.filter(f =>
+      lake.fieldNames.contains(f.name) && lake(f.name).dataType != f.dataType)
+    require(conflicts.isEmpty,
+      "type change is not supported (only additive evolution): " +
+        conflicts.map(f => s"${f.name}: lake has " +
+          s"${lake(f.name).dataType.simpleString}, $what has " +
+          s"${f.dataType.simpleString}").mkString("; "))
+    refuseSuspectedRename(lake, incoming, what)
+    StructType(lake.fields ++
+      incoming.fields.filterNot(f => lake.fieldNames.contains(f.name)))
+  }
+
   /** Extend (or create) the stable column-id mapping so it covers every
     * field of `schema`: existing entries keep their ids (including any
     * entries for names outside the schema — a FUTURE writer's extras
@@ -1619,6 +1646,32 @@ object PartitionedLake {
         "shallower than the physical layout?")
   }
 
+  /** The head an incremental writer ([[append]], [[upsert]], [[cdcSink]],
+    * [[cdcSinkMergeOnRead]]) commits on top of: the latest manifest, a
+    * pre-protocol lake adopted first ([[manifestOrMigrate]]).
+    *
+    * None SKIPS the batch: `batchId` is at or below the high-water mark
+    * `writerId`'s manifest slot records, so a redelivered micro-batch is
+    * skipped whole — the TRANSACTION-level replay guard that makes the
+    * writers exactly-once under `foreachBatch`/streaming-sink replay,
+    * keyed by writer so one streaming query's guard never swallows
+    * another's batches. `Some(None)` is an absent lake, which each
+    * writer handles its own way (bootstrap or no-op). A present head's
+    * partition layout must match the writer's `partitionCols` (`what`
+    * labels the refusal).
+    */
+  private def headFor(spark: SparkSession, fs: FileSystem, path: String,
+      partitionCols: Seq[String], batchId: Option[Long], writerId: String,
+      what: String): Option[Option[Manifest]] = {
+    val head = manifestOrMigrate(spark, fs, path, partitionCols.size)
+    if (batchId.exists(b => head.exists(_.txns.get(writerId).exists(_ >= b))))
+      None
+    else {
+      requireLayoutMatch(head, partitionCols, what)
+      Some(head)
+    }
+  }
+
   /** Full-snapshot write (overwrite semantics): every previously-live file
     * is superseded; directories the new snapshot no longer uses are
     * de-referenced by the manifest and stay on disk for pinned readers,
@@ -1714,16 +1767,7 @@ object PartitionedLake {
         s"that the exact evaluator can claim; got: " +
         s"${unclaimable.mkString(", ")} — for row-scoped rewrites use " +
         "MERGE INTO / UPDATE (the group-based rewrite) or the API upsert")
-    // same additive-evolution gate as append
-    val conflicts = df.schema.filter(f =>
-      old.schema.fieldNames.contains(f.name) &&
-        old.schema(f.name).dataType != f.dataType)
-    require(conflicts.isEmpty,
-      "type change is not supported (only additive evolution): " +
-        conflicts.map(_.name).mkString(", "))
-    refuseSuspectedRename(old.schema, df.schema, "INSERT OVERWRITE")
-    val schema = StructType(old.schema.fields ++ df.schema.fields
-      .filterNot(f => old.schema.fieldNames.contains(f.name)))
+    val schema = evolvedSchema(old.schema, df.schema, "INSERT OVERWRITE")
     val preds = filters.map(f => LakeFilters.compile(f, dtOf).get)
     val parser = new LakeDirValues(partitionCols, old.schema)
     val matched = allDirs(old).filter(LakeFilters.dirMatches(preds, parser))
@@ -1818,32 +1862,16 @@ object PartitionedLake {
       writerId: String = DefaultWriter): Unit = {
     val spark = df.sparkSession
     val fs = fsFor(spark, path)
-    val old = manifestOrMigrate(spark, fs, path, partitionCols.size)
-    // the same per-writer TRANSACTION guard as upsert/cdcSink: a
-    // redelivered streaming epoch (batchId <= the writer's recorded
-    // high-water mark) is skipped whole — what makes the DSv2
-    // streaming sink's append mode exactly-once under replay
-    if (batchId.exists(b =>
-        old.exists(_.txns.get(writerId).exists(_ >= b)))) return
-    if (old.isEmpty) requireBootstrapSafe(fs, path, partitionCols)
-    requireLayoutMatch(old, partitionCols, "append")
-    // same additive-evolution type gate as upsert: union-by-name at
-    // read never coerces, so a type change must refuse HERE
-    val schema = old match {
-      case Some(m) =>
-        val conflicts = df.schema.filter(f =>
-          m.schema.fieldNames.contains(f.name) &&
-            m.schema(f.name).dataType != f.dataType)
-        require(conflicts.isEmpty,
-          "type change is not supported (only additive evolution): " +
-            conflicts.map(f => s"${f.name}: lake has " +
-              s"${m.schema(f.name).dataType.simpleString}, append has " +
-              s"${f.dataType.simpleString}").mkString("; "))
-        refuseSuspectedRename(m.schema, df.schema, "append")
-        StructType(m.schema.fields ++ df.schema.fields.filterNot(f =>
-          m.schema.fieldNames.contains(f.name)))
-      case None => df.schema
+    // the replay guard ([[headFor]]) is what makes the DSv2 streaming
+    // sink's append mode exactly-once under replay
+    val old = headFor(spark, fs, path, partitionCols, batchId, writerId,
+      "append") match {
+      case Some(h) => h
+      case None => return
     }
+    if (old.isEmpty) requireBootstrapSafe(fs, path, partitionCols)
+    val schema =
+      old.fold(df.schema)(m => evolvedSchema(m.schema, df.schema, "append"))
     val (staging, staged) = stage(spark, fs, path, df, partitionCols,
       stickyStats(old, statsCols, df.schema.fieldNames.toSeq))
     commitStaged(fs, path, staging, staged, Set.empty, schema, old, batchId,
@@ -2461,15 +2489,6 @@ object PartitionedLake {
     }.reduce(_.unionByName(_))
   }
 
-  /** The snapshot a manifest describes, with merge-on-read deltas
-    * applied: partitions without deltas scan verbatim; for partitions
-    * with deltas, base rows whose `(partition tuple, key)` identity
-    * appears in the delta are superseded (anti-join) and the delta's 'U'
-    * post-images are unioned in. The anti-join shuffles only the DIRTY
-    * partitions' rows; with [[compact]] run routinely the delta side is
-    * small and AQE broadcasts it. Deletes never rewrite base files —
-    * that is the merge-on-read contract ([[cdcSinkMergeOnRead]]).
-    */
   /** Project `df` onto `schema`'s columns in order, padding columns it
     * lacks with typed nulls — the one null-padding alignment used by
     * additive evolution everywhere (upsert's union sides, change-feed
@@ -2520,6 +2539,11 @@ object PartitionedLake {
           s"not match the lake's (${existing.mkString(", ")})")
     }
 
+  /** A delta log row's schema: the snapshot's columns plus [[MorOpCol]]. */
+  private def logSchemaOf(m: Manifest): StructType =
+    StructType(m.schema.fields :+ StructField(MorOpCol,
+      org.apache.spark.sql.types.StringType))
+
   /** Scan of a manifest's merge-on-read delta sidecars, normalized to
     * the snapshot column order plus [[MorOpCol]] (partition values come
     * from the directory structure via basePath, exactly like data files).
@@ -2530,9 +2554,7 @@ object PartitionedLake {
       names.map(n => s"$path/$d/$n")
     }
     val outOrder = m.schema.fieldNames :+ MorOpCol
-    val fullSchema = StructType(m.schema.fields :+
-      org.apache.spark.sql.types.StructField(MorOpCol,
-        org.apache.spark.sql.types.StringType))
+    val fullSchema = logSchemaOf(m)
     if (deltaFiles.isEmpty)
       return spark.createDataFrame(new java.util.ArrayList[Row](), fullSchema)
     // the FULL schema (partition columns included), exactly like
@@ -2547,6 +2569,15 @@ object PartitionedLake {
       .select(outOrder.map(col).toIndexedSeq: _*)
   }
 
+  /** The snapshot a manifest describes, with merge-on-read deltas
+    * applied: partitions without deltas scan verbatim; for partitions
+    * with deltas, base rows whose `(partition tuple, key)` identity
+    * appears in the delta are superseded (anti-join) and the delta's 'U'
+    * post-images are unioned in. The anti-join shuffles only the DIRTY
+    * partitions' rows; with [[compact]] run routinely the delta side is
+    * small and AQE broadcasts it. Deletes never rewrite base files —
+    * that is the merge-on-read contract ([[cdcSinkMergeOnRead]]).
+    */
   private[io] def frameFor(spark: SparkSession, path: String,
       m: Manifest): DataFrame = {
     if (m.deltas.isEmpty)
@@ -4232,6 +4263,30 @@ object PartitionedLake {
       sys.error(s"no tag '$name' on $path (tags: " +
         s"${tags(spark, path).map(_._1).mkString(", ")})")))
 
+  /** The distinct partition tuples a batch touches: `frame`'s `cols`
+    * (the writer's partition columns, or the aliases they travel under)
+    * collected under the LAKE's partition-column types, not the frame's
+    * — [[dirsOf]] must render directory names exactly as the base data's
+    * were, and the [[partitionFilter]] literals must compare without
+    * implicit coercion. Metadata cardinality (partition count, not row
+    * count): the one sanctioned driver-side read of a batch, so `frame`
+    * should be the writer's pinned batch.
+    */
+  private def touchedParts(m: Manifest, partitionCols: Seq[String],
+      frame: DataFrame, cols: Seq[String]): Array[Seq[Any]] =
+    frame.select(cols.zip(partitionCols).map { case (a, c) =>
+        col(a).cast(m.schema(c).dataType) }: _*)
+      .distinct().collect().map(_.toSeq)
+
+  /** The directories of `parts` in `m`'s layout, as Spark's writer
+    * renders them ([[sparkDirsFor]]) — the replaced set of a commit that
+    * rewrites those partitions, emptied ones included.
+    */
+  private def dirsOf(spark: SparkSession, m: Manifest,
+      partitionCols: Seq[String], parts: Array[Seq[Any]]): Set[String] =
+    sparkDirsFor(spark, StructType(partitionCols.map(c => m.schema(c))),
+      parts)
+
   /** Partition-pruning filter over the collected partition values.
     * `isin` is null-hostile (NULL isin(...) is never true), so a delta
     * touching the null partition (__HIVE_DEFAULT_PARTITION__) needs an
@@ -4266,51 +4321,46 @@ object PartitionedLake {
     * key, everything else is kept — rewriting ONLY the partitions the
     * delta touches:
     *
-    *  1. the delta's distinct partition values are collected — this is
+    *  1. the delta is pinned once (`localCheckpoint`) and its distinct
+    *     partition values are collected off the pin ([[touchedParts]]) —
     *     metadata cardinality (partition count, not row count), the one
     *     sanctioned driver-side read;
-    *  2. the base is read with an `isin` filter on those values, so
-    *     partition pruning keeps every untouched directory's bytes
-    *     unread;
+    *  2. the base is read with a filter on those values, so partition
+    *     pruning keeps every untouched directory's bytes unread;
     *  3. surviving base rows (left anti on the key) union the delta and
     *     are committed through the snapshot protocol above — untouched
     *     partitions' manifest entries (and files) carry over verbatim.
     *
     * At 100 TB the rewrite cost scales with the delta's partition
-    * footprint, not the table size. No checkpoint/materialization is
-    * needed: the commit never overwrites a file the merge plan reads
-    * (new files land under fresh names; the old ones are only
-    * de-referenced), so the lazy plan is safe by construction.
+    * footprint, not the table size. The commit never overwrites a file
+    * the merge plan reads (new files land under fresh names; the old
+    * ones are only de-referenced), so the base side stays lazy.
     *
-    * CONTRACT: the delta frame must be DETERMINISTIC — it is evaluated
-    * more than once (partition collect, key anti-join, staged write),
-    * so a nondeterministic delta (a bare `limit` sample, `rand`) can
-    * anti-join one key set and union another, silently dropping or
-    * duplicating rows. Streaming `foreachBatch` frames satisfy this per
-    * epoch; ad-hoc callers must materialize nondeterministic inputs
-    * first. And a key's partition value must be stable (the usual case —
-    * the partition derives from the row's identity, e.g. event date).
-    * A delta that MOVES a key to a different partition upserts into the
-    * new partition but cannot retire the old partition's row — finding
-    * it would need a full-table key scan, which is exactly the cost
-    * manifest-based formats exist to avoid. Callers needing
+    * The delta is evaluated ONCE: it is pinned (`localCheckpoint`) and
+    * the partition collect, the key anti-join and the staged write all
+    * read the pin, so even a nondeterministic delta (a bare `limit`
+    * sample, `rand`) anti-joins the same key set it unions; the
+    * staged-vs-collected directory check below stays as the refusal of
+    * record. CONTRACT: a key's partition value must be stable (the usual
+    * case — the partition derives from the row's identity, e.g. event
+    * date). A delta that MOVES a key to a different partition upserts
+    * into the new partition but cannot retire the old partition's row —
+    * finding it would need a full-table key scan, which is exactly the
+    * cost manifest-based formats exist to avoid. Callers needing
     * cross-partition moves must delete from the old partition explicitly.
     *
     * `batchId` (pass the `foreachBatch` id) arms the TRANSACTION-level
-    * replay guard: the committed manifest records the highest id folded
-    * in, and a redelivered batch with `id <= recorded` is skipped whole
-    * — exactly-once even where the value-level merge would not be
-    * idempotent. Without it the key-merge idempotence is the (weaker,
-    * still spec-pinned) safety net.
+    * replay guard ([[headFor]]): the committed manifest records the
+    * highest id folded in, and a redelivered batch with `id <= recorded`
+    * is skipped whole — exactly-once even where the value-level merge
+    * would not be idempotent. Without it the key-merge idempotence is the
+    * (weaker, still spec-pinned) safety net.
     *
-    * Schema evolution is ADDITIVE: a delta may carry new columns (the
-    * whole lake surfaces them, nulls for untouched rows — parquet's
-    * by-name reads make old files null there for free) or omit base
-    * columns (nulls); a column present in both sides must keep its
-    * type. Old snapshots time-travel under their own schema. A delta
-    * that LOOKS like a rename (omits a column AND adds one of the same
-    * type) refuses loudly — see [[refuseSuspectedRename]] for why and
-    * for the explicit-null escape hatch.
+    * Schema evolution is ADDITIVE ([[evolvedSchema]]): a delta may carry
+    * new columns (the whole lake surfaces them, nulls for untouched
+    * rows) or omit base columns (nulls); a column present in both sides
+    * must keep its type. Old snapshots time-travel under their own
+    * schema. A delta that LOOKS like a rename refuses loudly.
     */
   def upsert(spark: SparkSession, path: String, partitionCol: String,
       keyCol: String, delta: DataFrame, statsCols: Seq[String] = Nil,
@@ -4328,11 +4378,14 @@ object PartitionedLake {
       keyCol: String, delta: DataFrame, statsCols: Seq[String],
       batchId: Option[Long], writerId: String): Unit = {
     val fs = fsFor(spark, path)
+    val head = headFor(spark, fs, path, partitionCols, batchId, writerId,
+      "upsert") match {
+      case Some(h) => h
+      case None => return
+    }
     // bootstrap: an absent lake is just the delta (lets the same call
-    // serve as a streaming foreachBatch sink from batch zero); an
-    // existing pre-protocol lake is adopted with a v1 manifest first
-    val existing = manifestOrMigrate(spark, fs, path, partitionCols.size)
-    if (existing.isEmpty) {
+    // serve as a streaming foreachBatch sink from batch zero)
+    if (head.isEmpty) {
       requireBootstrapSafe(fs, path, partitionCols)
       val (staging, staged) = stage(spark, fs, path, delta, partitionCols,
         statsCols)
@@ -4341,23 +4394,14 @@ object PartitionedLake {
         bootstrapLayout = Some(partitionCols))
       return
     }
-    // transaction-level replay guard: a redelivered micro-batch whose id
-    // this writer's manifest slot already records committed skips whole
-    if (batchId.exists(b =>
-        existing.flatMap(_.txns.get(writerId)).exists(_ >= b))) return
-    requireLayoutMatch(existing, partitionCols, "upsert")
-    // ONE evaluation of the caller's delta (round 19): the old plan
-    // evaluated it three times (partition collect, the anti-join key
-    // set, the union arm of the merged write) — each re-running the
-    // caller's derivation from its sources. A micro-batch delta is
-    // batch-bounded, so materialize it once; this also narrows the
-    // nondeterministic-delta window by construction (the sparkDirsFor
-    // backstop below stays as the refusal of record).
+    val m = head.get
+    val unionSchema = evolvedSchema(m.schema, delta.schema, "delta")
+    // ONE evaluation of the caller's delta: the partition collect, the
+    // anti-join key set and the union arm all read the pin
     val deltaM = delta.localCheckpoint()
-    val parts = deltaM.select(partitionCols.map(col): _*).distinct()
-      .collect().map(_.toSeq)
+    val parts = touchedParts(m, partitionCols, deltaM, partitionCols)
     if (parts.isEmpty) return
-    val base = frameFor(spark, path, existing.get)
+    val base = frameFor(spark, path, m)
       .filter(partitionFilter(partitionCols, parts))
     // null-safe on the partition columns (the identity's partition half
     // may legitimately be the null partition); keys are assumed non-null
@@ -4366,44 +4410,20 @@ object PartitionedLake {
     val joinCond = partitionCols.zipWithIndex.map { case (c, i) =>
       col(c) <=> col(s"__dp$i") }.reduce(_ && _) &&
       col(keyCol) === col("__dk")
-    // additive schema evolution: a delta may CARRY NEW COLUMNS (base
-    // rows take null for them — parquet's by-name reads give old files
-    // null there too, so the whole lake surfaces the widened schema)
-    // and may OMIT base columns (nulls). A column present in both MUST
-    // keep its type — checked here, not left to union analysis, because
-    // union quietly COERCES (long+double -> double) and the widened
-    // manifest schema would then fail against untouched partitions'
-    // old files at read time, poisoning the lake.
-    val conflicts = delta.schema.filter(f => base.columns.contains(f.name))
-      .filter(f => base.schema(f.name).dataType != f.dataType)
-    require(conflicts.isEmpty,
-      "type change is not supported (only additive evolution): " +
-        conflicts.map(f => s"${f.name}: lake has " +
-          s"${base.schema(f.name).dataType.simpleString}, delta has " +
-          s"${f.dataType.simpleString}").mkString("; "))
-    refuseSuspectedRename(base.schema, delta.schema, "delta")
-    // the widened schema: base's columns (base types) then the delta's
-    // new columns (delta types) — the type-conflict require above makes
-    // the owning-side choice unambiguous
-    val unionSchema = StructType(
-      base.schema.fields ++
-        delta.schema.fields.filterNot(f => base.columns.contains(f.name)))
     val merged = alignTo(base.join(dk, joinCond, "left_anti"), unionSchema)
       .unionByName(alignTo(deltaM, unionSchema))
     val (staging, staged) = stage(spark, fs, path, merged, partitionCols,
-      stickyStats(existing, statsCols, unionSchema.fieldNames.toSeq))
+      stickyStats(head, statsCols, unionSchema.fieldNames.toSeq))
     // every touched tuple has >= 1 delta row and the merge keeps all
     // delta rows, so the staged directory set must equal the collected
-    // tuples' Spark-rendered names. sparkDirsFor re-renders the COLLECTED
-    // tuples independently of the staged evaluation, which is the
+    // tuples' Spark-rendered names. The render works off the COLLECTED
+    // tuples, independently of the staged evaluation, which is the
     // backstop for the deterministic-delta contract above: a delta that
     // evaluated to different partitions between the collect and the
     // staged write diverges here and the commit REFUSES — without this,
     // such a delta would silently de-reference a partition it never
     // merged (data loss), not just mis-merge.
-    val partSchema = StructType(
-      partitionCols.map(c => delta.schema(c)).toArray)
-    val replaced = sparkDirsFor(spark, partSchema, parts)
+    val replaced = dirsOf(spark, m, partitionCols, parts)
     if (staged.keySet != replaced) {
       fs.delete(staging, true)
       sys.error("delta evaluated nondeterministically between the " +
@@ -4413,7 +4433,7 @@ object PartitionedLake {
         "first (see the upsert determinism contract); refusing to commit")
     }
     commitStaged(fs, path, staging, staged, replaced, merged.schema,
-      existing, batchId, writerId = writerId)
+      head, batchId, writerId = writerId)
   }
 
   /** Exactly-once streaming CDC sink: fold one micro-batch of a CDC op
@@ -4422,12 +4442,14 @@ object PartitionedLake {
     *
     * `ops` carries [[graft.operators.RelationalOps.cdcApply]]'s columns
     * (`k`, `seq`, `op`, `val`) plus the key's `partitionCol` value. Per
-    * batch: prune the base to the touched partitions (same metadata-only
-    * driver read as [[upsert]]), fold the ops latest-wins per COMPOSITE
-    * identity `(partitionCol, k)` — the same identity as [[upsert]];
-    * 'D' drops, 'U' overwrites, ops on absent identities are ignored —
-    * and commit the corrected slice through the snapshot protocol; the
-    * manifest rename makes the whole batch visible atomically.
+    * batch: fold the ops latest-wins per COMPOSITE identity
+    * `(partitionCol, k)` — the same identity as [[upsert]] — and pin the
+    * fold, so the batch is scanned once; prune the base to the touched
+    * partitions (the same metadata-only driver read as [[upsert]], off
+    * the pin); apply the fold — 'D' drops, 'U' overwrites, ops on absent
+    * identities are ignored — and commit the corrected slice through the
+    * snapshot protocol; the manifest rename makes the whole batch visible
+    * atomically.
     *
     * NOT [[upsert]], deliberately: upsert's key-anti-join MERGE can only
     * add or replace rows, so a delete op could never retire its row — a
@@ -4453,14 +4475,15 @@ object PartitionedLake {
     cdcSink(spark, path, Seq(partitionCol), keyCol, valueCol, ops, batchId,
       writerId)
 
-  /** Multi-level variant: ops declare every partition column; identity is
-    * `(partitionCols..., k)`.
-    */
+  /** The columns a folded op frame carries its partition values under. */
+  private def opAliases(partitionCols: Seq[String]): Seq[String] =
+    partitionCols.indices.map(i => s"__cdc_p$i")
+
   /** `ops` folded latest-wins per (declared partition tuple, key):
     * columns `__cdc_p0..`, `__cdc_k`, `__cdc_op`, `__cdc_val`.
     */
   private def latestOps(ops: DataFrame, partitionCols: Seq[String]): DataFrame = {
-    val pAliases = partitionCols.indices.map(i => s"__cdc_p$i")
+    val pAliases = opAliases(partitionCols)
     ops
       .select(partitionCols.zip(pAliases).map { case (c, a) =>
         col(c).as(a) } ++ Seq(col("k").as("__cdc_k"),
@@ -4477,8 +4500,8 @@ object PartitionedLake {
     * type: the fold's when(U, val).otherwise(col) would otherwise
     * COERCE (long + double -> double) and the widened snapshot schema
     * would fail against untouched partitions' old files at read time —
-    * the same lake-poisoning failure [[upsert]]'s type-change guard
-    * refuses, applied to both CDC sinks.
+    * the same lake-poisoning failure [[evolvedSchema]] refuses, applied
+    * to both CDC sinks.
     */
   private def requireValType(m: Manifest, valueCol: String,
       ops: DataFrame): Unit = {
@@ -4491,52 +4514,44 @@ object PartitionedLake {
         "out from under untouched partitions' files)")
   }
 
+  /** The join of lake rows to the folded op naming their identity —
+    * null-safe on the partition half.
+    */
+  private def foldCond(partitionCols: Seq[String], keyCol: String): Column =
+    partitionCols.zip(opAliases(partitionCols)).map { case (c, a) =>
+      col(c) <=> col(a) }.reduce(_ && _) && col(keyCol) === col("__cdc_k")
+
   /** Apply a folded op set to the current rows: 'D' drops the identity's
     * row, 'U' overwrites `valueCol`, ops on absent identities are
-    * ignored. Identity is null-safe on the partition half.
+    * ignored.
     */
   private def applyFold(current: DataFrame, latest: DataFrame,
       partitionCols: Seq[String], keyCol: String,
-      valueCol: String): DataFrame = {
-    val pAliases = partitionCols.indices.map(i => s"__cdc_p$i")
-    val joinCond = partitionCols.zip(pAliases).map { case (c, a) =>
-      current(c) <=> latest(a) }.reduce(_ && _) &&
-      current(keyCol) === latest("__cdc_k")
+      valueCol: String): DataFrame =
     current
-      .join(latest, joinCond, "left")
+      .join(latest, foldCond(partitionCols, keyCol), "left")
       .filter(col("__cdc_op").isNull || col("__cdc_op") =!= "D")
       .withColumn(valueCol, org.apache.spark.sql.functions
         .when(col("__cdc_op") === "U", col("__cdc_val"))
         .otherwise(col(valueCol)))
-      .drop(pAliases ++ Seq("__cdc_k", "__cdc_op", "__cdc_val"): _*)
-  }
+      .drop(opAliases(partitionCols) ++ Seq("__cdc_k", "__cdc_op",
+        "__cdc_val"): _*)
 
+  /** Multi-level variant: ops declare every partition column; identity is
+    * `(partitionCols..., k)`.
+    */
   def cdcSink(spark: SparkSession, path: String, partitionCols: Seq[String],
       keyCol: String, valueCol: String, ops: DataFrame,
       batchId: Option[Long], writerId: String): Unit = {
     val fs = fsFor(spark, path)
     // absent lake: update/delete ops have nothing to apply to (cdcApply
-    // is update/delete-on-existing; q131's SCD-2 merge covers inserts);
-    // a pre-protocol lake is adopted with a v1 manifest first
-    val existing = manifestOrMigrate(spark, fs, path, partitionCols.size)
-    if (existing.isEmpty) return
-    // transaction-level replay guard (see [[upsert]]; keyed by writer)
-    if (batchId.exists(b =>
-        existing.flatMap(_.txns.get(writerId)).exists(_ >= b))) return
-    requireLayoutMatch(existing, partitionCols, "cdcSink")
-    requireValType(existing.get, valueCol, ops)
-    // partition values are collected under the LAKE's column types (not
-    // the op frame's): the probe write below must render directory names
-    // exactly as the base data did, and the isin/null-safe filter
-    // literals must compare without implicit coercion surprises
-    val partSchema = StructType(
-      partitionCols.map(c => existing.get.schema(c)).toArray)
-    val parts = ops.select(partitionCols.map(c =>
-        col(c).cast(existing.get.schema(c).dataType)): _*)
-      .distinct().collect().map(_.toSeq)
-    if (parts.isEmpty) return // empty micro-batch
-    val base = frameFor(spark, path, existing.get)
-      .filter(partitionFilter(partitionCols, parts))
+    // is update/delete-on-existing; q131's SCD-2 merge covers inserts)
+    val m = headFor(spark, fs, path, partitionCols, batchId, writerId,
+      "cdcSink") match {
+      case Some(Some(h)) => h
+      case _ => return
+    }
+    requireValType(m, valueCol, ops)
     // composite-identity fold — (partitions..., key), same identity as
     // [[upsert]]: latest op per identity wins, applied only to the row
     // in the op's DECLARED partition. The key-only
@@ -4545,20 +4560,27 @@ object PartitionedLake {
     // but a key reused across partitions must not cross-apply — the
     // LakeModelSpec random-op model caught exactly that: a delete
     // declared in one partition retiring the same key's row in another.
-    val latest = latestOps(ops, partitionCols)
+    // Pinned: the touched tuples and the fold read the batch once
+    // (latestOps keeps ≥1 row per (partition, key), so its tuple set
+    // equals the raw ops').
+    val latest = latestOps(ops, partitionCols).localCheckpoint()
+    val parts =
+      touchedParts(m, partitionCols, latest, opAliases(partitionCols))
+    if (parts.isEmpty) return // empty micro-batch
+    val base = frameFor(spark, path, m)
+      .filter(partitionFilter(partitionCols, parts))
     val corrected = applyFold(base, latest, partitionCols, keyCol, valueCol)
     val (staging, staged) = stage(spark, fs, path, corrected, partitionCols,
-      stickyStats(existing, Nil, corrected.schema.fieldNames.toSeq))
+      stickyStats(Some(m), Nil, corrected.schema.fieldNames.toSeq))
     // the fold can EMPTY a partition (all rows deleted), which stages
-    // nothing for its directory — the authoritative replaced set renders
-    // the touched tuples through Spark's own writer-path functions
-    // ([[sparkDirsFor]]), so even an emptied partition's manifest entry
-    // retires under Spark's own path rendering. Emptied directories stay on disk for
-    // pinned readers / time travel / change-feed pre-images until
-    // [[vacuum]].
-    val replaced = sparkDirsFor(spark, partSchema, parts)
-    commitStaged(fs, path, staging, staged, replaced,
-      corrected.schema, existing, batchId, writerId = writerId)
+    // nothing for its directory — the replaced set renders the touched
+    // tuples ([[dirsOf]]), so even an emptied partition's manifest entry
+    // retires under Spark's own path rendering. Emptied directories stay
+    // on disk for pinned readers / time travel / change-feed pre-images
+    // until [[vacuum]].
+    commitStaged(fs, path, staging, staged,
+      dirsOf(spark, m, partitionCols, parts), corrected.schema, Some(m),
+      batchId, writerId = writerId)
   }
 
   /** Merge-on-read CDC sink — the same fold semantics as [[cdcSink]]
@@ -4584,24 +4606,18 @@ object PartitionedLake {
     * file-ordering bookkeeping — a commit replaces the touched
     * partitions' logs atomically through the same manifest protocol.
     *
-    * The delta is SELF-CONTAINED per partition: folding a new batch
-    * reads the current merged view of the touched partitions (base ⊕
-    * old delta), applies the ops, and re-emits the whole (still small)
-    * per-partition log: identities ever touched stay in the log — 'U'
-    * with their latest post-image or 'D' — until compaction. Same
-    * replay/idempotence contracts as [[cdcSink]], including the
-    * `batchId` transaction guard.
-    *
-    * The log must stay broadcast-sized: both the fold and the merged
-    * read BROADCAST the accumulated per-partition log identities (the
-    * same bound that keeps the read-side anti-join cheap). This is
-    * ENFORCED, not advisory — every log-publishing commit runs the
-    * governor ([[MorLogMaxRowsKey]], default 10M rows/partition):
-    * an offending partition auto-compacts right after the commit, or
-    * the commit refuses loudly under
-    * `spark.graft.lake.morLog.onExceed=refuse`. A steady-state CDC
-    * writer that never schedules [[compact]] therefore degrades to
-    * periodic amortized compaction, never to an unbounded broadcast.
+    * Per batch: the latest-wins fold is pinned (the batch is scanned
+    * once); ONE partition-pruned pass over the touched merged view
+    * (base ⊕ old log) keeps the rows whose identity the batch names — a
+    * semi-join against a BROADCAST of the batch's identities, so the
+    * big side is never shuffled — and is pinned. The fold turns that
+    * pass into 'U' post-images, and each applied identity with no
+    * surviving row becomes a 'D' tombstone; ops on absent identities
+    * apply to nothing and log nothing. Those entries go to
+    * [[publishMorLog]], the log publish [[commitRowLevelDeltas]] shares:
+    * it carries the touched partitions' old-log entries the batch does
+    * not name, runs the log governor and commits. Same replay/idempotence
+    * contracts as [[cdcSink]], including the `batchId` transaction guard.
     */
   def cdcSinkMergeOnRead(spark: SparkSession, path: String,
       partitionCol: String, keyCol: String, valueCol: String,
@@ -4615,116 +4631,91 @@ object PartitionedLake {
       partitionCols: Seq[String], keyCol: String, valueCol: String,
       ops: DataFrame, batchId: Option[Long], writerId: String): Unit = {
     val fs = fsFor(spark, path)
-    val existing = manifestOrMigrate(spark, fs, path, partitionCols.size)
-    if (existing.isEmpty) return
-    val m = existing.get
+    val m = headFor(spark, fs, path, partitionCols, batchId, writerId,
+      "cdcSinkMergeOnRead") match {
+      case Some(Some(h)) => h
+      case _ => return
+    }
     require(m.mor.forall(_ == keyCol),
       s"this lake's merge-on-read deltas are keyed by '${m.mor.get}'; " +
         s"cannot fold ops keyed by '$keyCol'")
-    if (batchId.exists(b => m.txns.get(writerId).exists(_ >= b))) return
-    requireLayoutMatch(existing, partitionCols, "cdcSinkMergeOnRead")
     requireValType(m, valueCol, ops)
-    val partSchema = StructType(
-      partitionCols.map(c => m.schema(c)).toArray)
-    // ONE evaluation of the caller's op frame (round 19): `ops` is
-    // typically derived from source scans, and the old plan evaluated
-    // it ~4 times (partition collect, candIds, the applied probe, the
-    // fold) — each a full re-derivation. The latest-wins fold is
-    // batch-bounded (the same log-governed bound the broadcast below
-    // relies on), so materialize it once; every downstream frame —
-    // the partition tuples included (latestOps keeps ≥1 row per
-    // (partition, key), so its tuple set equals the raw ops') — reads
-    // the checkpoint.
-    val pAliases = partitionCols.indices.map(i => s"__cdc_p$i")
+    val pAliases = opAliases(partitionCols)
     val latest = latestOps(ops, partitionCols).localCheckpoint()
-    val parts = latest.select(pAliases.zip(partitionCols).map {
-        case (a, c) => col(a).cast(m.schema(c).dataType) }: _*)
-      .distinct().collect().map(_.toSeq)
+    val parts = touchedParts(m, partitionCols, latest, pAliases)
     if (parts.isEmpty) return
-    val touched = partitionFilter(partitionCols, parts)
-    // current merged view of the touched partitions: base ⊕ old delta —
-    // partition-pruned on both scans
-    val current = frameFor(spark, path, m).filter(touched)
     val ident = partitionCols :+ keyCol
-    // PLAN SHAPE, deliberately: the ONE pass over the touched
-    // partitions probes a BROADCAST of batch-bounded identities
-    // (op count + accumulated log size) — a narrow pass, no wide
-    // shuffle of the big side. An identity intersect/distinct over the
-    // touched rows would shuffle the whole touched footprint per batch —
-    // a term that grows with data size, not batch size (the sf1
-    // LakeBench batch: 15.7 s with the intersect form, 13.2 s with this
-    // one, and only this one's shuffle volume is batch-bounded).
-    //
-    // identities the new log must carry: everything the old log carried
-    // (scoped to touched partitions) plus ops that APPLIED (identity
-    // existed in the current view — 'U' on an absent key is ignored,
-    // matching cdcApply).
-    //
-    // Round 18: ONE data pass instead of three. A row of `current` can
-    // matter to the new log only if its identity is in the old log or
-    // in the op batch, so `pre` — current semi-joined against the
-    // broadcast of (oldIds ∪ opIds) — contains every row the previous
-    // three passes (appliedIds build, uRows build, and the uRows
-    // recompute under the tombstone anti-join) each re-derived from
-    // scratch. `pre` is then materialized via localCheckpoint: it is
-    // log-governed small (≤ |old log| + |batch| full rows — the same
-    // broadcast bound the read side already relies on), and every
-    // downstream frame (post-images, applied identities, tombstones)
-    // derives from the materialization instead of re-scanning data.
-    val oldIds = deltaScan(spark, path, m)
-      .filter(touched).select(ident.map(col).toIndexedSeq: _*)
     val opIds = latest.select((pAliases.zip(partitionCols).map {
-      case (a, c) => col(a).cast(m.schema(c).dataType).as(c) } :+
-      col("__cdc_k").as(keyCol)).toIndexedSeq: _*)
-    val candIds = oldIds.union(opIds)
-      .distinct().select(ident.map(c =>
-        col(c).as(s"__cand_$c")).toIndexedSeq: _*)
-    val pre = current
-      .join(broadcast(candIds),
-        ident.map(c => col(c) <=> col(s"__cand_$c")).reduce(_ && _),
-        "left_semi")
-      .localCheckpoint()
-    // which ops APPLIED: identity existed in the current view (renamed
-    // columns sidestep Spark's self-join ambiguity check)
-    val opIdsR = opIds.select(ident.map(c =>
-      col(c).as(s"__op_$c")).toIndexedSeq: _*)
-    val appliedIds = pre
-      .join(broadcast(opIdsR),
+      case (a, c) => col(a).cast(m.schema(c).dataType).as(s"__op_$c") } :+
+      col("__cdc_k").as(s"__op_$keyCol")).toIndexedSeq: _*)
+    // the ONE pass over the touched merged view (base ⊕ old log, both
+    // partition-pruned) probes a BROADCAST of the batch's identities: an
+    // identity intersect over the touched rows would shuffle the whole
+    // touched footprint per batch, a term that grows with data size,
+    // not batch size (an sf1 batch: 15.7 s intersect, 13.2 s broadcast)
+    val applied = frameFor(spark, path, m)
+      .filter(partitionFilter(partitionCols, parts))
+      .join(broadcast(opIds),
         ident.map(c => col(c) <=> col(s"__op_$c")).reduce(_ && _),
         "left_semi")
-      .select(ident.map(col).toIndexedSeq: _*)
-    val unionIds = oldIds.union(appliedIds).distinct()
-      .select(ident.map(c => col(c).as(s"__id_$c")).toIndexedSeq: _*)
-    // live post-images: every `pre` row's identity is in oldIds ∪
-    // (opIds ∩ current) = unionIds ∪ (oldIds ∩ current) ⊆ unionIds by
-    // construction, so folding `pre` IS the old "corrected ⋉ unionIds"
-    // — no second data pass, no semi-join needed
-    val uRows = applyFold(pre, latest, partitionCols, keyCol, valueCol)
-      .withColumn(MorOpCol, lit("U"))
-    // tombstones: union identities with no surviving row — computed
-    // small-vs-small (both sides are identity sets, not data)
-    val dIds = unionIds.join(
-      uRows.select(ident.map(c => col(c).as(s"__u_$c")).toIndexedSeq: _*),
-      ident.map(c => col(s"__id_$c") <=> col(s"__u_$c")).reduce(_ && _),
-      "left_anti")
-    val otherCols = m.schema.fieldNames
-      .filterNot(c => partitionCols.contains(c) || c == keyCol)
-    val dRows = dIds.select((partitionCols.map(c =>
-        col(s"__id_$c").as(c)) ++
-      Seq(col(s"__id_$keyCol").as(keyCol)) ++
-      otherCols.map(c => lit(null).cast(m.schema(c).dataType).as(c)) :+
-      lit("D").as(MorOpCol)).toIndexedSeq: _*)
-    val newLog = uRows
-      .select((m.schema.fieldNames :+ MorOpCol).map(col).toIndexedSeq: _*)
-      .unionByName(dRows)
-    val (logStaging, stagedLog) =
+      .localCheckpoint()
+    val postImages = applyFold(applied, latest, partitionCols, keyCol,
+      valueCol).withColumn(MorOpCol, lit("U"))
+    val tombstones = applied
+      .join(latest.filter(col("__cdc_op") === "D"),
+        foldCond(partitionCols, keyCol), "left_semi")
+      .select(ident.map(col).toIndexedSeq: _*).distinct()
+      .withColumn(MorOpCol, lit("D"))
+    publishMorLog(spark, fs, path, m, partitionCols, keyCol, parts,
+      postImages.unionByName(alignTo(tombstones, logSchemaOf(m))), batchId,
+      writerId)
+  }
+
+  /** Publish new merge-on-read log entries for the touched partitions
+    * `parts` — the ONE definition of what a partition's delta log holds,
+    * shared by [[cdcSinkMergeOnRead]] and [[commitRowLevelDeltas]].
+    * `entries` are full-schema rows plus [[MorOpCol]]: 'U' post-images
+    * and 'D' identity tombstones (other columns null). The log is
+    * SELF-CONTAINED per partition: each touched partition's new log is
+    * its new entries plus the old log's entries whose identity the new
+    * ones do not name (one anti-join over [[deltaScan]]), so an identity
+    * ever touched stays in the log — 'U' with its latest post-image or
+    * 'D' — until [[compact]].
+    *
+    * The staged log then passes the governor ([[morLogGovern]] — the
+    * staged counts ARE the post-commit accumulation, since every touched
+    * partition's whole log is staged) and commits through the standard
+    * protocol: base data files are NEVER rewritten, racing commits into a
+    * touched partition's log conflict via the dirSig check, time travel
+    * keeps the pre-image; offending partitions auto-compact after. A
+    * duplicate-identity refusal raised inside the staging job
+    * (`raise_error`, see [[MorDupIdentityTag]]) — nothing has committed
+    * then, and stage() removed its directory — is lifted out of Spark's
+    * job-abort layers to the top, keeping the job failure as its cause.
+    */
+  private def publishMorLog(spark: SparkSession, fs: FileSystem,
+      path: String, head: Manifest, partitionCols: Seq[String],
+      keyCol: String, parts: Array[Seq[Any]], entries: DataFrame,
+      batchId: Option[Long], writerId: String): Unit = {
+    val ident = partitionCols :+ keyCol
+    val carried = deltaScan(spark, path, head)
+      .filter(partitionFilter(partitionCols, parts))
+      .join(entries.select(ident.map(c =>
+        col(c).as(s"__f_$c")).toIndexedSeq: _*), ident.map(c =>
+        col(c) <=> col(s"__f_$c")).reduce(_ && _), "left_anti")
+    val newLog = entries.unionByName(carried)
+      .select((head.schema.fieldNames :+ MorOpCol).map(col).toIndexedSeq: _*)
+    val (logStaging, stagedLog) = try {
       stage(spark, fs, path, newLog, partitionCols, Nil)
+    } catch { case t: Throwable =>
+      morDupRefusal(t).foreach(msg => throw new IllegalStateException(msg, t))
+      throw t
+    }
     val autoCompact = morLogGovern(fs, path, logStaging, stagedLog)
-    val replacedDirs = sparkDirsFor(spark, partSchema, parts)
-    commitStaged(fs, path, logStaging, Map.empty, Set.empty,
-      m.schema, existing, batchId,
-      stagedDeltas = stagedLog, deltaStaging = Some(logStaging),
-      morKey = Some(keyCol), replacedDeltas = Some(replacedDirs),
+    commitStaged(fs, path, logStaging, Map.empty, Set.empty, head.schema,
+      Some(head), batchId, stagedDeltas = stagedLog,
+      deltaStaging = Some(logStaging), morKey = Some(keyCol),
+      replacedDeltas = Some(dirsOf(spark, head, partitionCols, parts)),
       writerId = writerId)
     if (autoCompact.nonEmpty)
       compactRestricted(spark, path, Nil, Some(autoCompact))
@@ -4740,19 +4731,19 @@ object PartitionedLake {
     *
     *  1. refuse AMBIGUITY — two different 'U' post-images for one
     *     `(partition, key)` identity (e.g. a MERGE inserting the same
-    *     key twice) cannot both be the row;
+    *     key twice) cannot both be the row; the refusal rides the
+    *     staging job in-plan and [[publishMorLog]] lifts it;
     *  2. re-unify split updates — for one identity, 'U' wins over 'D'
     *     (delete + insert of the same identity IS the update; a
     *     cross-partition move keeps both, in different partitions'
     *     logs);
-    *  3. carry the touched partitions' EXISTING log entries whose
-    *     identities the statement did not touch (the per-partition log
-    *     is self-contained — same contract as [[cdcSinkMergeOnRead]]'s
-    *     re-emit);
-    *  4. stage per-partition logs and commit through the standard
-    *     protocol: base data files are NEVER rewritten, racing commits
-    *     into a touched partition's deltas conflict via the dirSig
-    *     check, time travel keeps the pre-image.
+    *  3. refuse SILENT COLLAPSE — a post-image landing on an existing
+    *     identity the statement did not consume (see below);
+    *  4. hand the folded ops to [[publishMorLog]], the log publish
+    *     [[cdcSinkMergeOnRead]] shares: it carries the touched
+    *     partitions' old-log entries the statement did not touch, runs
+    *     the governor and commits — base data files are NEVER
+    *     rewritten.
     *
     * Every join below is op/log-sized (statement ops + the touched
     * partitions' accumulated logs) — never data-sized; the commit's
@@ -4768,15 +4759,12 @@ object PartitionedLake {
       uOpsHint: Option[Long] = None): Unit = {
     val fs = fsFor(spark, path)
     try {
-      val opSchema = StructType(pinned.schema.fields :+
-        org.apache.spark.sql.types.StructField(MorOpCol,
-          org.apache.spark.sql.types.StringType))
       // read ONLY the files committed attempts reported — never a
       // directory glob, which would also sweep up a zombie/speculative
       // attempt's leftover (duplicate ops would trip the one-row-per-
       // identity refusal on a correct statement; a truncated file would
       // fail the read)
-      val ops = spark.read.schema(opSchema).parquet(
+      val ops = spark.read.schema(logSchemaOf(pinned)).parquet(
         opsFiles.map(f => new Path(opsDir, f).toString): _*)
       val ident = partitionCols :+ keyCol
       // ZERO summary jobs on the SQL path (round 19; round 18 had one):
@@ -4795,12 +4783,8 @@ object PartitionedLake {
       val opsW = ops
         .withColumn("__u_cnt", count(when(col(MorOpCol) === "U", 1)).over(w))
         .withColumn("__d_cnt", count(when(col(MorOpCol) === "D", 1)).over(w))
-      val partSchema = StructType(
-        partitionCols.map(c => pinned.schema(c)).toArray)
-      val parts: Array[Seq[Any]] = partsHint.getOrElse(
-        ops.select(partitionCols.map(c =>
-            col(c).cast(pinned.schema(c).dataType)): _*)
-          .distinct().collect().map(_.toSeq))
+      val parts = partsHint.getOrElse(
+        touchedParts(pinned, partitionCols, ops, partitionCols))
       if (parts.isEmpty) return
       val suspects = suspectsHint.getOrElse(
         opsW.filter(col("__u_cnt") > 0 && col("__d_cnt") === 0)
@@ -4833,7 +4817,6 @@ object PartitionedLake {
         .filter(when(col(MorOpCol) === "U" && col("__u_cnt") > 1,
           raise_error(dupMsg)).otherwise(lit(true)))
         .drop("__u_cnt", "__d_cnt")
-      val touched = partitionFilter(partitionCols, parts)
       // refuse SILENT COLLAPSE: a post-image whose identity the
       // statement did not itself consume (no raw 'D' — i.e. not the
       // insert half of a split update on that identity) but which
@@ -4857,7 +4840,8 @@ object PartitionedLake {
         val suspR = opsW
           .filter(col(MorOpCol) === "U" && col("__d_cnt") === 0)
           .select(ident.map(c => col(c).as(s"__s_$c")).toIndexedSeq: _*)
-        val collided = frameFor(spark, path, pinned).filter(touched)
+        val collided = frameFor(spark, path, pinned)
+          .filter(partitionFilter(partitionCols, parts))
           .select(ident.map(col).toIndexedSeq: _*)
           .join(broadcast(suspR), ident.map(c =>
             col(c) <=> col(s"__s_$c")).reduce(_ && _), "left_semi")
@@ -4873,32 +4857,8 @@ object PartitionedLake {
             s"${graft.io.LakeDeltaRowLevel.CopyOnWrite} for multiset " +
             "semantics)")
       }
-      val foldedIds = folded.select(ident.map(c =>
-        col(c).as(s"__f_$c")).toIndexedSeq: _*)
-      val carried = deltaScan(spark, path, pinned).filter(touched)
-        .join(foldedIds, ident.map(c =>
-          col(c) <=> col(s"__f_$c")).reduce(_ && _), "left_anti")
-      val newLog = folded.unionByName(carried)
-        .select((pinned.schema.fieldNames :+ MorOpCol)
-          .map(col).toIndexedSeq: _*)
-      // the dup refusal fires INSIDE the staging job (raise_error above)
-      // — nothing has committed at that point, and stage() removed its
-      // directory; lift the directed message out of Spark's job-abort
-      // layers to the top, keeping the job failure as its cause
-      val (logStaging, stagedLog) = try {
-        stage(spark, fs, path, newLog, partitionCols, Nil)
-      } catch { case t: Throwable =>
-        morDupRefusal(t).foreach(msg => throw new IllegalStateException(msg, t))
-        throw t
-      }
-      val autoCompact = morLogGovern(fs, path, logStaging, stagedLog)
-      val replacedDeltas = sparkDirsFor(spark, partSchema, parts)
-      commitStaged(fs, path, logStaging, Map.empty, Set.empty,
-        pinned.schema, Some(pinned), None,
-        stagedDeltas = stagedLog, deltaStaging = Some(logStaging),
-        morKey = Some(keyCol), replacedDeltas = Some(replacedDeltas))
-      if (autoCompact.nonEmpty)
-        compactRestricted(spark, path, Nil, Some(autoCompact))
+      publishMorLog(spark, fs, path, pinned, partitionCols, keyCol, parts,
+        folded, None, DefaultWriter)
     } finally fs.delete(opsDir, true)
   }
 }
